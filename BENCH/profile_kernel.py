@@ -1,11 +1,16 @@
-"""Offline profiler for the phase-kernel (guide §1: measure first).
+"""Offline profiler for the sparse pyramid's two kernels (guide §1:
+measure first).
 
 Step 1 (spark): materialize the z10 heat pixels the bench's
-pyramid_full feeds into pyramid_phase_rendered, save to /tmp.
-Step 2 (pure python): run the REAL kernel (sparse._phase_kernel) over
-one simulated task's rows under cProfile, so the per-tile cost
-decomposes into md5 / encode / paint / loop overhead without Spark in
-the way.
+pyramid_full feeds into the content passes, save to /tmp.
+Step 2 (pure python): run the REAL kernels over one simulated task's
+rows under cProfile, one after the other:
+
+- the content kernel (sparse._phase_kernel): lexsort, content keys and
+  the in-task 2x2 shrink, one phase of levels;
+- the render kernel (sparse._render_kernel) over that phase's distinct
+  contents, so the per-image cost decomposes into md5 / encode / paint
+  / loop overhead without Spark in the way.
 
 Usage:
     python BENCH/profile_kernel.py extract   # once (writes /tmp/px_z10.parquet)
@@ -17,7 +22,6 @@ import pstats
 import sys
 import time
 
-import numpy as np
 import pandas as pd
 
 Z = 10
@@ -40,8 +44,25 @@ def extract():
     spark.stop()
 
 
+def _profiled(label: str, frames):
+    """Drain the kernel generator ``frames`` under cProfile; print the
+    top functions and return the frames."""
+    t0 = time.time()
+    pr = cProfile.Profile()
+    pr.enable()
+    out = list(frames)
+    pr.disable()
+    dt = time.time() - t0
+    print(f"{label}: {sum(len(f) for f in out)} out rows in {dt:.2f}s")
+    s = io.StringIO()
+    pstats.Stats(pr, stream=s).sort_stats("tottime").print_stats(20)
+    print(s.getvalue())
+    return out
+
+
 def profile(npart=64, part=0, phase_depth=5):
-    from gdal2mbtiles_spark.operators.sparse import _phase_kernel
+    from gdal2mbtiles_spark.operators.sparse import (_phase_kernel,
+                                                     _render_kernel)
     from gdal2mbtiles_spark.renderers import PngRenderer
 
     pdf = pd.read_parquet(OUT)
@@ -52,24 +73,18 @@ def profile(npart=64, part=0, phase_depth=5):
     key = (ax * 31 + ay) % npart
     sel = pdf[key == part].reset_index(drop=True)
     print(f"partition {part}/{npart}: {len(sel)} pixel rows")
-    renderer = PngRenderer(compression=1)
 
-    kernel_fn = _phase_kernel(top, bottom, renderer,
-                              emit_pixels=(bottom > 0))
-
-    t0 = time.time()
-    pr = cProfile.Profile()
-    pr.enable()
-    n_rows = 0
-    for chunk in kernel_fn(iter([sel])):
-        n_rows += len(chunk)
-    pr.disable()
-    dt = time.time() - t0
-    print(f"kernel: {n_rows} out rows in {dt:.2f}s")
-    s = io.StringIO()
-    ps = pstats.Stats(pr, stream=s).sort_stats("tottime")
-    ps.print_stats(30)
-    print(s.getvalue())
+    frames = _profiled("content kernel", _phase_kernel(
+        top, bottom, emit_pixels=(bottom > 0))(iter([sel])))
+    tiles = pd.concat(frames, ignore_index=True)
+    tiles = tiles[tiles["kind"] == 0]
+    # the render stage's groupBy(content) + collect_list(owner)
+    grouped = (tiles.groupby("content", sort=False)["owner"]
+               .apply(lambda s: s.to_numpy()).rename("owners")
+               .reset_index())
+    print(f"{len(tiles)} tiles, {len(grouped)} distinct contents")
+    _profiled("render kernel", _render_kernel(
+        PngRenderer(compression=1))(iter([grouped])))
 
 
 if __name__ == "__main__":

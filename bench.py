@@ -27,12 +27,6 @@ import time
 from pyspark.sql import functions as F
 
 from gdal2mbtiles_spark.session import get_spark
-from gdal2mbtiles_spark.grid import whole_world_raster_meta
-from gdal2mbtiles_spark.operators.burn import burn_points
-from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
-                                                  pyramid_tiles,
-                                                  render_images,
-                                                  union_levels)
 from gdal2mbtiles_spark.operators import dedup as D
 from gdal2mbtiles_spark.operators import similarity as S
 from gdal2mbtiles_spark.operators.spatial import (knn_join,
@@ -50,17 +44,34 @@ PAGES_N = int(os.environ.get("SPARK_GRAFT_PAGES_N", "2000000"))
 KNN_POINTS = 200_000
 KNN_QUERIES = 200
 
+_PROF = os.environ.get("SPARK_GRAFT_PROFILE")
+
+
+def _prof(tag: str, t0: float) -> float:
+    """Driver-wall profiler (SPARK_GRAFT_PROFILE=1 -> stderr, =path ->
+    append to file): one line per driver-blocking step, used to locate
+    the serial floor S."""
+    t1 = time.time()
+    if _PROF:
+        line = f"PROF {tag} {t1 - t0:.2f}"
+        if _PROF == "1":
+            print(line, file=sys.stderr, flush=True)
+        else:
+            with open(_PROF, "a") as fh:
+                fh.write(line + "\n")
+    return t1
+
 
 def bench_pyramid(spark, sf_dir: str):
-    """Headline: pages -> burn histogram -> sparse relational pyramid
-    -> fused paint+hash+encode -> dedup.  (The sparse path is
-    bit-identical to the buffer pipeline — tests/test_sparse.py — but
-    shuffles only ~40-byte pixel rows.)"""
+    """Headline: pages -> burn histogram -> sparse relational pyramid:
+    phased content passes (only ~40-byte pixel rows and few-dozen-byte
+    tile contents cross an exchange), then one render stage that
+    paints, MD5-hashes and PNG-encodes each distinct tile content once.
+    The images it returns are distinct by construction, and the path
+    is bit-identical to the buffer pipeline (tests/test_sparse.py)."""
     from gdal2mbtiles_spark.operators.burn import pixel_histogram
     from gdal2mbtiles_spark.operators.sparse import \
         sparse_pyramid_rendered
-
-    from gdal2mbtiles_spark.operators.sparse import _prof
 
     pages = with_geo(synth_pages(spark, PAGES_N), tile_z=BURN_Z)
     t0 = time.time()

@@ -7,16 +7,28 @@ whole pyramid can be derived relationally on a sparse pixel relation
 
     pixels(z, gx, gy, r, g, b, a)     -- global pixel coords, y-down
 
-with one pure-JVM aggregation per level:
+with one aggregation per level:
 
     parent(gx>>1, gy>>1).channel = (sum(children channel) + 2) >> 2
 
 (missing children contribute 0 = transparent, exactly the
-tms_align-embed semantics).  256x256 buffers are materialized only
-ONCE per level, in a fused kernel that paints, MD5-hashes, and
-PNG-encodes in a single pass — so tile payloads never cross an
-exchange at all: the only shuffles in the whole pyramid carry ~40-byte
-sparse pixel rows.
+tms_align-embed semantics).
+
+The pyramid runs in two parts:
+
+1. a **content pass** (``pyramid_phase_contents``): multi-level numpy
+   kernels shrink the sparse rows level by level and emit, per tile,
+   its owner (packed z, x, y) and its *content* — the tile's non-zero
+   pixels as a few dozen bytes, canonical so that equal canvases have
+   equal content.  Nothing is painted here;
+2. a **render stage** (``render_contents``): one ``groupBy(content)``
+   collects the owners of each distinct content, and one kernel
+   paints, MD5-hashes and PNG-encodes each distinct canvas exactly
+   once — the reference's one-render-per-distinct-hash ``seen`` memo
+   (storages.py:119-131), pyramid-wide.
+
+Tile payloads never cross an exchange; only the distinct payloads
+leave Python, and the images relation is distinct by construction.
 
 Equivalence to the generic buffer pipeline (operators.pyramid) is
 asserted in tests: identical tile ids and payloads level by level.
@@ -28,38 +40,16 @@ sketch, re-planned); the buffer pipeline remains for dense rasters
 from __future__ import annotations
 
 import hashlib
-import os
-import sys
-import time
-from typing import Dict, Iterator, Optional, Tuple
+from typing import Dict, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import signed_low64
 from ..grid import TILE_SIDE
-
-_PROF = os.environ.get("SPARK_GRAFT_PROFILE")
-
-
-def _prof(tag: str, t0: float) -> float:
-    """Driver-wall profiler (SPARK_GRAFT_PROFILE=1 -> stderr, =path ->
-    append to file): one line per driver-blocking step, used to locate
-    the serial floor S."""
-    t1 = time.time()
-    if _PROF:
-        line = f"PROF {tag} {t1 - t0:.2f}"
-        if _PROF == "1":
-            print(line, file=sys.stderr, flush=True)
-        else:
-            with open(_PROF, "a") as fh:
-                fh.write(line + "\n")
-    return t1
-
-
-PIXEL_SCHEMA = "z int, gx bigint, gy bigint, r int, g int, b int, a int"
 
 # --- md5 zero-prefix states (round 6) ---------------------------------------
 # The A1 contract hashes the FULL 256 KB canvas per unique tile, and the
@@ -88,43 +78,6 @@ def _md5_sparse(raw, first_row: int):
     h = _MD5_ZSTATES[first_row].copy()
     h.update(raw[first_row * _ROW_BYTES:])
     return h
-
-# canon broadcast cap: 128 MB of ~64 B rows (2M distinct images) is
-# cheap to torrent-broadcast and keeps tile payloads exchange-free;
-# beyond it the min_by single-shuffle fallback is the scale plan
-_CANON_BC_CAP = 128 * 1024 * 1024
-
-# Arrow input batch for PIXEL kernels: the session default (256 rows,
-# sized for 262KB tile buffers) hands a pixel kernel ~10KB frames —
-# a z12 task concatenates ~20k of them, measured 182->159s on the
-# phase pass when raised to 64k rows (~2.6MB of 40B pixel rows).
-_PIXEL_ARROW_BATCH = 65536
-_ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
-
-
-class _pixel_batch_conf:
-    """Scoped raise of the Arrow input batch size for the eager pixel
-    -kernel materializations inside this module; restores the session
-    default (which bounds TILE-buffer batches) on exit."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.old = self.spark.conf.get(_ARROW_BATCH_KEY, None)
-        self.spark.conf.set(_ARROW_BATCH_KEY, str(_PIXEL_ARROW_BATCH))
-
-    def __exit__(self, *exc):
-        if self.old is not None:
-            self.spark.conf.set(_ARROW_BATCH_KEY, self.old)
-        else:
-            # conf.get(key, None) is None when the session never set
-            # the key explicitly — unset, or the raised pixel batch
-            # size would leak onto 262KB tile-buffer kernels
-            self.spark.conf.unset(_ARROW_BATCH_KEY)
-        return False
-RENDERED_SCHEMA = ("z int, x bigint, y bigint, tile_id bigint, "
-                   "tile_hex string, tile_data binary")
 
 
 def heat_pixels(hist: DataFrame, z: int) -> DataFrame:
@@ -189,121 +142,30 @@ def sparse_levels(hist: DataFrame, z: int,
     return levels
 
 
-def render_sparse_level(pixels: DataFrame, z: int, renderer,
-                        parallelism: Optional[int] = None,
-                        out_chunk: int = 1024) -> DataFrame:
-    """Fused paint+hash+encode: sparse pixels -> rendered tiles.
-
-    Output: (z, x(TMS), y(TMS), tile_id, tile_hex, tile_data=encoded).
-    The canvas exists only inside the kernel; the MD5 is of the RAW
-    RGBA buffer (A1 contract) and tile_data is the encoded payload.
-
-    One hash repartition co-locates each tile's pixels, then a
-    partition-level ``mapInPandas`` groups tiles with one numpy
-    lexsort — NOT groupBy.applyInPandas, whose per-group pandas
-    DataFrame construction dominates when most groups are a handful
-    of rows (measured ~2 ms/tile of pure overhead on 340k tiles).
-    Per-task memory is bounded by the partition's SPARSE row count
-    (~40 bytes/row), never by materialized canvases: painted tiles
-    stream out in ``out_chunk``-row batches."""
-    n = 1 << z
-    keyed = pixels.withColumn("_tx", (F.col("gx") / TILE_SIDE)
-                              .cast("long")) \
-                  .withColumn("_ty", (F.col("gy") / TILE_SIDE)
-                              .cast("long"))
-    sc = pixels.sparkSession.sparkContext
-    p = parallelism or sc.defaultParallelism
-    keyed = keyed.repartition(p, "_tx", "_ty")
-
-    def paint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = (parts[0] if len(parts) == 1
-               else pd.concat(parts, ignore_index=True))
-        tx = pdf["_tx"].to_numpy(np.int64)
-        ty = pdf["_ty"].to_numpy(np.int64)
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        ch = [pdf[c].to_numpy().astype(np.uint8)
-              for c in ("r", "g", "b", "a")]
-        lx_all = (gx & 255).astype(np.uint8)
-        ly_all = (gy & 255).astype(np.uint8)
-        # (ly, lx) in the sort canonicalizes within-tile pixel order
-        # for the content-addressed cache (same scheme as the phase
-        # kernel; PLANS.md §9)
-        order = np.lexsort((lx_all, ly_all, ty, tx))
-        key = tx[order] * (np.int64(1) << 32) + ty[order]
-        _, starts = np.unique(key, return_index=True)
-        bounds = np.append(starts, len(key))
-
-        o_x: list = []
-        o_y: list = []
-        o_id: list = []
-        o_hex: list = []
-        o_data: list = []
-
-        def flush():
-            chunk = pd.DataFrame({
-                "z": np.full(len(o_x), z, dtype=np.int32),
-                "x": np.asarray(o_x, dtype=np.int64),
-                "y": np.asarray(o_y, dtype=np.int64),
-                "tile_id": np.asarray(o_id, dtype=np.int64),
-                "tile_hex": list(o_hex),
-                "tile_data": list(o_data)})
-            for lst in (o_x, o_y, o_id, o_hex, o_data):
-                lst.clear()
-            return chunk
-
-        canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-        cache: Dict[bytes, Tuple[int, str, bytes]] = {}
-        for i in range(len(starts)):
-            s, e = starts[i], bounds[i + 1]
-            idx = order[s:e]
-            t_x, t_y = int(tx[idx[0]]), int(ty[idx[0]])
-            lx = lx_all[idx]
-            ly = ly_all[idx]
-            ck = (lx.tobytes() + ly.tobytes()
-                  + b"".join(c[idx].tobytes() for c in ch))
-            hit = cache.get(ck)
-            if hit is None:
-                for c in range(4):
-                    canvas[ly, lx, c] = ch[c][idx]
-                # zero-copy flat view: md5 + encode read the canvas in
-                # place — canvas.tobytes() cost a 512 KB copy (read +
-                # write) per unique tile, pure memory traffic on the
-                # substrate-bandwidth-bound wide legs (PLANS.md §9/10)
-                raw = canvas.reshape(-1).data
-                # ly is (ly, lx)-sorted: resume md5 from the cached
-                # zero-prefix state; pass ly (dups allowed) as the
-                # lit hint — see pyramid_phase_rendered's kernel
-                hx = _md5_sparse(raw, int(ly[0])).hexdigest()
-                hit = (signed_low64(int(hx, 16)), hx,
-                       renderer.render(raw, lit_hint=ly))
-                canvas[ly, lx] = 0          # clear only lit pixels
-                if len(cache) >= 200_000:
-                    cache.clear()
-                cache[ck] = hit
-            o_x.append(t_x)
-            o_y.append(n - 1 - t_y)                  # TMS flip
-            o_id.append(hit[0])
-            o_hex.append(hit[1])
-            o_data.append(hit[2])
-            if len(o_x) >= out_chunk:
-                yield flush()
-        if o_x:
-            yield flush()
-
-    return keyed.mapInPandas(paint, schema=RENDERED_SCHEMA)
-
-
-# phased-kernel output: rendered tile rows (kind=0) union next-phase
+# phased-kernel output: tile content rows (kind=0) union next-phase
 # sparse pixel rows (kind=1) in one nullable schema
-PHASE_SCHEMA = ("kind int, z int, x bigint, y bigint, tile_id bigint, "
-                "tile_hex string, tile_data binary, "
+PHASE_SCHEMA = ("kind int, owner bigint, content binary, "
                 "gx bigint, gy bigint, r int, g int, b int, a int")
+CONTENT_SCHEMA = "owner bigint, content binary"
+# one row per distinct content: the image plus every tile showing it
+RENDERED_SCHEMA = ("tile_id bigint, tile_data binary, tile_hex string, "
+                   "owners array<bigint>")
 
 _KEY_SHIFT = np.int64(1) << 32
+# owner = z << 58 | x << 29 | y(TMS): lossless for every slippy level
+# z <= 29 (x, y < 2^29), and a primitive long keeps the owner lists
+# and their explode narrow
+_OWNER_Z_SHIFT = 58
+_OWNER_X_SHIFT = 29
+_OWNER_MASK = (1 << _OWNER_X_SHIFT) - 1
+MAX_OWNER_Z = 29
+# rendered tiles per output frame: bounds a render task's payload
+# memory, whatever the input batch size
+_OUT_CHUNK = 1024
+# levels <= _DRIVER_APEX finish on the driver: a level-L sparse
+# relation has at most (256*2^L)^2 rows regardless of input size
+# (<= 1.05M at L=2, ~40 MB)
+_DRIVER_APEX = 2
 
 
 def _null_ints(n: int, dtype) -> pd.arrays.IntegerArray:
@@ -313,18 +175,14 @@ def _null_ints(n: int, dtype) -> pd.arrays.IntegerArray:
                                   np.ones(n, dtype=bool))
 
 
-def _tile_chunk(o_z, o_x, o_y, o_id, o_hex, o_data) -> pd.DataFrame:
-    """kind=0 rows of PHASE_SCHEMA from per-column lists (pixel
-    columns all-null)."""
-    n = len(o_z)
+def _tile_chunk(owner: np.ndarray, content: np.ndarray) -> pd.DataFrame:
+    """kind=0 rows of PHASE_SCHEMA, one per tile (pixel columns
+    all-null)."""
+    n = len(owner)
     return pd.DataFrame({
         "kind": np.zeros(n, dtype=np.int32),
-        "z": np.asarray(o_z, dtype=np.int32),
-        "x": np.asarray(o_x, dtype=np.int64),
-        "y": np.asarray(o_y, dtype=np.int64),
-        "tile_id": np.asarray(o_id, dtype=np.int64),
-        "tile_hex": o_hex,
-        "tile_data": o_data,
+        "owner": owner.astype(np.int64),
+        "content": content,
         "gx": _null_ints(n, np.int64),
         "gy": _null_ints(n, np.int64),
         "r": _null_ints(n, np.int32),
@@ -337,15 +195,10 @@ def _pixel_chunk(gx: np.ndarray, gy: np.ndarray, ch) -> pd.DataFrame:
     """kind=1 rows of PHASE_SCHEMA straight from the shrunk sparse
     arrays (tile columns all-null) — no per-row Python loop."""
     m = len(gx)
-    none_obj = np.full(m, None, dtype=object)
     return pd.DataFrame({
         "kind": np.ones(m, dtype=np.int32),
-        "z": _null_ints(m, np.int32),
-        "x": _null_ints(m, np.int64),
-        "y": _null_ints(m, np.int64),
-        "tile_id": _null_ints(m, np.int64),
-        "tile_hex": none_obj,
-        "tile_data": none_obj,
+        "owner": _null_ints(m, np.int64),
+        "content": np.full(m, None, dtype=object),
         "gx": gx.astype(np.int64),
         "gy": gy.astype(np.int64),
         "r": ch[0].astype(np.int32),
@@ -370,52 +223,88 @@ def _shrink_sparse(gx, gy, ch):
     return uniq // _KEY_SHIFT, uniq % _KEY_SHIFT, out_ch
 
 
-def pyramid_phase_rendered(pixels: DataFrame, top: int, bottom: int,
-                           renderer, emit_pixels: bool,
-                           parallelism: Optional[int] = None,
-                           out_chunk: int = 1024) -> DataFrame:
-    """Render levels [top..bottom] in ONE kernel pass.
+def _tile_contents(gx, gy, ch, lvl: int):
+    """Owners and contents of every tile of one level's sparse arrays.
+
+    A tile exists when it holds any pixel row, all-zero rows included
+    (a faint pixel shrinks to (0,0,0,0) after a few levels but keeps
+    its tile).  Its content is lx‖ly‖r‖g‖b‖a (uint8 blocks) over the
+    tile's NON-ZERO pixels in (ly, lx) order: two tiles have equal
+    content exactly when their canvases are equal — with the zero
+    pixels in the key, two keys could paint one canvas and duplicate
+    its image row.  An all-zero tile has empty content (the blank
+    canvas).  Fully vectorized: the byte blocks of all tiles are
+    scattered into one buffer and sliced by an Arrow offsets array."""
+    tx, ty = gx >> 8, gy >> 8
+    lx = (gx & 255).astype(np.uint8)
+    ly = (gy & 255).astype(np.uint8)
+    order = np.lexsort((lx, ly, ty, tx))
+    key = (tx * _KEY_SHIFT + ty)[order]
+    head = np.ones(len(key), dtype=bool)
+    head[1:] = key[1:] != key[:-1]
+    tile_of = np.cumsum(head) - 1
+    heads = order[head]
+    n_tiles = len(heads)
+    owner = ((np.int64(lvl) << _OWNER_Z_SHIFT)
+             + (tx[heads] << _OWNER_X_SHIFT)
+             + ((np.int64(1) << lvl) - 1 - ty[heads]))   # TMS flip
+
+    lit = (ch[0] | ch[1] | ch[2] | ch[3])[order] != 0
+    o = order[lit]
+    t = tile_of[lit]
+    n = np.bincount(t, minlength=n_tiles)
+    end = np.cumsum(n)
+    start = end - n
+    base = 6 * start[t] + np.arange(len(o)) - start[t]
+    buf = np.empty(6 * len(o), dtype=np.uint8)
+    for i, col in enumerate((lx, ly, *ch)):
+        buf[base + i * n[t]] = col[o].astype(np.uint8)
+    offsets = np.zeros(n_tiles + 1, dtype=np.int64)
+    offsets[1:] = 6 * end
+    content = pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), n_tiles,
+        [None, pa.py_buffer(offsets), pa.py_buffer(buf)])
+    return owner, content.to_numpy(zero_copy_only=False)
+
+
+def pyramid_phase_contents(pixels: DataFrame, top: int, bottom: int,
+                           emit_pixels: bool) -> DataFrame:
+    """Tile contents of levels [top..bottom] in ONE kernel pass.
 
     Input: sparse pixels at level ``top``.  Partitioning by the
     level-``bottom`` ancestor tile guarantees all four children of any
     parent tile >= bottom are co-located, so the kernel can loop:
-    paint+hash+encode every tile of the current level, then 2x2-shrink
+    emit every tile's content at the current level, then 2x2-shrink
     the sparse rows in-task and recurse — one shuffle and one plan for
     ``top - bottom + 1`` levels instead of one per level (the per-level
     chain's serial Catalyst/scheduling cost dominated the 4-vs-16-core
     scaling gap).  With emit_pixels the kernel also outputs the
     level-(bottom-1) sparse rows that seed the next phase."""
-    n_top = 1 << top
     shift = 8 + (top - bottom)          # log2(TILE_SIDE) + level gap
     keyed = pixels.select(
         "gx", "gy", "r", "g", "b", "a",
         F.shiftright("gx", shift).alias("_ax"),
         F.shiftright("gy", shift).alias("_ay"))
     sc = pixels.sparkSession.sparkContext
-    # 4 partitions/core (round 6; was 2): a single wave (1/core) pays
-    # the full task-duration spread as wall time, and with the round-6
-    # kernel at ~6-8 s/task the spread is a bigger FRACTION of the
-    # task than it was at r05 task sizes — interleaved A/B at z10
-    # measured 64/128/256 partitions at 21.0/19.4/18.5 s; four waves
-    # keep the tail small while per-task fixed cost (one
-    # concat+lexsort) stays amortized over >=10k pixel rows/task at
-    # bench scale and above.  Never more partitions than distinct
-    # ancestor keys (4^bottom): the surplus partitions are provably
-    # empty and each still costs a task launch + python round trip
-    # (the apex-adjacent pass has only 64 keys).
-    p = parallelism or 4 * sc.defaultParallelism
+    # one partition per core: every Python task costs a fixed ~0.1 s of
+    # worker CPU (measured on a trivial mapInPandas, 4-core box), and
+    # the kernel is only a lexsort and a shrink per level, so a single
+    # wave has little task-duration spread to hide.
+    # Never more partitions than distinct ancestor keys (4^bottom): the
+    # surplus partitions are provably empty and each still costs a
+    # task launch + python round trip.
+    p = sc.defaultParallelism
     if bottom < 16:
         p = min(p, 4 ** bottom)
     keyed = keyed.repartition(p, "_ax", "_ay")
-    kernel = _phase_kernel(top, bottom, renderer, emit_pixels,
-                           out_chunk)
-    return keyed.mapInPandas(kernel, schema=PHASE_SCHEMA)
+    return keyed.mapInPandas(_phase_kernel(top, bottom, emit_pixels),
+                             schema=PHASE_SCHEMA)
 
 
-def _phase_kernel(top: int, bottom: int, renderer, emit_pixels: bool,
-                  out_chunk: int = 1024):
-    """Build the multi-level paint+hash+encode kernel closure (module
-    level so BENCH/profile_kernel.py profiles the REAL kernel)."""
+def _phase_kernel(top: int, bottom: int, emit_pixels: bool):
+    """Build the multi-level content kernel closure (module level so
+    BENCH/profile_kernel.py profiles the REAL kernel, and the driver
+    apex runs it in-process)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [b for b in batches if len(b)]
@@ -427,322 +316,169 @@ def _phase_kernel(top: int, bottom: int, renderer, emit_pixels: bool,
         gy = pdf["gy"].to_numpy(np.int64)
         ch = [pdf[c].to_numpy().astype(np.int64)
               for c in ("r", "g", "b", "a")]
-
-        # per-column accumulators (round 6: the per-tile dict building
-        # + row-wise _chunk re-read was ~10% of kernel W in the
-        # BENCH/profile_kernel.py decomposition)
-        o_z: list = []
-        o_x: list = []
-        o_y: list = []
-        o_id: list = []
-        o_hex: list = []
-        o_data: list = []
-        canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-        # content-addressed render cache: a burn's tiles average ~1-2
-        # sparse pixels, so payload-identical tiles are rampant; a
-        # hit skips paint+md5+encode — ~0.75 MB of memory traffic per
-        # tile, the SHARED resource that showed up as the
-        # mode-independent serial floor S at z12 (PLANS.md §9).  The
-        # sort below includes (ly, lx) so within-tile pixel order is
-        # canonical and duplicate content always builds the same key.
-        cache: Dict[bytes, Tuple[int, str, bytes]] = {}
         for lvl in range(top, bottom - 1, -1):
-            n = 1 << lvl
-            tx_all, ty_all = gx >> 8, gy >> 8
-            lx_all = (gx & 255).astype(np.uint8)
-            ly_all = (gy & 255).astype(np.uint8)
-            ch_u8 = [c.astype(np.uint8) for c in ch]
-            order = np.lexsort((lx_all, ly_all, ty_all, tx_all))
-            key = tx_all[order] * _KEY_SHIFT + ty_all[order]
-            _, starts = np.unique(key, return_index=True)
-            bounds = np.append(starts, len(key))
-            for i in range(len(starts)):
-                idx = order[starts[i]:bounds[i + 1]]
-                t_x, t_y = int(tx_all[idx[0]]), int(ty_all[idx[0]])
-                lx = lx_all[idx]
-                ly = ly_all[idx]
-                ck = (lx.tobytes() + ly.tobytes()
-                      + b"".join(c[idx].tobytes() for c in ch_u8))
-                hit = cache.get(ck)
-                if hit is None:
-                    for c in range(4):
-                        canvas[ly, lx, c] = ch_u8[c][idx]
-                    raw = canvas.reshape(-1).data   # zero-copy view
-                    # ly is (ly, lx)-sorted, so ly[0] is the first lit
-                    # row: md5 resumes from the cached zero-prefix
-                    # state (bit-identical digest, ~40% less hashing)
-                    hx = _md5_sparse(raw, int(ly[0])).hexdigest()
-                    # ly (sorted, possibly duplicated) is a valid
-                    # lit_hint — the encoder content-verifies rows, and
-                    # duplicate indices are idempotent; skipping the
-                    # per-tile np.unique saved ~3% kernel W
-                    hit = (signed_low64(int(hx, 16)), hx,
-                           renderer.render(raw, lit_hint=ly))
-                    canvas[ly, lx] = 0      # clear only lit pixels
-                    if len(cache) >= 200_000:
-                        cache.clear()       # bound task memory
-                    cache[ck] = hit
-                o_z.append(lvl)
-                o_x.append(t_x)
-                o_y.append(n - 1 - t_y)
-                o_id.append(hit[0])
-                o_hex.append(hit[1])
-                o_data.append(hit[2])
-                if len(o_z) >= out_chunk:
-                    yield _tile_chunk(o_z, o_x, o_y, o_id, o_hex,
-                                      o_data)
-                    o_z, o_x, o_y = [], [], []
-                    o_id, o_hex, o_data = [], [], []
+            yield _tile_chunk(*_tile_contents(gx, gy, ch, lvl))
             if lvl > bottom or emit_pixels:
                 gx, gy, ch = _shrink_sparse(gx, gy, ch)
-        if o_z:
-            yield _tile_chunk(o_z, o_x, o_y, o_id, o_hex, o_data)
-        if emit_pixels and len(gx):
-            # vectorized pixel emission: one frame straight from the
-            # shrunk arrays (bounded by the level-(bottom-1) relation)
+        if emit_pixels:
             yield _pixel_chunk(gx, gy, ch)
 
     return kernel
 
 
-def _render_apex_driver(spark: SparkSession, pixels: DataFrame,
-                        top: int, bottom: int, renderer) -> DataFrame:
-    """Render pyramid levels [top..bottom] locally on the driver.
+def _apex_contents(spark: SparkSession, pixels: DataFrame,
+                   top: int, bottom: int) -> DataFrame:
+    """Contents of pyramid levels [top..bottom], computed on the driver.
 
-    Only called for top <= 2, where the sparse relation is bounded by
-    (256*2^top)^2 rows whatever the input size — the distributed
-    version of these levels is all fixed overhead (tiny exchanges,
-    python-worker round trips) and no work."""
+    Only called for top <= _DRIVER_APEX, where the sparse relation is
+    bounded whatever the input size — the distributed version of these
+    levels is all fixed overhead (tiny exchanges, python-worker round
+    trips) and no work.  Runs the same kernel as the phases, in
+    process; the pandas frame goes through Arrow (one record batch,
+    one JVM scan task), not a pickled Python RDD."""
     pdf = pixels.select("gx", "gy", "r", "g", "b", "a").toPandas()
-    gx = pdf["gx"].to_numpy(np.int64)
-    gy = pdf["gy"].to_numpy(np.int64)
-    ch = [pdf[c].to_numpy().astype(np.int64)
-          for c in ("r", "g", "b", "a")]
-    rows = []
-    canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-    for lvl in range(top, bottom - 1, -1):
-        n = 1 << lvl
-        tx_all, ty_all = gx >> 8, gy >> 8
-        order = np.lexsort((ty_all, tx_all))
-        key = tx_all[order] * (np.int64(1) << 32) + ty_all[order]
-        _, starts = np.unique(key, return_index=True)
-        bounds = np.append(starts, len(key))
-        for i in range(len(starts)):
-            idx = order[starts[i]:bounds[i + 1]]
-            t_x, t_y = int(tx_all[idx[0]]), int(ty_all[idx[0]])
-            lx = gx[idx] - (t_x << 8)
-            ly = gy[idx] - (t_y << 8)
-            canvas[:] = 0
-            for c in range(4):
-                canvas[ly, lx, c] = ch[c][idx].astype(np.uint8)
-            raw = canvas.reshape(-1).data           # zero-copy view
-            hx = hashlib.md5(raw).hexdigest()
-            rows.append((lvl, t_x, n - 1 - t_y,
-                         signed_low64(int(hx, 16)), hx,
-                         bytes(renderer.render(
-                             raw, lit_hint=np.unique(ly)))))
-        if lvl > bottom:
-            gx, gy, ch = _shrink_sparse(gx, gy, ch)
-    # Arrow path (round 6): createDataFrame(list) plans a Python RDD
-    # whose evaluation launches one pickle-deserializing Python worker
-    # per default-parallelism slice — measured 32 near-idle tasks /
-    # ~1.7 s of wall for ~21 apex rows, surfacing inside whatever job
-    # first materializes the lazy apex union (the canon build).  A
-    # pandas frame with exact dtypes goes through Arrow: the driver
-    # serializes one record batch and the scan is a single JVM task.
-    apex_pdf = pd.DataFrame({
-        "z": np.array([r[0] for r in rows], dtype=np.int32),
-        "x": np.array([r[1] for r in rows], dtype=np.int64),
-        "y": np.array([r[2] for r in rows], dtype=np.int64),
-        "tile_id": np.array([r[3] for r in rows], dtype=np.int64),
-        "tile_hex": [r[4] for r in rows],
-        "tile_data": [r[5] for r in rows]})
-    return spark.createDataFrame(apex_pdf, schema=RENDERED_SCHEMA)
+    frames = list(_phase_kernel(top, bottom, emit_pixels=False)(
+        iter([pdf])))
+    if frames:
+        out = pd.concat(frames, ignore_index=True)[["owner", "content"]]
+    else:
+        out = pd.DataFrame({"owner": np.zeros(0, np.int64),
+                            "content": np.zeros(0, object)})
+    return spark.createDataFrame(out, schema=CONTENT_SCHEMA)
+
+
+def _render_content(content: bytes, canvas: np.ndarray,
+                    renderer) -> Tuple[int, str, bytes]:
+    """Paint, MD5-hash and encode one tile content: the only place the
+    sparse pyramid materializes a canvas.
+
+    ``canvas`` is an all-zero (256, 256, 4) uint8 scratch buffer and is
+    left all-zero on return.  The MD5 is of the RAW RGBA buffer (A1
+    contract); the returned bytes are the encoded payload."""
+    px = np.frombuffer(content, dtype=np.uint8).reshape(6, -1)
+    lx, ly = px[0], px[1]
+    canvas[ly, lx] = px[2:].T
+    raw = canvas.reshape(-1).data           # zero-copy view
+    # content is (ly, lx)-sorted, so ly[0] is the first lit row: md5
+    # resumes from the cached zero-prefix state (bit-identical digest);
+    # the blank canvas resumes after all TILE_SIDE zero rows
+    hx = _md5_sparse(raw, int(ly[0]) if len(ly) else TILE_SIDE
+                     ).hexdigest()
+    # ly (sorted, possibly duplicated) is a valid lit_hint — the
+    # encoder content-verifies rows, so its bytes are a pure function
+    # of the pixels
+    data = renderer.render(raw, lit_hint=ly)
+    canvas[ly, lx] = 0                      # clear only lit pixels
+    return signed_low64(int(hx, 16)), hx, data
+
+
+def _render_kernel(renderer):
+    """mapInPandas body of the render stage: (content, owners) rows ->
+    RENDERED_SCHEMA rows, streamed out in _OUT_CHUNK-row frames."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
+        for pdf in batches:
+            for s in range(0, len(pdf), _OUT_CHUNK):
+                part = pdf.iloc[s:s + _OUT_CHUNK]
+                out = [_render_content(ck, canvas, renderer)
+                       for ck in part["content"]]
+                yield pd.DataFrame({
+                    "tile_id": np.array([o[0] for o in out],
+                                        dtype=np.int64),
+                    "tile_data": [o[2] for o in out],
+                    "tile_hex": [o[1] for o in out],
+                    "owners": part["owners"].to_numpy()})
+
+    return kernel
+
+
+def render_contents(contents: DataFrame, renderer) -> DataFrame:
+    """Render stage: (owner, content) rows -> one RENDERED_SCHEMA row
+    per distinct content.
+
+    The explicit content-hash repartition both balances the render
+    load and fixes its parallelism (AQE would coalesce the few-MB
+    content exchange into one task); the groupBy reuses that
+    partitioning, so the only exchange carries content and owners.
+    One partition per core: hashing spreads distinct contents evenly,
+    and each extra Python task costs ~0.1 s of fixed worker CPU."""
+    p = contents.sparkSession.sparkContext.defaultParallelism
+    grouped = (contents.repartition(p, "content")
+               .groupBy("content")
+               .agg(F.collect_list("owner").alias("owners")))
+    return grouped.mapInPandas(_render_kernel(renderer),
+                               schema=RENDERED_SCHEMA)
 
 
 def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                             z: int, renderer,
                             min_resolution: int = 0,
                             phase_depth: int = 5,
-                            apex_level: int = 3,
-                            broadcast_canon: Optional[bool] = None
+                            apex_level: int = 3
                             ) -> Tuple[DataFrame, DataFrame]:
-    """Full fused pipeline: histogram -> phased multi-level kernels ->
-    per-level apex -> (images, map).
+    """Full pipeline: histogram -> phased content passes -> driver
+    apex -> render stage -> (images, map).
 
-    Levels above ``apex_level`` render in ceil(levels/phase_depth)
-    multi-level kernel passes (one shuffle + one plan per pass instead
-    of per level — the per-level chain's serial Catalyst/scheduling
-    cost dominated 4-vs-16-core scaling).  A pass keyed by its bottom
-    ancestor has 4^bottom groups; apex_level=3 keeps every pass at
-    >= 4^3 = 64 keys.  64 tasks is a parallelism floor, but the
-    levels below the last big pass hold a vanishing fraction of the
-    pixel relation (<= grid size, decaying 4x per level), so the
-    floor costs wall-time only on clusters far wider than the work
-    itself — while each fused pass replaces two render stages plus a
-    downsample shuffle of round 2's per-level apex chain (measured
-    ~15 s of small-stage scheduling at 16 cores, pure serial cost).
+    Levels at or above ``apex_level`` take ceil(levels/phase_depth)
+    multi-level content passes (one shuffle + one plan per pass
+    instead of per level).  A pass keyed by its bottom ancestor has
+    4^bottom groups; apex_level=3 keeps every pass at >= 4^3 = 64
+    keys.  The levels below ``apex_level`` (at most 0..2) finish ON
+    THE DRIVER: their sparse relation is O(1) in data scale, and the
+    local kernel replaces a chain of tiny stages' fixed scheduling
+    and exchange overhead.  apex_level must be <= 3.
 
-    The pyramid apex below ``driver_apex`` is finished ON THE DRIVER:
-    a level-L sparse relation has at most (256*2^L)^2 rows regardless
-    of input size (<= 1.05M at L=2, ~40 MB), so collecting it is O(1)
-    in data scale, and the local numpy render replaces ~6 tiny
-    stages' worth of fixed scheduling/exchange overhead — serial cost
-    that capped N-vs-4N scaling efficiency.
+    Every tile's content then meets in the render stage, which paints,
+    hashes and encodes each distinct content once and is materialized
+    once (eager local checkpoint), so neither output re-renders.
 
-    images: (tile_id, tile_data encoded, tile_hex), canonical row =
-    min (z, x, y) per hash (same order-free first-wins as
-    pyramid.dedup_tiles); map: (zoom_level, tile_column, tile_row,
-    tile_id).  Dup tiles cost one wasted encode each — the trade for
-    never shuffling payloads; use the buffer pipeline when the dup
-    ratio is high (constant oceans etc.).
-
-    broadcast_canon=None (default) mirrors dedup_tiles' estimate-then-
-    choose: a narrow distinct-id count (over already-checkpointed
-    blocks — cheap) sizes the canon relation against
-    spark.sql.autoBroadcastJoinThreshold; the payload-shuffle-free
-    broadcast plan is used only when canon fits, otherwise a min_by
-    aggregate (payloads shuffle once, but nothing is collected to the
-    driver — the plan that survives a 100x distinct-image count).
-    Pass True/False to force a path and skip the counting pass."""
+    images: (tile_id, tile_data encoded, tile_hex), one row per
+    distinct canvas; map: (zoom_level, tile_column, tile_row,
+    tile_id), one row per tile."""
+    if apex_level > _DRIVER_APEX + 1:
+        raise ValueError(f"apex_level {apex_level} must be <= "
+                         f"{_DRIVER_APEX + 1}")
+    if z > MAX_OWNER_Z:
+        raise ValueError(f"z {z} exceeds the packed-owner limit "
+                         f"{MAX_OWNER_Z}")
     pixels = heat_pixels(hist, z)
     apex_top = min(max(apex_level - 1, min_resolution - 1), z)
-    if z <= apex_top:
-        # no phased passes: the per-level apex chain fans multiple
-        # consumers off the native relation — materialize it once
-        pixels = pixels.localCheckpoint(eager=True)
-    rendered_parts = []
+    contents = []
     top = z
-    t_prof = time.time()
     while top > apex_top:
         bottom = max(min_resolution, apex_top + 1,
                      top - phase_depth + 1)
         emit = bottom > min_resolution
-        out = pyramid_phase_rendered(pixels, top, bottom, renderer,
+        out = pyramid_phase_contents(pixels, top, bottom,
                                      emit_pixels=emit)
-        # one materialization feeds the rendered union and (when
-        # pixels are emitted) the next pass/apex seed.  The final
-        # phase (emit=False, bottom == min_resolution) needs it just
-        # as much: un-checkpointed, the fused paint+hash+encode
-        # kernel re-executes for every downstream consumer (canon
-        # build, images join, the caller's map action)
-        with _pixel_batch_conf(spark):
-            out = out.localCheckpoint(eager=True)
-        t_prof = _prof(f"phase_ckpt[{top}..{bottom}]", t_prof)
         if emit:
+            # two consumers (the next pass and the render stage): one
+            # materialization.  The last pass feeds only the render
+            # stage, whose eager checkpoint runs it exactly once.
+            out = out.localCheckpoint(eager=True)
             pixels = out.where(F.col("kind") == 1).select(
-                F.lit(bottom - 1).cast("int").alias("z"),
                 "gx", "gy", "r", "g", "b", "a")
-        rendered_parts.append(out.where(F.col("kind") == 0).select(
-            "z", "x", "y", "tile_id", "tile_hex", "tile_data"))
+        contents.append(out.where(F.col("kind") == 0).select(
+            "owner", "content"))
         top = bottom - 1
+    if top >= min_resolution:
+        contents.append(_apex_contents(spark, pixels, top,
+                                       min_resolution))
 
-    # materialize the apex seed as NARROW pixel rows once: the phase
-    # checkpoint carries the fat tile_data column, and each per-level
-    # branch below would rescan it otherwise.  When min_resolution
-    # cuts the pyramid above the apex (top < min_resolution) no apex
-    # level renders — skip the seed, which would be a full
-    # materialization job whose result nothing reads.  Likewise when
-    # NO distributed apex level remains (top <= driver_apex): the
-    # driver apex's toPandas is then the seed's only consumer, so the
-    # checkpoint is a pure extra materialization job — let toPandas
-    # scan the phase-checkpoint filter directly (round 6, ~0.3-0.5 s).
-    driver_apex = 2          # <= (256*2^2)^2 = 1.05M rows, any scale
-    if (top >= min_resolution and top != z
-            and top > driver_apex):
-        cur = pixels.localCheckpoint(eager=True)
-    else:
-        cur = pixels
-    t_prof = _prof("apex_seed_ckpt", t_prof)
-    apex_parts = []
-    lvl = top
-    while lvl >= min_resolution and lvl > driver_apex:
-        apex_parts.append(render_sparse_level(cur, lvl, renderer))
-        if lvl > min_resolution:
-            cur = downsample_pixels(cur)
-        lvl -= 1
-    if lvl >= min_resolution:
-        apex_parts.append(_render_apex_driver(
-            spark, cur, lvl, min_resolution, renderer))
-    if apex_parts:
-        # the phased parts above are filters over eager checkpoints —
-        # rescanning them per consumer is cheap block reads; only the
-        # apex renders are fresh compute, so checkpoint just their
-        # small union instead of duplicating the full rendered
-        # relation's blocks (the old full-union checkpoint re-wrote
-        # ~1.2 GB of already-checkpointed tiles at z10)
-        apex = apex_parts[0]
-        for part in apex_parts[1:]:
-            apex = apex.unionByName(part)
-        rendered_parts.append(apex.localCheckpoint(eager=False))
-    t_prof = _prof("apex_parts_built", t_prof)
+    union = contents[0]
+    for part in contents[1:]:
+        union = union.unionByName(part)
+    rendered = render_contents(union, renderer).localCheckpoint(eager=True)
 
-    rendered = rendered_parts[0]
-    for part in rendered_parts[1:]:
-        rendered = rendered.unionByName(part)
-
-    map_df = rendered.select(
-        F.col("z").alias("zoom_level"),
-        F.col("x").alias("tile_column"),
-        F.col("y").alias("tile_row"), "tile_id")
-
-    canon = None
-    # canonical key: min (z, x, y) per hash.  For any slippy pyramid
-    # z <= 29 and x, y < 2^z <= 2^29, so the triple packs losslessly
-    # into one BIGINT with z in the high bits — min(packed) selects
-    # the exact same lexicographic-min row as min(struct(z, x, y)),
-    # but the agg runs as a HashAggregate on a primitive long instead
-    # of a SortAggregate on a struct buffer (round 6: the struct min
-    # forced a sort of the full tiles relation on both sides of the
-    # canon exchange — measured canon_build 6.2 -> ~2 s at z10).
-    use_packed = z <= 29
-    _pk = (F.col("z").cast("long") * F.lit(np.int64(1) << 58)
-           + F.col("x") * F.lit(np.int64(1) << 29) + F.col("y"))
-    if broadcast_canon is None or broadcast_canon:
-        # the canonical-owner relation, built NARROWLY: only
-        # (tile_id, packed_key) rows (~16 B) cross the agg shuffle,
-        # and the eager checkpoint (a few MB per million distinct
-        # images) both materializes the lazy apex union for every
-        # downstream consumer and makes the broadcast-decision count
-        # free.  Round-5 change (serial-floor work): the decision was
-        # previously a total-row-count UPPER bound, which at z12
-        # (4.42M rows, 1.58M distinct) wrongly forced the min_by
-        # fallback whose ~2 GB payload shuffle cost a measured
-        # ~28 s that does NOT scale with cores (shared-disk bound) —
-        # the second-largest term of the serial floor S.  The exact
-        # distinct count keeps payloads exchange-free well past the
-        # old cutoff; _CANON_BC_CAP bounds the broadcast at 128 MB
-        # (torrent-distributed, tiny rows), and truly huge pyramids
-        # still fall back to the one-shuffle min_by plan.
-        ckey = _pk.alias("_c") if use_packed \
-            else F.struct("z", "x", "y").alias("_c")
-        canon = (rendered.select("tile_id", ckey)
-                 .groupBy("tile_id")
-                 .agg(F.min("_c").alias("_c"))
-                 .select(F.col("tile_id").alias("_ctid"), "_c")
-                 .localCheckpoint(eager=True))
-        t_prof = _prof("canon_build_ckpt", t_prof)
-    if broadcast_canon is None:
-        from .pyramid import _CANON_ROW_BYTES
-        n_canon = canon.count()
-        t_prof = _prof("canon_count", t_prof)
-        broadcast_canon = (n_canon * _CANON_ROW_BYTES
-                           < _CANON_BC_CAP)
-
-    if broadcast_canon:
-        jkey = _pk if use_packed else F.struct("z", "x", "y")
-        images = (rendered.join(
-            F.broadcast(canon),
-            (F.col("tile_id") == F.col("_ctid"))
-            & (jkey == F.col("_c")), "inner")
-            .select("tile_id", "tile_data", "tile_hex"))
-    else:
-        # distinct-image relation too big even for _CANON_BC_CAP:
-        # pick the canonical payload in ONE hash aggregate.  Payloads
-        # (already encoded, ~KB) cross an exchange once; no driver
-        # collect, no broadcast — bounded at any distinct-image count.
-        images = (rendered.groupBy("tile_id")
-                  .agg(F.min_by("tile_data", F.struct("z", "x", "y"))
-                       .alias("tile_data"),
-                       F.min("tile_hex").alias("tile_hex")))
+    images = rendered.select("tile_id", "tile_data", "tile_hex")
+    owner = F.col("_o")
+    map_df = rendered.select(F.explode("owners").alias("_o"),
+                             "tile_id").select(
+        F.shiftright(owner, _OWNER_Z_SHIFT).cast("int")
+        .alias("zoom_level"),
+        (F.shiftright(owner, _OWNER_X_SHIFT)
+         .bitwiseAND(F.lit(_OWNER_MASK))).alias("tile_column"),
+        owner.bitwiseAND(F.lit(_OWNER_MASK)).alias("tile_row"),
+        "tile_id")
     return images, map_df

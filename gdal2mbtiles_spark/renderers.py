@@ -9,9 +9,12 @@ release, tests/test_renderers.py:27-36).  We therefore implement a
 deterministic pure-zlib PNG encoder: identical bytes on every platform
 and executor, which is what content-addressed dedup requires.
 
-Renderers operate on DEDUPED images only (one render per distinct
-tile hash) — the engine renders after the groupBy(tile_id), exactly
-like the reference's ``seen``-memo short-circuit (storages.py:119-131).
+Renderers operate on DEDUPED images only, exactly like the reference's
+``seen``-memo short-circuit (storages.py:119-131): the sparse pyramid
+calls them once per distinct tile content, in its render stage after
+the groupBy(content) (operators.sparse.render_contents), and the
+buffer pipeline once per distinct tile hash, after the groupBy(tile_id)
+(operators.pyramid.render_images).
 """
 
 from __future__ import annotations

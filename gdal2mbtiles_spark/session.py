@@ -1,9 +1,10 @@
 """SparkSession factory tuned for the tile data plane.
 
-The engine moves 262,144-byte RGBA tile buffers through Arrow batches;
-the defaults below keep batches bounded (maxRecordsPerBatch) and enable
-AQE so skewed tile-hash or cell joins re-plan at runtime (SURVEY.md §4
-R7/R8).
+The engine moves both 262,144-byte RGBA tile buffers and ~40-byte
+sparse pixel rows through Arrow batches; the static batch limits below
+serve both (a batch closes at whichever limit it hits first), so no
+job has to change them.  AQE is on so skewed tile-hash or cell joins
+re-plan at runtime (SURVEY.md §4 R7/R8).
 """
 
 from __future__ import annotations
@@ -13,8 +14,11 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-# One RGBA tile is 256*256*4 bytes; cap Arrow batches at ~64 MiB of px.
-ARROW_TILE_BATCH = 256
+# Arrow batch limits: 64 MiB holds 256 RGBA tiles (256*256*4 bytes
+# each), while 64k records keep pixel and content rows in batches of a
+# few MB instead of the 10 KB a 256-row cap would give them.
+ARROW_MAX_RECORDS = 65536
+ARROW_MAX_BYTES = 64 * 1024 * 1024
 
 
 def get_spark(cores: Optional[int] = None,
@@ -94,7 +98,9 @@ def get_spark(cores: Optional[int] = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(ARROW_TILE_BATCH))
+                str(ARROW_MAX_RECORDS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_MAX_BYTES))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "true" if ui else "false")

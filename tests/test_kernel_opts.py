@@ -14,7 +14,8 @@ import pytest
 
 from gdal2mbtiles_spark.operators.sparse import (_md5_sparse,
                                                  _pixel_chunk,
-                                                 _tile_chunk)
+                                                 _tile_chunk,
+                                                 _tile_contents)
 from gdal2mbtiles_spark.renderers import decode_png_rgba, encode_png_rgba
 
 
@@ -86,14 +87,14 @@ class TestStitchedHintedEncode:
 
 class TestPhaseChunks:
     def test_tile_chunk_columns(self):
-        c = _tile_chunk([4, 4], [1, 2], [3, 4], [-5, 6],
-                        ["aa", "bb"], [b"x", b"y"])
-        assert list(c.columns) == ["kind", "z", "x", "y", "tile_id",
-                                   "tile_hex", "tile_data", "gx", "gy",
+        c = _tile_chunk(np.array([-5, 6], np.int64),
+                        np.array([b"ab", b""], dtype=object))
+        assert list(c.columns) == ["kind", "owner", "content", "gx", "gy",
                                    "r", "g", "b", "a"]
         assert (c["kind"] == 0).all()
         assert c["gx"].isna().all() and c["a"].isna().all()
-        assert c["tile_id"].tolist() == [-5, 6]
+        assert c["owner"].tolist() == [-5, 6]
+        assert c["content"].tolist() == [b"ab", b""]
 
     def test_pixel_chunk_columns(self):
         gx = np.array([7, 8], np.int64)
@@ -101,7 +102,30 @@ class TestPhaseChunks:
         ch = [np.array([1, 2], np.int64) for _ in range(4)]
         c = _pixel_chunk(gx, gy, ch)
         assert (c["kind"] == 1).all()
-        assert c["z"].isna().all() and c["tile_id"].isna().all()
-        assert c["tile_hex"].isna().all()
+        assert c["owner"].isna().all() and c["content"].isna().all()
         assert c["gx"].tolist() == [7, 8]
         assert c["r"].tolist() == [1, 2]
+
+
+class TestTileContents:
+    def test_content_is_sorted_nonzero_pixels(self):
+        """Content is lx‖ly‖r‖g‖b‖a over the tile's non-zero pixels in
+        (ly, lx) order; all-zero pixels keep their tile but not a place
+        in its content."""
+        z = 3
+        # tile (1, 0) y-down: two lit pixels (given out of order) and
+        # one all-zero pixel; tile (0, 2) y-down: only an all-zero one
+        gx = np.array([256 + 9, 256 + 4, 256 + 50, 17], np.int64)
+        gy = np.array([30, 2, 1, 512 + 5], np.int64)
+        ch = [np.array([1, 5, 0, 0], np.int64),
+              np.array([2, 6, 0, 0], np.int64),
+              np.array([3, 7, 0, 0], np.int64),
+              np.array([4, 8, 0, 0], np.int64)]
+        owner, content = _tile_contents(gx, gy, ch, z)
+        tiles = {(int(o) >> 58, (int(o) >> 29) & (2 ** 29 - 1),
+                  int(o) & (2 ** 29 - 1)): bytes(c)
+                 for o, c in zip(owner, content)}
+        assert tiles == {
+            # TMS row = 2^z - 1 - y-down row
+            (z, 1, 7): bytes([4, 9, 2, 30, 5, 1, 6, 2, 7, 3, 8, 4]),
+            (z, 0, 5): b""}

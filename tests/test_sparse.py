@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gdal2mbtiles_spark.functions.hashing import tile_id_of_bytes
 from gdal2mbtiles_spark.grid import whole_world_raster_meta
 from gdal2mbtiles_spark.operators.burn import (burn_points,
                                                pixel_histogram)
@@ -20,6 +21,9 @@ from gdal2mbtiles_spark.sources.pages import synth_pages, with_geo
 
 Z = 4
 N = 3000
+DUP_Z = 8
+# (native z, min_resolution) per histogram fixture
+LEVELS = {"hist": (Z, 0), "dup_hist": (DUP_Z, DUP_Z - 2)}
 
 
 @pytest.fixture(scope="module")
@@ -28,14 +32,31 @@ def hist(spark):
     return pixel_histogram(pages, z=Z).persist()
 
 
+@pytest.fixture(scope="module")
+def dup_hist(spark):
+    """One lit pixel per tile at DUP_Z, drawn from four (offset,
+    weight) choices, so most tiles repeat another tile's content."""
+    rng = np.random.RandomState(5)
+    n = 1 << DUP_Z
+    cells = rng.choice(n * n, size=300, replace=False)
+    rows = [(DUP_Z, int(c % n), int(c // n), int(rng.choice([3, 100])),
+             7, float(rng.choice([1, 5]))) for c in cells]
+    return spark.createDataFrame(
+        rows, "z int, x bigint, y bigint, ppx int, ppy int, w double")
+
+
+def _buffered_dedup(spark, hist, z, min_resolution):
+    """The buffer pipeline: burn -> pyramid -> dedup (raw payloads)."""
+    from gdal2mbtiles_spark.operators.burn import scatter_tiles
+    meta = whole_world_raster_meta(256 * (1 << z), 256 * (1 << z))
+    levels = pyramid_tiles(spark, scatter_tiles(hist), meta,
+                           min_resolution=min_resolution)
+    return dedup_tiles(spark, union_levels(levels))
+
+
 def test_sparse_equals_buffer_pipeline(spark, hist):
     # buffer path: burn -> pyramid -> dedup (raw) -> render
-    tiles = hist.sparkSession  # noqa (fixture ordering)
-    from gdal2mbtiles_spark.operators.burn import scatter_tiles
-    buf_tiles = scatter_tiles(hist)
-    meta = whole_world_raster_meta(256 * (1 << Z), 256 * (1 << Z))
-    levels = pyramid_tiles(spark, buf_tiles, meta, min_resolution=0)
-    b_images, b_map = dedup_tiles(spark, union_levels(levels))
+    b_images, b_map = _buffered_dedup(spark, hist, Z, 0)
     b_map_rows = {(r["zoom_level"], r["tile_column"], r["tile_row"],
                    r["tile_id"]) for r in b_map.collect()}
     b_hexes = {r["tile_hex"] for r in b_images.collect()}
@@ -74,56 +95,103 @@ def test_multi_phase_equals_single_phase(spark, hist):
         assert ra == rb
 
 
-def test_canon_paths_identical(spark, hist):
-    # force the broadcast-join canon and the min_by-aggregate canon
-    # (the at-scale fallback when the distinct-image relation would
-    # not fit a broadcast): identical (images, map) rows
-    a = sparse_pyramid_rendered(spark, hist, Z,
+def _counting_renderer(spark):
+    """A PngRenderer that counts its render calls in an accumulator."""
+    renders = spark.sparkContext.accumulator(0)
+
+    class CountingPng(PngRenderer):
+        def render(self, raw, **kw):
+            renders.add(1)
+            return super().render(raw, **kw)
+
+    return CountingPng(compression=1), renders
+
+
+@pytest.mark.parametrize("fixture", ["hist", "dup_hist"])
+def test_images_distinct_equal_dedup_tiles(spark, request, fixture):
+    # images are distinct by construction (no canon dedup step), and
+    # their tile ids are exactly the buffered pipeline's dedup output
+    hist = request.getfixturevalue(fixture)
+    z, min_res = LEVELS[fixture]
+    images, _ = sparse_pyramid_rendered(
+        spark, hist, z, PngRenderer(compression=1),
+        min_resolution=min_res)
+    ids = [r["tile_id"] for r in images.select("tile_id").collect()]
+    assert len(ids) == len(set(ids))
+    b_images, _ = _buffered_dedup(spark, hist, z, min_res)
+    assert set(ids) == {r["tile_id"]
+                        for r in b_images.select("tile_id").collect()}
+
+
+@pytest.mark.parametrize("fixture", ["hist", "dup_hist"])
+def test_render_once_per_distinct_content(spark, request, fixture):
+    # the render stage paints+hashes+encodes each distinct content
+    # exactly once, pyramid-wide, and is materialized once: later
+    # actions on either output never re-render
+    hist = request.getfixturevalue(fixture)
+    z, min_res = LEVELS[fixture]
+    renderer, renders = _counting_renderer(spark)
+    images, map_df = sparse_pyramid_rendered(
+        spark, hist, z, renderer, min_resolution=min_res)
+    n = renders.value
+    assert n == images.count()
+    assert n == images.select("tile_id").distinct().count()
+    n_map = map_df.count()
+    images.collect()
+    map_df.select("tile_id").distinct().count()
+    assert renders.value == n
+    if fixture == "dup_hist":
+        assert n < n_map / 2          # most tiles repeat a content
+
+
+@pytest.mark.parametrize("apex_level", [0, 3])
+def test_content_equals_canvas(spark, apex_level):
+    """Two level-1 tiles paint the same canvas, but one also holds a
+    faint native pixel that shrank to all-zero RGBA on the way down:
+    one image row, two map rows.  A tile holding only such a pixel
+    keeps its map row and shows the blank canvas."""
+    z = 6
+    side = 256 << z
+
+    def px(gx, gy, w):
+        return (z, gx >> 8, (1 << z) - 1 - (gy >> 8), gx & 255,
+                gy & 255, float(w))
+
+    # a saturated 32x32 native block is one (255,255,255,255) pixel at
+    # level 1 (local (10, 20)), in tile A and at the same offset in B
+    block = [(gx, gy) for gx in range(320, 352) for gy in range(640, 672)]
+    rows = [px(gx, gy, 255) for gx, gy in block]
+    rows += [px(gx + side // 2, gy, 255) for gx, gy in block]
+    # w=1 is (255,255,255,32); five 2x2 shrinks take it to all zero
+    rows.append(px(4000, 5000, 1))                   # into tile A
+    rows.append(px(1000, side // 2 + 3000, 1))       # alone: tile C
+    hist = spark.createDataFrame(
+        rows, "z int, x bigint, y bigint, ppx int, ppy int, w double")
+    images, map_df = sparse_pyramid_rendered(
+        spark, hist, z, PngRenderer(compression=1), min_resolution=1,
+        apex_level=apex_level)
+    tiles = {(r["zoom_level"], r["tile_column"], r["tile_row"]):
+             r["tile_id"] for r in map_df.collect()}
+    ids = [r["tile_id"] for r in images.select("tile_id").collect()]
+    assert len(ids) == len(set(ids))
+    assert set(tiles.values()) == set(ids)
+    a, b, c = tiles[(1, 0, 1)], tiles[(1, 1, 1)], tiles[(1, 0, 0)]
+    assert a == b
+    assert ids.count(a) == 1
+    assert sum(t == a for t in tiles.values()) == 2
+    assert c == tile_id_of_bytes(bytes(256 * 256 * 4))
+
+
+def test_apex_level_and_zoom_bounds(spark, hist):
+    # levels below apex_level finish on the driver, which only ever
+    # takes levels <= 2; owners pack z into 5 bits above x and y
+    with pytest.raises(ValueError):
+        sparse_pyramid_rendered(spark, hist, Z,
+                                PngRenderer(compression=1), apex_level=4)
+    with pytest.raises(ValueError):
+        sparse_pyramid_rendered(spark, hist, 30,
                                 PngRenderer(compression=1),
-                                min_resolution=0, broadcast_canon=True)
-    b = sparse_pyramid_rendered(spark, hist, Z,
-                                PngRenderer(compression=1),
-                                min_resolution=0, broadcast_canon=False)
-    for da, db in zip(a, b):
-        ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in da.collect())
-        rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in db.collect())
-        assert ra == rb
-
-
-def test_canon_auto_select_falls_back_under_tiny_threshold(spark,
-                                                           hist):
-    # force the auto estimator over the broadcast limit: it must take
-    # the min_by aggregate (the at-scale plan) and match the
-    # broadcast output exactly
-    want_imgs, _ = sparse_pyramid_rendered(
-        spark, hist, Z, PngRenderer(compression=1), min_resolution=0,
-        broadcast_canon=True)
-    want = {r["tile_hex"] for r in want_imgs.collect()}
-    conf = spark.conf
-    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-    try:
-        auto_imgs, _ = sparse_pyramid_rendered(
-            spark, hist, Z, PngRenderer(compression=1),
-            min_resolution=0)
-        got = {r["tile_hex"] for r in auto_imgs.collect()}
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert got == want
-
-
-def test_canon_auto_select_small_broadcasts(spark, hist):
-    # at test scale the distinct-image count is tiny: auto (None) must
-    # pick the broadcast plan and match the forced-broadcast output
-    auto_imgs, _ = sparse_pyramid_rendered(
-        spark, hist, Z, PngRenderer(compression=1), min_resolution=0)
-    forced_imgs, _ = sparse_pyramid_rendered(
-        spark, hist, Z, PngRenderer(compression=1), min_resolution=0,
-        broadcast_canon=True)
-    assert ({r["tile_hex"] for r in auto_imgs.collect()}
-            == {r["tile_hex"] for r in forced_imgs.collect()})
+                                min_resolution=30)
 
 
 def test_downsample_pixels_box_semantics(spark):
@@ -159,36 +227,12 @@ def test_sparse_levels_decay(spark, hist):
     assert counts[0] >= 1
 
 
-def test_pixel_batch_conf_restores_unset_key(spark):
-    """__exit__ must UNSET the Arrow batch key when the session never
-    set it explicitly (conf.get(key, None) -> None), not leak the
-    raised pixel batch size onto tile-buffer kernels."""
-    from gdal2mbtiles_spark.operators.sparse import (_ARROW_BATCH_KEY,
-                                                     _pixel_batch_conf)
-    orig = spark.conf.get(_ARROW_BATCH_KEY, None)
-    try:
-        spark.conf.unset(_ARROW_BATCH_KEY)
-        with _pixel_batch_conf(spark):
-            assert spark.conf.get(_ARROW_BATCH_KEY) == "65536"
-        assert spark.conf.get(_ARROW_BATCH_KEY, None) is None
-        # and the set-restore path still round-trips
-        spark.conf.set(_ARROW_BATCH_KEY, "256")
-        with _pixel_batch_conf(spark):
-            assert spark.conf.get(_ARROW_BATCH_KEY) == "65536"
-        assert spark.conf.get(_ARROW_BATCH_KEY, None) == "256"
-    finally:
-        if orig is None:
-            spark.conf.unset(_ARROW_BATCH_KEY)
-        else:
-            spark.conf.set(_ARROW_BATCH_KEY, orig)
-
-
 def test_min_resolution_final_phase_is_materialized(spark, hist):
     """min_resolution == the final phase's bottom makes that phase
-    emit=False; it must still be checkpointed (otherwise the fused
-    kernel re-executes per consumer) and the unused apex seed must
-    not be materialized.  Output parity with the full pyramid's
-    matching levels is the correctness half."""
+    emit=False; its only consumer is the render stage, whose eager
+    checkpoint runs it once, so neither output's plan holds a Python
+    kernel.  Output parity with the full pyramid's matching levels is
+    the correctness half."""
     from gdal2mbtiles_spark.operators.sparse import \
         sparse_pyramid_rendered
     images, map_df = sparse_pyramid_rendered(
@@ -197,7 +241,7 @@ def test_min_resolution_final_phase_is_materialized(spark, hist):
     # executed plan of either output
     for df in (images, map_df):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" not in plan, plan[:2000]
+        assert "InPandas" not in plan, plan[:2000]
     got = {(r["zoom_level"], r["tile_column"], r["tile_row"],
             r["tile_id"]) for r in map_df.collect()}
     assert {z for z, *_ in got} == {5, 6}
