@@ -60,13 +60,14 @@ def _profiled(label: str, frames):
     return out
 
 
-def profile(npart=64, part=0, phase_depth=5):
-    from gdal2mbtiles_spark.operators.sparse import (_phase_kernel,
+def profile(npart=64, part=0):
+    from gdal2mbtiles_spark.operators.sparse import (_PHASE_DEPTH,
+                                                     _phase_kernel,
                                                      _render_kernel)
     from gdal2mbtiles_spark.renderers import PngRenderer
 
     pdf = pd.read_parquet(OUT)
-    top, bottom = Z, Z - phase_depth + 1
+    top, bottom = Z, Z - _PHASE_DEPTH + 1
     shift = 8 + (top - bottom)
     ax = (pdf["gx"].to_numpy() >> shift)
     ay = (pdf["gy"].to_numpy() >> shift)
@@ -75,9 +76,8 @@ def profile(npart=64, part=0, phase_depth=5):
     print(f"partition {part}/{npart}: {len(sel)} pixel rows")
 
     frames = _profiled("content kernel", _phase_kernel(
-        top, bottom, emit_pixels=(bottom > 0))(iter([sel])))
+        top, bottom)(iter([sel])))
     tiles = pd.concat(frames, ignore_index=True)
-    tiles = tiles[tiles["kind"] == 0]
     # the render stage's groupBy(content) + collect_list(owner)
     grouped = (tiles.groupby("content", sort=False)["owner"]
                .apply(lambda s: s.to_numpy()).rename("owners")

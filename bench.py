@@ -64,7 +64,7 @@ def _prof(tag: str, t0: float) -> float:
 
 def bench_pyramid(spark, sf_dir: str):
     """Headline: pages -> burn histogram -> sparse relational pyramid:
-    phased content passes (only ~40-byte pixel rows and few-dozen-byte
+    phased content passes (after the native pixels, only few-dozen-byte
     tile contents cross an exchange), then one render stage that
     paints, MD5-hashes and PNG-encodes each distinct tile content once.
     The images it returns are distinct by construction, and the path

@@ -166,59 +166,48 @@ def border_keys(spark: SparkSession, meta: RasterMeta,
 def pyramid_tiles(spark: SparkSession, native: DataFrame,
                   meta: RasterMeta,
                   min_resolution: Optional[int] = None,
-                  max_resolution: Optional[int] = None,
-                  checkpoint_interval: int = 4,
-                  persist_levels: bool = True
+                  max_resolution: Optional[int] = None
                   ) -> Dict[int, DataFrame]:
     """All pyramid levels as {z: tiles DataFrame}.
 
     Downsampling chains one shuffle per level with geometrically
     decaying volume (vips.py:820-826's same decay).  Each level is
-    persisted (memory-then-disk) so consuming the union doesn't
+    eagerly local-checkpointed so consuming the union doesn't
     recompute the kernel chain once per level — the Spark analogue of
     the reference's render-to-buffer checkpointing
-    (IMAGE_BUFFER_INTERVAL, vips.py:723-725,838-853); every
-    ``checkpoint_interval`` levels the logical lineage is additionally
-    cut with ``localCheckpoint`` to keep plans shallow on deep
-    pyramids.  Upsampling explodes per level from the previous one
-    (NN stretch composes: repeat(2) twice == repeat(4))."""
+    (IMAGE_BUFFER_INTERVAL, vips.py:723-725,838-853).  Upsampling
+    explodes per level from the previous one (NN stretch composes:
+    repeat(2) twice == repeat(4))."""
     native_z = meta.native_resolution()
     validate_resolutions(native_z, min_resolution, max_resolution,
                          strict=False)
     lo = native_z if min_resolution is None else min_resolution
     hi = native_z if max_resolution is None else max_resolution
 
-    def _buffer(df: DataFrame, depth: int) -> DataFrame:
-        # Eager localCheckpoint: each level is computed exactly once,
-        # its lineage cut, and downstream consumers (the next level AND
-        # the dedup union) read the materialized blocks — the
-        # deterministic analogue of the reference's render-to-buffer.
-        # Without it the union job re-derives every level's kernel
-        # chain per branch (measured 2-3x slower end-to-end).
-        if persist_levels:
-            return df.localCheckpoint(eager=True)
-        if depth % checkpoint_interval == 0:
-            return df.localCheckpoint(eager=False)
-        return df
-
+    # Eager localCheckpoint per level: each level is computed exactly
+    # once, its lineage cut, and downstream consumers (the next level
+    # AND the dedup union) read the materialized blocks — the
+    # deterministic analogue of the reference's render-to-buffer.
+    # Without it the union job re-derives every level's kernel chain
+    # per branch (measured 2-3x slower end-to-end).
     levels: Dict[int, DataFrame] = {}
     # buffer the native level FIRST: it heads every consumer chain
     # (union, downsample, upsample) and is typically the expensive
     # kernel output (burn/scatter); without this each downstream action
     # recomputes it from scratch
-    native = _buffer(native, checkpoint_interval)
+    native = native.localCheckpoint(eager=True)
     if lo <= native_z <= hi:
         levels[native_z] = native
 
     cur = native
     for r in range(native_z - 1, lo - 1, -1):
-        cur = _buffer(downsample_level(cur), native_z - r)
+        cur = downsample_level(cur).localCheckpoint(eager=True)
         if r <= hi:
             levels[r] = cur
 
     cur = native
     for r in range(native_z + 1, hi + 1):
-        cur = _buffer(upsample_level(cur, 1), r - native_z)
+        cur = upsample_level(cur, 1).localCheckpoint(eager=True)
         if r >= lo:
             levels[r] = cur
 
@@ -253,8 +242,7 @@ def _broadcast_threshold(spark: SparkSession) -> int:
 
 def dedup_tiles(spark: SparkSession, tiles: DataFrame,
                 borders: Optional[DataFrame] = None,
-                zoom_offset: int = 0,
-                broadcast_canon: Optional[bool] = None
+                zoom_offset: int = 0
                 ) -> Tuple[DataFrame, DataFrame]:
     """MD5 dedup (A1): tiles -> (images, map).
 
@@ -264,13 +252,11 @@ def dedup_tiles(spark: SparkSession, tiles: DataFrame,
     hash-named file sinks (SimpleFileStorage parity).
     map(zoom_level, tile_column, tile_row, tile_id) — every tile.
 
-    broadcast_canon=None (default) decides automatically: a narrow
-    distinct-id counting pass estimates the canon relation's size
-    against spark.sql.autoBroadcastJoinThreshold, choosing the
+    A narrow distinct-id counting pass estimates the canon relation's
+    size against spark.sql.autoBroadcastJoinThreshold, choosing the
     payload-shuffle-free broadcast plan when it fits and the min_by
     aggregate otherwise (at 100x data the distinct-image count can
-    exceed the broadcast limit — round-1 VERDICT).  Pass True/False
-    to force a path and skip the extra pass.
+    exceed the broadcast limit — round-1 VERDICT).
 
     Border keys (no px) contribute map rows with the constant
     BORDER_TILE_ID plus one synthetic images row — the reference's
@@ -287,12 +273,8 @@ def dedup_tiles(spark: SparkSession, tiles: DataFrame,
         F.col("y").alias("tile_row"),
         "tile_id")
 
-    if broadcast_canon is None:
-        n_images = t.select("tile_id").distinct().count()
-        broadcast_canon = (n_images * _CANON_ROW_BYTES
-                           < _broadcast_threshold(spark))
-
-    if broadcast_canon:
+    n_images = t.select("tile_id").distinct().count()
+    if n_images * _CANON_ROW_BYTES < _broadcast_threshold(spark):
         # Payload-shuffle-free dedup: group only the (id, key) columns
         # (a few dozen bytes/row) to pick the canonical min-(z,x,y)
         # owner per hash, then broadcast-semi-join back — the 262KB
@@ -349,10 +331,8 @@ def render_images(images: DataFrame, renderer) -> DataFrame:
         encode, schema="tile_id bigint, tile_data binary, tile_hex string")
 
 
-def tiles_view(map_df: DataFrame, images_df: DataFrame,
-               broadcast_images: bool = False) -> DataFrame:
+def tiles_view(map_df: DataFrame, images_df: DataFrame) -> DataFrame:
     """The MBTiles ``tiles`` view as a DataFrame join
     (mbtiles.py:464-471): map JOIN images USING (tile_id)."""
-    right = F.broadcast(images_df) if broadcast_images else images_df
-    return map_df.join(right, "tile_id", "inner").select(
+    return map_df.join(images_df, "tile_id", "inner").select(
         "zoom_level", "tile_column", "tile_row", "tile_data")

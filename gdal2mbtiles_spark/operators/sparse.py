@@ -2,12 +2,10 @@
 pixel buffers between stages.
 
 The density raster a burn produces is sparse (lit pixels only), and
-the 2x2 box downsample is a *linear* operator per channel — so the
-whole pyramid can be derived relationally on a sparse pixel relation
+the 2x2 box downsample is a *linear* operator per channel, so each
+level follows from the one below it on sparse pixel arrays
 
-    pixels(z, gx, gy, r, g, b, a)     -- global pixel coords, y-down
-
-with one aggregation per level:
+    pixels(gx, gy, r, g, b, a)     -- global pixel coords, y-down
 
     parent(gx>>1, gy>>1).channel = (sum(children channel) + 2) >> 2
 
@@ -17,10 +15,14 @@ tms_align-embed semantics).
 The pyramid runs in two parts:
 
 1. a **content pass** (``pyramid_phase_contents``): multi-level numpy
-   kernels shrink the sparse rows level by level and emit, per tile,
+   kernels shrink the sparse pixels level by level and emit, per tile,
    its owner (packed z, x, y) and its *content* — the tile's non-zero
    pixels as a few dozen bytes, canonical so that equal canvases have
-   equal content.  Nothing is painted here;
+   equal content.  Nothing is painted here.  ``(owner, content)`` is
+   the only relation between stages: a pass (and the driver apex for
+   levels <= 2) starts from the previous pass's bottom-level contents,
+   decoded back to sparse pixels — zero pixels add nothing to a sum,
+   so the non-zero ones are all the next level needs;
 2. a **render stage** (``render_contents``): one ``groupBy(content)``
    collects the owners of each distinct content, and one kernel
    paints, MD5-hashes and PNG-encodes each distinct canvas exactly
@@ -40,7 +42,7 @@ sketch, re-planned); the buffer pipeline remains for dense rasters
 from __future__ import annotations
 
 import hashlib
-from typing import Dict, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -101,51 +103,6 @@ def heat_pixels(hist: DataFrame, z: int) -> DataFrame:
         F.lit(255).alias("b"), alpha.alias("a"))
 
 
-def downsample_pixels(pixels: DataFrame) -> DataFrame:
-    """One level down: 2x2 box on the sparse relation (pure JVM)."""
-    return (pixels
-            .groupBy((F.col("gx") / 2).cast("long").alias("gx"),
-                     (F.col("gy") / 2).cast("long").alias("gy"))
-            .agg(((F.sum("r") + 2) / 4).cast("int").alias("r"),
-                 ((F.sum("g") + 2) / 4).cast("int").alias("g"),
-                 ((F.sum("b") + 2) / 4).cast("int").alias("b"),
-                 ((F.sum("a") + 2) / 4).cast("int").alias("a")))
-
-
-def sparse_levels(hist: DataFrame, z: int,
-                  min_resolution: int = 0,
-                  buffer: str = "native") -> Dict[int, DataFrame]:
-    """{level: sparse pixels} from native z down to min_resolution.
-    Shuffle volume decays 4x per level; rows are ~40 bytes.
-
-    buffer:
-      'native' (default) — eagerly checkpoint only the native pixels
-        (the expensive upstream: pages synth + histogram); deeper
-        levels re-derive through cheap decaying JVM aggs per consumer,
-        avoiding one fixed checkpoint job per level;
-      'all' — eagerly checkpoint every level (best when many separate
-        actions consume mid levels);
-      'none' — no materialization (caller manages persistence).
-    """
-    native = heat_pixels(hist, z)
-    if buffer in ("native", "all"):
-        native = native.localCheckpoint(eager=True)
-    levels = {z: native}
-    cur = native
-    for r in range(z - 1, min_resolution - 1, -1):
-        cur = downsample_pixels(cur).withColumn(
-            "z", F.lit(r).cast("int")).select(
-            "z", "gx", "gy", "r", "g", "b", "a")
-        if buffer == "all":
-            cur = cur.localCheckpoint(eager=True)
-        levels[r] = cur
-    return levels
-
-
-# phased-kernel output: tile content rows (kind=0) union next-phase
-# sparse pixel rows (kind=1) in one nullable schema
-PHASE_SCHEMA = ("kind int, owner bigint, content binary, "
-                "gx bigint, gy bigint, r int, g int, b int, a int")
 CONTENT_SCHEMA = "owner bigint, content binary"
 # one row per distinct content: the image plus every tile showing it
 RENDERED_SCHEMA = ("tile_id bigint, tile_data binary, tile_hex string, "
@@ -162,56 +119,20 @@ MAX_OWNER_Z = 29
 # rendered tiles per output frame: bounds a render task's payload
 # memory, whatever the input batch size
 _OUT_CHUNK = 1024
-# levels <= _DRIVER_APEX finish on the driver: a level-L sparse
-# relation has at most (256*2^L)^2 rows regardless of input size
-# (<= 1.05M at L=2, ~40 MB)
+# levels <= _DRIVER_APEX finish on the driver from the level-3
+# contents (or the native pixels, z <= 2): a level-L tile set holds
+# at most (256*2^L)^2 pixels regardless of input size (<= 4.2M at
+# L=3, 6 content bytes each)
 _DRIVER_APEX = 2
-
-
-def _null_ints(n: int, dtype) -> pd.arrays.IntegerArray:
-    """All-null pandas nullable-int column of length n, built from a
-    mask (no per-element Python work)."""
-    return pd.arrays.IntegerArray(np.zeros(n, dtype=dtype),
-                                  np.ones(n, dtype=bool))
-
-
-def _tile_chunk(owner: np.ndarray, content: np.ndarray) -> pd.DataFrame:
-    """kind=0 rows of PHASE_SCHEMA, one per tile (pixel columns
-    all-null)."""
-    n = len(owner)
-    return pd.DataFrame({
-        "kind": np.zeros(n, dtype=np.int32),
-        "owner": owner.astype(np.int64),
-        "content": content,
-        "gx": _null_ints(n, np.int64),
-        "gy": _null_ints(n, np.int64),
-        "r": _null_ints(n, np.int32),
-        "g": _null_ints(n, np.int32),
-        "b": _null_ints(n, np.int32),
-        "a": _null_ints(n, np.int32)})
-
-
-def _pixel_chunk(gx: np.ndarray, gy: np.ndarray, ch) -> pd.DataFrame:
-    """kind=1 rows of PHASE_SCHEMA straight from the shrunk sparse
-    arrays (tile columns all-null) — no per-row Python loop."""
-    m = len(gx)
-    return pd.DataFrame({
-        "kind": np.ones(m, dtype=np.int32),
-        "owner": _null_ints(m, np.int64),
-        "content": np.full(m, None, dtype=object),
-        "gx": gx.astype(np.int64),
-        "gy": gy.astype(np.int64),
-        "r": ch[0].astype(np.int32),
-        "g": ch[1].astype(np.int32),
-        "b": ch[2].astype(np.int32),
-        "a": ch[3].astype(np.int32)})
+# levels per distributed content pass
+_PHASE_DEPTH = 5
 
 
 def _shrink_sparse(gx, gy, ch):
     """One 2x2 box level on sparse arrays: group by (gx>>1, gy>>1),
-    per-channel (sum + 2) >> 2 — the numpy twin of downsample_pixels
-    (missing children contribute 0), bit-identical to the canvas
-    shrink because box blocks never cross tile boundaries."""
+    per-channel (sum + 2) >> 2 (missing children contribute 0),
+    bit-identical to the canvas shrink because box blocks never cross
+    tile boundaries."""
     key = (gx >> 1) * _KEY_SHIFT + (gy >> 1)
     order = np.argsort(key, kind="stable")
     key = key[order]
@@ -267,25 +188,67 @@ def _tile_contents(gx, gy, ch, lvl: int):
     return owner, content.to_numpy(zero_copy_only=False)
 
 
-def pyramid_phase_contents(pixels: DataFrame, top: int, bottom: int,
-                           emit_pixels: bool) -> DataFrame:
+def _decode_contents(owner, content, lvl: int):
+    """Sparse arrays (gx, gy, [r, g, b, a]) of level-``lvl`` tiles from
+    their owners and contents: the inverse of ``_tile_contents``.
+
+    Each tile also gets one all-zero pixel at its local (0, 0): an
+    all-zero tile has empty content, and without that pixel it would
+    vanish on the next shrink, taking its ancestors' map rows with it.
+    A zero pixel adds nothing to any (sum + 2) >> 2."""
+    owner = np.asarray(owner, dtype=np.int64)
+    tx = (owner >> _OWNER_X_SHIFT) & _OWNER_MASK
+    ty = (np.int64(1) << lvl) - 1 - (owner & _OWNER_MASK)   # TMS flip
+    n = np.fromiter(map(len, content), dtype=np.int64,
+                    count=len(owner)) // 6
+    buf = np.frombuffer(b"".join(content), dtype=np.uint8)
+    t = np.repeat(np.arange(len(owner)), n)
+    start = np.cumsum(n) - n
+    # pixel j of tile t sits at 6*start[t] + (j - start[t]) + i*n[t]
+    # in block i (the _tile_contents layout)
+    base = 5 * start[t] + np.arange(len(t))
+    lx, ly, *ch = (buf[base + i * n[t]].astype(np.int64)
+                   for i in range(6))
+    zero = np.zeros(len(owner), dtype=np.int64)
+    gx = np.concatenate((tx[t] * TILE_SIDE + lx, tx * TILE_SIDE))
+    gy = np.concatenate((ty[t] * TILE_SIDE + ly, ty * TILE_SIDE))
+    return gx, gy, [np.concatenate((c, zero)) for c in ch]
+
+
+def pyramid_phase_contents(src: DataFrame, top: int,
+                           bottom: int) -> DataFrame:
     """Tile contents of levels [top..bottom] in ONE kernel pass.
 
-    Input: sparse pixels at level ``top``.  Partitioning by the
-    level-``bottom`` ancestor tile guarantees all four children of any
-    parent tile >= bottom are co-located, so the kernel can loop:
-    emit every tile's content at the current level, then 2x2-shrink
-    the sparse rows in-task and recurse — one shuffle and one plan for
-    ``top - bottom + 1`` levels instead of one per level (the per-level
-    chain's serial Catalyst/scheduling cost dominated the 4-vs-16-core
-    scaling gap).  With emit_pixels the kernel also outputs the
-    level-(bottom-1) sparse rows that seed the next phase."""
-    shift = 8 + (top - bottom)          # log2(TILE_SIDE) + level gap
-    keyed = pixels.select(
-        "gx", "gy", "r", "g", "b", "a",
-        F.shiftright("gx", shift).alias("_ax"),
-        F.shiftright("gy", shift).alias("_ay"))
-    sc = pixels.sparkSession.sparkContext
+    Input: the native sparse pixels at level ``top`` (gx, gy, r, g, b,
+    a), or the previous stage's level-(top+1) content rows (owner,
+    content).  Partitioning by the level-``bottom`` ancestor tile
+    guarantees all four children of any parent tile >= bottom are
+    co-located, so the kernel can loop: emit every tile's content at
+    the current level, then 2x2-shrink the sparse rows in-task and
+    recurse — one shuffle and one plan for ``top - bottom + 1`` levels
+    instead of one per level (the per-level chain's serial
+    Catalyst/scheduling cost dominated the 4-vs-16-core scaling gap).
+    Output: (owner, content) rows only; the bottom level's rows are
+    the next stage's input."""
+    if "content" in src.columns:
+        # the level-bottom ancestor of TMS tile (x, y) at level top+1
+        # is (x >> gap, y >> gap), read from the owner bits
+        gap = top + 1 - bottom
+        owner = F.col("owner")
+        keyed = src.select(
+            "owner", "content",
+            F.shiftright(F.shiftright(owner, _OWNER_X_SHIFT)
+                         .bitwiseAND(F.lit(_OWNER_MASK)), gap)
+            .alias("_ax"),
+            F.shiftright(owner.bitwiseAND(F.lit(_OWNER_MASK)), gap)
+            .alias("_ay"))
+    else:
+        shift = 8 + (top - bottom)      # log2(TILE_SIDE) + level gap
+        keyed = src.select(
+            "gx", "gy", "r", "g", "b", "a",
+            F.shiftright("gx", shift).alias("_ax"),
+            F.shiftright("gy", shift).alias("_ay"))
+    sc = src.sparkSession.sparkContext
     # one partition per core: every Python task costs a fixed ~0.1 s of
     # worker CPU (measured on a trivial mapInPandas, 4-core box), and
     # the kernel is only a lexsort and a shrink per level, so a single
@@ -297,14 +260,15 @@ def pyramid_phase_contents(pixels: DataFrame, top: int, bottom: int,
     if bottom < 16:
         p = min(p, 4 ** bottom)
     keyed = keyed.repartition(p, "_ax", "_ay")
-    return keyed.mapInPandas(_phase_kernel(top, bottom, emit_pixels),
-                             schema=PHASE_SCHEMA)
+    return keyed.mapInPandas(_phase_kernel(top, bottom),
+                             schema=CONTENT_SCHEMA)
 
 
-def _phase_kernel(top: int, bottom: int, emit_pixels: bool):
+def _phase_kernel(top: int, bottom: int):
     """Build the multi-level content kernel closure (module level so
     BENCH/profile_kernel.py profiles the REAL kernel, and the driver
-    apex runs it in-process)."""
+    apex runs it in-process).  Its input batches are either native
+    pixels at level ``top`` or content rows at level ``top + 1``."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [b for b in batches if len(b)]
@@ -312,35 +276,37 @@ def _phase_kernel(top: int, bottom: int, emit_pixels: bool):
             return
         pdf = (parts[0] if len(parts) == 1
                else pd.concat(parts, ignore_index=True))
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        ch = [pdf[c].to_numpy().astype(np.int64)
-              for c in ("r", "g", "b", "a")]
+        if "content" in pdf:
+            gx, gy, ch = _shrink_sparse(*_decode_contents(
+                pdf["owner"], pdf["content"], top + 1))
+        else:
+            gx = pdf["gx"].to_numpy(np.int64)
+            gy = pdf["gy"].to_numpy(np.int64)
+            ch = [pdf[c].to_numpy().astype(np.int64)
+                  for c in ("r", "g", "b", "a")]
         for lvl in range(top, bottom - 1, -1):
-            yield _tile_chunk(*_tile_contents(gx, gy, ch, lvl))
-            if lvl > bottom or emit_pixels:
+            owner, content = _tile_contents(gx, gy, ch, lvl)
+            yield pd.DataFrame({"owner": owner, "content": content})
+            if lvl > bottom:
                 gx, gy, ch = _shrink_sparse(gx, gy, ch)
-        if emit_pixels:
-            yield _pixel_chunk(gx, gy, ch)
 
     return kernel
 
 
-def _apex_contents(spark: SparkSession, pixels: DataFrame,
+def _apex_contents(spark: SparkSession, src: DataFrame,
                    top: int, bottom: int) -> DataFrame:
     """Contents of pyramid levels [top..bottom], computed on the driver.
 
-    Only called for top <= _DRIVER_APEX, where the sparse relation is
-    bounded whatever the input size — the distributed version of these
-    levels is all fixed overhead (tiny exchanges, python-worker round
-    trips) and no work.  Runs the same kernel as the phases, in
-    process; the pandas frame goes through Arrow (one record batch,
-    one JVM scan task), not a pickled Python RDD."""
-    pdf = pixels.select("gx", "gy", "r", "g", "b", "a").toPandas()
-    frames = list(_phase_kernel(top, bottom, emit_pixels=False)(
-        iter([pdf])))
+    Only called for top <= _DRIVER_APEX, where ``src`` (native pixels,
+    or the level-(top+1) content rows) is bounded whatever the data
+    scale — the distributed version of these levels is all fixed
+    overhead (tiny exchanges, python-worker round trips) and no work.
+    Runs the same kernel as the phases, in process; the pandas frame
+    goes through Arrow (one record batch, one JVM scan task), not a
+    pickled Python RDD."""
+    frames = list(_phase_kernel(top, bottom)(iter([src.toPandas()])))
     if frames:
-        out = pd.concat(frames, ignore_index=True)[["owner", "content"]]
+        out = pd.concat(frames, ignore_index=True)
     else:
         out = pd.DataFrame({"owner": np.zeros(0, np.int64),
                             "content": np.zeros(0, object)})
@@ -413,57 +379,51 @@ def render_contents(contents: DataFrame, renderer) -> DataFrame:
 
 def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                             z: int, renderer,
-                            min_resolution: int = 0,
-                            phase_depth: int = 5,
-                            apex_level: int = 3
+                            min_resolution: int = 0
                             ) -> Tuple[DataFrame, DataFrame]:
     """Full pipeline: histogram -> phased content passes -> driver
     apex -> render stage -> (images, map).
 
-    Levels at or above ``apex_level`` take ceil(levels/phase_depth)
+    Levels above _DRIVER_APEX take ceil(levels/_PHASE_DEPTH)
     multi-level content passes (one shuffle + one plan per pass
     instead of per level).  A pass keyed by its bottom ancestor has
-    4^bottom groups; apex_level=3 keeps every pass at >= 4^3 = 64
-    keys.  The levels below ``apex_level`` (at most 0..2) finish ON
-    THE DRIVER: their sparse relation is O(1) in data scale, and the
-    local kernel replaces a chain of tiny stages' fixed scheduling
-    and exchange overhead.  apex_level must be <= 3.
+    4^bottom groups, so every pass keeps >= 4^3 = 64 keys.  The levels
+    <= _DRIVER_APEX finish ON THE DRIVER: their input is O(1) in data
+    scale, and the local kernel replaces a chain of tiny stages' fixed
+    scheduling and exchange overhead.
 
-    Every tile's content then meets in the render stage, which paints,
+    Only (owner, content) rows cross a stage boundary: the next pass
+    (or the apex) reads the previous pass's bottom-level contents from
+    its eager local checkpoint, decodes them and shrinks them.  Every
+    tile's content then meets in the render stage, which paints,
     hashes and encodes each distinct content once and is materialized
     once (eager local checkpoint), so neither output re-renders.
 
     images: (tile_id, tile_data encoded, tile_hex), one row per
     distinct canvas; map: (zoom_level, tile_column, tile_row,
     tile_id), one row per tile."""
-    if apex_level > _DRIVER_APEX + 1:
-        raise ValueError(f"apex_level {apex_level} must be <= "
-                         f"{_DRIVER_APEX + 1}")
     if z > MAX_OWNER_Z:
         raise ValueError(f"z {z} exceeds the packed-owner limit "
                          f"{MAX_OWNER_Z}")
-    pixels = heat_pixels(hist, z)
-    apex_top = min(max(apex_level - 1, min_resolution - 1), z)
+    src = heat_pixels(hist, z)
+    apex_top = min(max(_DRIVER_APEX, min_resolution - 1), z)
     contents = []
     top = z
     while top > apex_top:
         bottom = max(min_resolution, apex_top + 1,
-                     top - phase_depth + 1)
-        emit = bottom > min_resolution
-        out = pyramid_phase_contents(pixels, top, bottom,
-                                     emit_pixels=emit)
-        if emit:
-            # two consumers (the next pass and the render stage): one
+                     top - _PHASE_DEPTH + 1)
+        out = pyramid_phase_contents(src, top, bottom)
+        if bottom > min_resolution:
+            # two consumers (the next stage and the render stage): one
             # materialization.  The last pass feeds only the render
             # stage, whose eager checkpoint runs it exactly once.
             out = out.localCheckpoint(eager=True)
-            pixels = out.where(F.col("kind") == 1).select(
-                "gx", "gy", "r", "g", "b", "a")
-        contents.append(out.where(F.col("kind") == 0).select(
-            "owner", "content"))
+            src = out.where(
+                F.shiftright("owner", _OWNER_Z_SHIFT) == bottom)
+        contents.append(out)
         top = bottom - 1
     if top >= min_resolution:
-        contents.append(_apex_contents(spark, pixels, top,
+        contents.append(_apex_contents(spark, src, top,
                                        min_resolution))
 
     union = contents[0]

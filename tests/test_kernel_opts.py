@@ -9,12 +9,10 @@ sparse==buffered byte contract depend on it).
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from gdal2mbtiles_spark.operators.sparse import (_md5_sparse,
-                                                 _pixel_chunk,
-                                                 _tile_chunk,
+from gdal2mbtiles_spark.operators.sparse import (_decode_contents,
+                                                 _md5_sparse,
                                                  _tile_contents)
 from gdal2mbtiles_spark.renderers import decode_png_rgba, encode_png_rgba
 
@@ -85,26 +83,27 @@ class TestStitchedHintedEncode:
             assert np.array_equal(decode_png_rgba(hinted), arr)
 
 
-class TestPhaseChunks:
-    def test_tile_chunk_columns(self):
-        c = _tile_chunk(np.array([-5, 6], np.int64),
-                        np.array([b"ab", b""], dtype=object))
-        assert list(c.columns) == ["kind", "owner", "content", "gx", "gy",
-                                   "r", "g", "b", "a"]
-        assert (c["kind"] == 0).all()
-        assert c["gx"].isna().all() and c["a"].isna().all()
-        assert c["owner"].tolist() == [-5, 6]
-        assert c["content"].tolist() == [b"ab", b""]
-
-    def test_pixel_chunk_columns(self):
-        gx = np.array([7, 8], np.int64)
-        gy = np.array([9, 10], np.int64)
-        ch = [np.array([1, 2], np.int64) for _ in range(4)]
-        c = _pixel_chunk(gx, gy, ch)
-        assert (c["kind"] == 1).all()
-        assert c["owner"].isna().all() and c["content"].isna().all()
-        assert c["gx"].tolist() == [7, 8]
-        assert c["r"].tolist() == [1, 2]
+class TestDecodeContents:
+    def test_round_trip_is_nonzero_pixels_plus_one_zero_per_tile(self):
+        """_decode_contents inverts _tile_contents: it returns exactly
+        the non-zero input pixels, plus one all-zero pixel at local
+        (0, 0) of every tile, all-zero tiles included."""
+        rng = np.random.RandomState(3)
+        z = 4
+        for _ in range(30):
+            cells = rng.choice((256 << z) ** 2, size=rng.randint(1, 300),
+                               replace=False).astype(np.int64)
+            gx, gy = cells % (256 << z), cells // (256 << z)
+            ch = [rng.choice([0, 0, 1, 7, 255], size=len(cells))
+                  .astype(np.int64) for _ in range(4)]
+            dx, dy, dch = _decode_contents(*_tile_contents(gx, gy, ch, z),
+                                           z)
+            lit = (ch[0] | ch[1] | ch[2] | ch[3]) != 0
+            tiles = set(zip(gx >> 8, gy >> 8))
+            want = sorted(
+                list(zip(gx[lit], gy[lit], *(c[lit] for c in ch)))
+                + [(tx << 8, ty << 8, 0, 0, 0, 0) for tx, ty in tiles])
+            assert sorted(zip(dx, dy, *dch)) == want
 
 
 class TestTileContents:

@@ -193,20 +193,28 @@ class TestBordersAndDedup:
         assert map_df.count() == 16
 
     def test_dedup_broadcast_and_agg_paths_identical(self, spark):
-        # the auto fallback (broadcast_canon=None) must pick SOME path
-        # and both forced paths must emit identical (images, map)
+        # the broadcast threshold selects the path: a roomy one takes
+        # the broadcast canon join, a 64-byte one the min_by aggregate;
+        # both must emit identical (images, map)
         meta = whole_world_raster_meta(1024, 1024)
         df = native_tiles(spark, meta)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
         outs = {}
-        for mode in (True, False, None):
-            images, map_df = dedup_tiles(spark, df,
-                                         broadcast_canon=mode)
-            outs[mode] = (
-                sorted((r["tile_id"], r["tile_hex"],
-                        bytes(r["tile_data"]))
-                       for r in images.collect()),
-                sorted(tuple(r) for r in map_df.collect()))
-        assert outs[True] == outs[False] == outs[None]
+        try:
+            for threshold in ("10m", "64"):
+                spark.conf.set(key, threshold)
+                images, map_df = dedup_tiles(spark, df)
+                plan = images._jdf.queryExecution().analyzed().toString()
+                outs["min_by" in plan] = (
+                    sorted((r["tile_id"], r["tile_hex"],
+                            bytes(r["tile_data"]))
+                           for r in images.collect()),
+                    sorted(tuple(r) for r in map_df.collect()))
+        finally:
+            spark.conf.set(key, old)
+        assert set(outs) == {False, True}
+        assert outs[False] == outs[True]
 
     def test_dedup_auto_fallback_to_agg(self, spark):
         # force the fallback by shrinking the broadcast threshold so
@@ -217,8 +225,7 @@ class TestBordersAndDedup:
         old = spark.conf.get(key)
         try:
             spark.conf.set(key, "64")   # bytes: 16 images won't fit
-            images, map_df = dedup_tiles(spark, df,
-                                         broadcast_canon=None)
+            images, map_df = dedup_tiles(spark, df)
             assert "min_by" in images._jdf.queryExecution().analyzed(
                 ).toString()
             # gradient world at z2: B = (tx ^ ty)*16 -> 4 distinct images

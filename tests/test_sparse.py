@@ -12,9 +12,8 @@ from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
                                                   pyramid_tiles,
                                                   render_images,
                                                   union_levels)
-from gdal2mbtiles_spark.operators.sparse import (downsample_pixels,
-                                                 heat_pixels,
-                                                 sparse_levels,
+from gdal2mbtiles_spark.operators import sparse
+from gdal2mbtiles_spark.operators.sparse import (_shrink_sparse,
                                                  sparse_pyramid_rendered)
 from gdal2mbtiles_spark.renderers import PngRenderer, decode_png_rgba
 from gdal2mbtiles_spark.sources.pages import synth_pages, with_geo
@@ -76,23 +75,49 @@ def test_sparse_equals_buffer_pipeline(spark, hist):
     assert arr.shape == (256, 256, 4)
 
 
-def test_multi_phase_equals_single_phase(spark, hist):
-    # phase_depth=2 forces the emit_pixels bridge (3 kernel passes at
-    # Z=4); results must be identical to one deep pass
-    one = sparse_pyramid_rendered(spark, hist, Z,
-                                  PngRenderer(compression=1),
-                                  min_resolution=0, phase_depth=16,
-                                  apex_level=0)
-    many = sparse_pyramid_rendered(spark, hist, Z,
+def _rows(df):
+    return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                        else v for v in row) for row in df.collect())
+
+
+def test_multi_phase_equals_single_phase(spark, dup_hist, monkeypatch):
+    # the defaults run passes 8..4 and 3..3, then the driver apex for
+    # 2..0: a pass->pass and a pass->apex contents bridge.  One deep
+    # pass (8..3) must give identical outputs.
+    many = sparse_pyramid_rendered(spark, dup_hist, DUP_Z,
                                    PngRenderer(compression=1),
-                                   min_resolution=0, phase_depth=2,
-                                   apex_level=2)
+                                   min_resolution=0)
+    with monkeypatch.context() as m:
+        m.setattr(sparse, "_PHASE_DEPTH", 16)
+        one = sparse_pyramid_rendered(spark, dup_hist, DUP_Z,
+                                      PngRenderer(compression=1),
+                                      min_resolution=0)
     for a, b in zip(one, many):
-        ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in a.collect())
-        rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in b.collect())
-        assert ra == rb
+        assert _rows(a) == _rows(b)
+
+
+@pytest.mark.parametrize("z", [8, 14])
+def test_all_zero_at_bridge_keeps_ancestors(spark, z):
+    """A lone faint native pixel (w=1: (255,255,255,32)) is all-zero
+    after five 2x2 shrinks, so its level-(z-5) tile has empty content.
+    At z8 that is level 3, the bridge from the 3..3 pass into the
+    driver apex; at z14 it is level 9, so the level-5 bridge between
+    the 9..5 and 4..3 passes is empty too.  The tile still has a map
+    row on every level, and the all-zero ones show the blank canvas."""
+    n = 1 << z
+    x, y = n // 3, n // 5
+    hist = spark.createDataFrame(
+        [(z, x, y, 200, 17, 1.0)],
+        "z int, x bigint, y bigint, ppx int, ppy int, w double")
+    _images, map_df = sparse_pyramid_rendered(
+        spark, hist, z, PngRenderer(compression=1), min_resolution=0)
+    tiles = {(r["zoom_level"], r["tile_column"], r["tile_row"]):
+             r["tile_id"] for r in map_df.collect()}
+    assert set(tiles) == {(lvl, x >> (z - lvl), y >> (z - lvl))
+                          for lvl in range(z + 1)}
+    blank = tile_id_of_bytes(bytes(256 * 256 * 4))
+    for (lvl, _, _), tid in tiles.items():
+        assert (tid == blank) == (lvl <= z - 5)
 
 
 def _counting_renderer(spark):
@@ -144,12 +169,15 @@ def test_render_once_per_distinct_content(spark, request, fixture):
         assert n < n_map / 2          # most tiles repeat a content
 
 
-@pytest.mark.parametrize("apex_level", [0, 3])
-def test_content_equals_canvas(spark, apex_level):
+@pytest.mark.parametrize("driver_apex", [0, 3])
+def test_content_equals_canvas(spark, driver_apex, monkeypatch):
     """Two level-1 tiles paint the same canvas, but one also holds a
     faint native pixel that shrank to all-zero RGBA on the way down:
     one image row, two map rows.  A tile holding only such a pixel
-    keeps its map row and shows the blank canvas."""
+    keeps its map row and shows the blank canvas.  driver_apex=0 runs
+    every level in distributed passes; 3 finishes levels 3..1 on the
+    driver from the level-4 contents."""
+    monkeypatch.setattr(sparse, "_DRIVER_APEX", driver_apex)
     z = 6
     side = 256 << z
 
@@ -168,8 +196,7 @@ def test_content_equals_canvas(spark, apex_level):
     hist = spark.createDataFrame(
         rows, "z int, x bigint, y bigint, ppx int, ppy int, w double")
     images, map_df = sparse_pyramid_rendered(
-        spark, hist, z, PngRenderer(compression=1), min_resolution=1,
-        apex_level=apex_level)
+        spark, hist, z, PngRenderer(compression=1), min_resolution=1)
     tiles = {(r["zoom_level"], r["tile_column"], r["tile_row"]):
              r["tile_id"] for r in map_df.collect()}
     ids = [r["tile_id"] for r in images.select("tile_id").collect()]
@@ -182,57 +209,43 @@ def test_content_equals_canvas(spark, apex_level):
     assert c == tile_id_of_bytes(bytes(256 * 256 * 4))
 
 
-def test_apex_level_and_zoom_bounds(spark, hist):
-    # levels below apex_level finish on the driver, which only ever
-    # takes levels <= 2; owners pack z into 5 bits above x and y
-    with pytest.raises(ValueError):
-        sparse_pyramid_rendered(spark, hist, Z,
-                                PngRenderer(compression=1), apex_level=4)
+def test_zoom_bound(spark, hist):
+    # owners pack z into 5 bits above x and y
     with pytest.raises(ValueError):
         sparse_pyramid_rendered(spark, hist, 30,
                                 PngRenderer(compression=1),
                                 min_resolution=30)
 
 
-def test_downsample_pixels_box_semantics(spark):
-    # 4 children of one parent pixel with known alphas
-    rows = [(3, 10, 10, 255, 255, 255, 100),
-            (3, 11, 10, 255, 255, 255, 50),
-            (3, 10, 11, 255, 255, 255, 25),
-            (3, 11, 11, 255, 255, 255, 11)]
-    df = spark.createDataFrame(
-        rows, "z int, gx bigint, gy bigint, r int, g int, b int, a int")
-    out = downsample_pixels(df).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["gx"], r["gy"]) == (5, 5)
-    assert r["a"] == (100 + 50 + 25 + 11 + 2) // 4
-    assert r["r"] == (255 * 4 + 2) // 4  # saturated white stays 255
+def test_downsample_pixels_box_semantics():
+    """_shrink_sparse, the pipeline's one 2x2 box step on sparse
+    pixels: parent = (sum of children + 2) >> 2 per channel."""
+    def shrink(rows):
+        a = np.array(rows, np.int64)
+        gx, gy, ch = _shrink_sparse(a[:, 0], a[:, 1],
+                                    [a[:, i] for i in range(2, 6)])
+        return [(int(gx[i]), int(gy[i]), *(int(c[i]) for c in ch))
+                for i in range(len(gx))]
 
+    # 4 children of one parent pixel with known alphas; saturated
+    # white stays 255
+    assert shrink([(10, 10, 255, 255, 255, 100),
+                   (11, 10, 255, 255, 255, 50),
+                   (10, 11, 255, 255, 255, 25),
+                   (11, 11, 255, 255, 255, 11)]) == [
+        (5, 5, 255, 255, 255, (100 + 50 + 25 + 11 + 2) // 4)]
     # partial parent: 1 lit child only -> other three contribute 0
-    df2 = spark.createDataFrame(
-        [(3, 20, 20, 255, 255, 255, 200)],
-        "z int, gx bigint, gy bigint, r int, g int, b int, a int")
-    r2 = downsample_pixels(df2).collect()[0]
-    assert r2["a"] == (200 + 2) // 4
-    assert r2["r"] == (255 + 2) // 4
-
-
-def test_sparse_levels_decay(spark, hist):
-    levels = sparse_levels(hist, Z, min_resolution=0)
-    counts = {z: levels[z].count() for z in levels}
-    # sparse row counts can only shrink (or stay) per level
-    for z in range(Z, 0, -1):
-        assert counts[z - 1] <= counts[z]
-    assert counts[0] >= 1
+    lit = (255 + 2) // 4
+    assert shrink([(20, 20, 255, 255, 255, 200)]) == [
+        (10, 10, lit, lit, lit, (200 + 2) // 4)]
 
 
 def test_min_resolution_final_phase_is_materialized(spark, hist):
-    """min_resolution == the final phase's bottom makes that phase
-    emit=False; its only consumer is the render stage, whose eager
-    checkpoint runs it once, so neither output's plan holds a Python
-    kernel.  Output parity with the full pyramid's matching levels is
-    the correctness half."""
+    """min_resolution == the final phase's bottom leaves that phase
+    without a checkpoint of its own: its only consumer is the render
+    stage, whose eager checkpoint runs it once, so neither output's
+    plan holds a Python kernel.  Output parity with the full pyramid's
+    matching levels is the correctness half."""
     from gdal2mbtiles_spark.operators.sparse import \
         sparse_pyramid_rendered
     images, map_df = sparse_pyramid_rendered(
