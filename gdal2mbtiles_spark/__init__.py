@@ -15,3 +15,10 @@ SimHash), ANN similarity search, and text quality analytics.
 """
 
 __version__ = "0.1.0"
+
+# Every Python worker imports this package when it unpickles one of the
+# engine's UDFs; from then on its tasks skip re-reading unchanged zip
+# archives (pyspark.zip, --py-files) before each task.
+from gdal2mbtiles_spark import _zipcache
+
+_zipcache.install()

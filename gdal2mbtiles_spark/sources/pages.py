@@ -103,14 +103,21 @@ def with_geo(pages: DataFrame, res: int = DEFAULT_RES,
              tile_z: int = 7) -> DataFrame:
     """Add the derived point columns: deterministic geocode, cell id,
     TMS tile keys (the 'points relation' of SURVEY.md §1.1)."""
-    lon = geo_lon(F.col("url"))
-    lat = geo_lat(F.col("url"))
-    df = pages.withColumn("lon", lon).withColumn("lat", lat)
-    return (df
-            .withColumn("cell", cell_id(F.col("lon"), F.col("lat"), res))
-            .withColumn("tile_z", F.lit(tile_z))
-            .withColumn("tile_x", tile_x(F.col("lon"), tile_z))
-            .withColumn("tile_y", tile_y_tms(F.col("lat"), tile_z)))
+    return _with_points(pages, geo_lon(F.col("url")),
+                        geo_lat(F.col("url")), res, tile_z)
+
+
+def _with_points(pages: DataFrame, lon, lat, res: int,
+                 tile_z: int) -> DataFrame:
+    """Append lon, lat, cell, tile_z, tile_x, tile_y in that order.
+    Two withColumns calls, since cell and the tile keys read lon/lat;
+    each chained withColumn would re-analyze the growing plan."""
+    return (pages.withColumns({"lon": lon, "lat": lat})
+            .withColumns({
+                "cell": cell_id(F.col("lon"), F.col("lat"), res),
+                "tile_z": F.lit(tile_z),
+                "tile_x": tile_x(F.col("lon"), tile_z),
+                "tile_y": tile_y_tms(F.col("lat"), tile_z)}))
 
 
 def synth_pages_skewed(spark: SparkSession, n: int,
@@ -133,9 +140,4 @@ def with_geo_skewed(pages: DataFrame, res: int = DEFAULT_RES,
         geo_lon(F.col("url")))
     lat = F.when(F.col("skewed"), F.lit(SKEW_LAT)).otherwise(
         geo_lat(F.col("url")))
-    df = pages.withColumn("lon", lon).withColumn("lat", lat)
-    return (df
-            .withColumn("cell", cell_id(F.col("lon"), F.col("lat"), res))
-            .withColumn("tile_z", F.lit(tile_z))
-            .withColumn("tile_x", tile_x(F.col("lon"), tile_z))
-            .withColumn("tile_y", tile_y_tms(F.col("lat"), tile_z)))
+    return _with_points(pages, lon, lat, res, tile_z)
