@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship pipeline: deterministic pages ->
-geocode -> burn to density tiles -> pyramid -> MD5 dedup, returning the
-per-zoom tile/image summary.
+geocode -> burn to a pixel histogram -> sparse pyramid with MD5 dedup,
+returning the per-zoom tile/image summary.
 
 ``queries()`` / ``oracle_sql()`` pair each implemented operator from
 SURVEY.md §2 with an ANSI-SQL equivalent DuckDB runs on the same
@@ -21,11 +21,9 @@ from pyspark.sql import functions as F
 from gdal2mbtiles_spark.cells import DEFAULT_RES
 from gdal2mbtiles_spark.functions.tilemath import (
     cell_id_sql, geo_lat_sql, geo_lon_sql, tile_x_sql, tile_y_tms_sql)
-from gdal2mbtiles_spark.operators.burn import burn_points
-from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
-                                                  pyramid_tiles,
-                                                  union_levels)
-from gdal2mbtiles_spark.grid import whole_world_raster_meta
+from gdal2mbtiles_spark.operators.burn import pixel_histogram
+from gdal2mbtiles_spark.operators.sparse import sparse_pyramid_rendered
+from gdal2mbtiles_spark.renderers import TouchRenderer
 from gdal2mbtiles_spark.operators.spatial import (
     extract_poly_stats, haversine_sql, knn_join, point_in_polygon_join)
 from gdal2mbtiles_spark.sources.pages import (pages_sql, synth_pages,
@@ -51,15 +49,21 @@ KNN_N = 10_000     # points for the kNN query
 KNN_Q = 100        # kNN query points
 
 
+def _burn_pyramid(spark: SparkSession, n_pages: int,
+                  min_resolution: int) -> tuple[DataFrame, DataFrame]:
+    """(images, map) of n_pages geocoded pages burned at BURN_Z, over
+    levels BURN_Z..min_resolution.  Only tile ids are read, so the
+    null renderer skips the PNG encode."""
+    pages = with_geo(synth_pages(spark, n_pages))
+    return sparse_pyramid_rendered(
+        spark, pixel_histogram(pages, BURN_Z), BURN_Z, TouchRenderer(),
+        min_resolution=min_resolution)
+
+
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: pages -> geocode -> burn z5 -> pyramid z0-5 -> dedup;
-    returns per-zoom (tiles, distinct_images)."""
-    pages = with_geo(synth_pages(spark, 1_000), tile_z=BURN_Z)
-    tiles = burn_points(pages, z=BURN_Z)
-    meta = whole_world_raster_meta(256 * (1 << BURN_Z),
-                                   256 * (1 << BURN_Z))
-    levels = pyramid_tiles(spark, tiles, meta, min_resolution=0)
-    images, map_df = dedup_tiles(spark, union_levels(levels))
+    """Flagship: pages -> geocode -> burn z4 -> pyramid z0-4 with
+    dedup; returns per-zoom (tiles, distinct_images)."""
+    _images, map_df = _burn_pyramid(spark, 1_000, 0)
     return (map_df.groupBy("zoom_level")
             .agg(F.count("*").alias("n_tiles"),
                  F.countDistinct("tile_id").alias("n_distinct"))
@@ -108,28 +112,23 @@ def _q_text_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pyramid_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/U2: tile counts per pyramid level for the burn->downsample
-    chain; the oracle derives the same counts from distinct parent keys
-    (x>>k, y>>k) in SQL."""
-    pages = with_geo(synth_pages(spark, PYRAMID_N), tile_z=BURN_Z)
-    tiles = burn_points(pages, z=BURN_Z)
-    meta = whole_world_raster_meta(256 * (1 << BURN_Z),
-                                   256 * (1 << BURN_Z))
-    levels = pyramid_tiles(spark, tiles, meta, min_resolution=0)
-    return (union_levels(levels).groupBy("z")
+    """A2/U2: tile counts per level of the sparse burn pyramid (map
+    rows per zoom); the oracle derives the same counts from distinct
+    parent keys (x>>k, y>>k) in SQL."""
+    _images, map_df = _burn_pyramid(spark, PYRAMID_N, 0)
+    return (map_df.groupBy(F.col("zoom_level").alias("z"))
             .agg(F.count("*").alias("n_tiles")))
 
 
 def _q_tile_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: MD5 tile dedup over the burned native level — map rows vs
-    distinct images.  The oracle reproduces the dedup structurally:
-    a burned tile's 262KB buffer is fully determined by its lit-pixel
-    set {(ppx, ppy, alpha)}, so buffer-MD5 equality == equality of the
+    distinct images of the sparse pyramid run at its native level
+    only.  The oracle reproduces the dedup structurally: a burned
+    tile's 262KB canvas is fully determined by its lit-pixel set
+    {(ppx, ppy, alpha)}, so canvas-MD5 equality == equality of the
     ordered (ppx, ppy, alpha) list, which SQL computes by hashing
     string_agg(.. ORDER BY ppx, ppy) per tile (see oracle_sql)."""
-    pages = with_geo(synth_pages(spark, PYRAMID_N), tile_z=BURN_Z)
-    tiles = burn_points(pages, z=BURN_Z)
-    images, map_df = dedup_tiles(spark, tiles)
+    images, map_df = _burn_pyramid(spark, PYRAMID_N, BURN_Z)
     return spark.createDataFrame(
         [(map_df.count(), images.count())],
         "n_map bigint, n_images bigint")
@@ -350,12 +349,13 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7: raster->vector extract — pixel stats under polygons over
-    the burned native level."""
-    pages = with_geo(synth_pages(spark, PYRAMID_N), tile_z=BURN_Z)
-    tiles = burn_points(pages, z=BURN_Z)
+    """J7: raster->vector extract — stats of the burned native level's
+    lit pixels under polygons, a point-in-polygon join of the pixel
+    centres."""
+    pages = with_geo(synth_pages(spark, PYRAMID_N))
     polys = polygons_df(spark, 20)
-    return extract_poly_stats(tiles, polys, BURN_Z)
+    return extract_poly_stats(pixel_histogram(pages, BURN_Z), polys,
+                              BURN_Z)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -10,10 +10,7 @@ line:
 The headline metric follows BASELINE.md: tiles/sec for the full
 pyramid (burn -> downsample chain -> MD5 dedup -> PNG render), i.e.
 the reference's ~13 tiles/s single-machine workload re-expressed on
-Spark.  Scaling evidence (N vs 4N *executors*, per the north rule) is
-produced by BENCH/scaling.py, which invokes this file on
-local-cluster deployments at two executor counts
-(SPARK_GRAFT_EXECUTORS; see session.py).
+Spark.
 """
 
 from __future__ import annotations

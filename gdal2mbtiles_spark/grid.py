@@ -30,6 +30,9 @@ from .exceptions import UnalignedInputError
 
 # --- constants (constants.py:36,44-54 in the reference) -----------------
 TILE_SIDE = 256  # pixels per tile edge
+# the engine's native tile relation: one TMS tile per row, px the raw
+# TILE_SIDE x TILE_SIDE RGBA buffer
+TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
 WGS84_SEMI_MAJOR = 6378137.0
 EPSG_WEB_MERCATOR = 3857
 EPSG_WGS84 = 4326

@@ -16,9 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..grid import TILE_SIDE
-
-TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
+from ..grid import TILE_SCHEMA
 
 
 def extract_band(tiles: DataFrame, band: int, bands: int = 4

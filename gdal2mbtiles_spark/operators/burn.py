@@ -1,36 +1,29 @@
-"""Raster burn (J7): vector points -> density tile pyramid input.
+"""Raster burn (J7): vector points -> per-pixel density weights.
 
-Two-phase, skew-proof by construction (north_rule: explicit skew
-handling at hot cells):
+A pure JVM groupBy on (tile_x, tile_y, pixel_x, pixel_y) with
+sum(weight), skew-proof by construction (north_rule: explicit skew
+handling at hot cells): map-side partial aggregation collapses hot
+cells *before* the shuffle, so a billion pages in one city shrink to
+<= 65,536 pixel rows per tile and no tile key can dominate a reducer
+(the histogram IS the salt — pixel keys fan the hot tile across
+combiners).
 
-1. **pixel histogram** — a pure JVM groupBy on
-   (tile_x, tile_y, pixel_x, pixel_y) with sum(weight).  Map-side
-   partial aggregation collapses hot cells *before* the shuffle: a
-   billion pages in one city shrink to <= 65,536 pixel rows per tile,
-   so no tile key can dominate a reducer (the histogram IS the salt —
-   pixel keys fan the hot tile across combiners).
-2. **scatter** — groupBy(z,x,y).applyInPandas paints the <=65,536
-   (px,py,w) rows into a 256x256 RGBA canvas (numpy fancy indexing).
-
-The output is the engine's native tiles relation, feeding the same
-pyramid/dedup/render chain as raster fixtures (SURVEY.md §1.1
-"Raster relation").
+The histogram is the burn's only output.  The sparse pyramid
+(operators.sparse) renders it into tiles, and extract
+(spatial.extract_poly_stats) joins its pixels to polygons directly;
+both read a pixel's alpha from ``heat_alpha``.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator, Optional
+from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cells import MAX_MERCATOR_LAT
 from ..grid import TILE_SIDE
-
-TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
 
 
 def _fractional_cols(lon: Column, lat: Column, z: int):
@@ -48,7 +41,7 @@ def _fractional_cols(lon: Column, lat: Column, z: int):
 def pixel_histogram(points: DataFrame, z: int,
                     weight: Optional[Column] = None,
                     lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Phase 1: per-pixel weights.
+    """Per-pixel weights.
 
     Output: (z, x, y, ppx, ppy, w) with x,y TMS tile keys and ppx/ppy
     the pixel offsets from the tile's top-left corner."""
@@ -74,51 +67,11 @@ def pixel_histogram(points: DataFrame, z: int,
                     "ppx", "ppy", "w"))
 
 
-def _heat_rgba(w: np.ndarray) -> np.ndarray:
-    """Deterministic heat ramp: white with alpha = min(255, 32*ceil(log2(1+w))
-    saturating ramp — monotone in w, exact integers only."""
-    v = np.minimum(255, (32.0 * np.log2(1.0 + w)).astype(np.int64))
-    v = np.maximum(v, 1).astype(np.uint8)  # any hit is visible
-    out = np.zeros((len(w), 4), dtype=np.uint8)
-    out[:, 0] = 255
-    out[:, 1] = 255
-    out[:, 2] = 255
-    out[:, 3] = v
-    return out
-
-
-def scatter_tiles(hist: DataFrame) -> DataFrame:
-    """Phase 2: paint per-pixel weights into RGBA tiles.
-
-    The kernel EXPANDS ~16-byte histogram rows into 262KB tiles
-    (~4 orders of magnitude), so AQE's byte-based coalescing of the
-    grouping exchange would serialize it onto one task; an explicit
-    hash repartition on the group keys pins the parallelism (it
-    satisfies applyInPandas' clustered-distribution requirement, so no
-    second exchange is added)."""
-    sc = hist.sparkSession.sparkContext
-    hist = hist.repartition(sc.defaultParallelism, "z", "x", "y")
-
-    def paint(pdf: pd.DataFrame) -> pd.DataFrame:
-        canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-        ppx = pdf["ppx"].to_numpy()
-        ppy = pdf["ppy"].to_numpy()
-        w = pdf["w"].to_numpy(dtype=np.float64)
-        canvas[ppy, ppx] = _heat_rgba(w)
-        return pd.DataFrame({
-            "z": [int(pdf["z"].iloc[0])],
-            "x": [int(pdf["x"].iloc[0])],
-            "y": [int(pdf["y"].iloc[0])],
-            "px": [canvas.tobytes()],
-        })
-
-    return hist.groupBy("z", "x", "y").applyInPandas(paint,
-                                                     schema=TILE_SCHEMA)
-
-
-def burn_points(points: DataFrame, z: int,
-                weight: Optional[Column] = None,
-                lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """points(lon, lat[, weight]) -> native-z density tiles."""
-    return scatter_tiles(pixel_histogram(points, z, weight=weight,
-                                         lon=lon, lat=lat))
+def heat_alpha(w: Column) -> Column:
+    """Heat ramp alpha of a pixel with weight ``w`` (burned pixels are
+    white): max(1, min(255, floor(32*log2(1+w)))) — monotone in w,
+    and any hit is visible."""
+    return F.greatest(
+        F.least(F.lit(255),
+                F.floor(F.lit(32.0) * F.log2(F.lit(1.0) + w))),
+        F.lit(1)).cast("int")

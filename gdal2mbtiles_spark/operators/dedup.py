@@ -136,7 +136,7 @@ def _grouped_pairs(long_df: DataFrame, key_cols: Tuple[str, str],
     # pinned partition count (REPARTITION_BY_NUM — never coalesced by
     # AQE) spreads the keys; it hash-clusters on (k0, k1), so the
     # window and groupBy below reuse it — still one exchange total.
-    # Same device as burn.scatter_tiles' expansion kernel.  The count
+    # Same device as sparse.render_contents' repartition.  The count
     # follows cluster width (defaultParallelism — parameterised, never
     # a constant): an interleaved A/B at bench scale measured 1×cores
     # / 2×cores / 4×cores at 1.2-1.6 / 1.6-2.0 / 2.2-2.8 s — extra

@@ -39,9 +39,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (BORDER_TILE_ID, BORDER_TILE_MD5,
                                  signed64_from_hex16)
-from ..grid import RasterMeta, TILE_SIDE, validate_resolutions
+from ..grid import (RasterMeta, TILE_SCHEMA, TILE_SIDE,
+                    validate_resolutions)
 
-TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
 QUAD_SCHEMA = "z int, x bigint, y bigint, q int, qpx binary"
 
 _HALF = TILE_SIDE // 2
@@ -193,7 +193,7 @@ def pyramid_tiles(spark: SparkSession, native: DataFrame,
     levels: Dict[int, DataFrame] = {}
     # buffer the native level FIRST: it heads every consumer chain
     # (union, downsample, upsample) and is typically the expensive
-    # kernel output (burn/scatter); without this each downstream action
+    # kernel output (warp, resample); without this each downstream action
     # recomputes it from scratch
     native = native.localCheckpoint(eager=True)
     if lo <= native_z <= hi:

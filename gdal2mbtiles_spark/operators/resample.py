@@ -41,7 +41,6 @@ from ..grid import RasterMeta, TILE_SIDE, XY
 from ..exceptions import UnalignedInputError
 
 BLOCK_SCHEMA = "bx int, by int, px binary"
-TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
 B = TILE_SIDE
 
 

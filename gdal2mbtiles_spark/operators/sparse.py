@@ -34,9 +34,9 @@ leave Python, and the images relation is distinct by construction.
 
 Equivalence to the generic buffer pipeline (operators.pyramid) is
 asserted in tests: identical tile ids and payloads level by level.
-This is the engine's scale path for burns (SURVEY.md §4 physical
-sketch, re-planned); the buffer pipeline remains for dense rasters
-(fixtures, warp outputs) where sparsity doesn't hold.
+This is the engine's only burn -> pyramid path (SURVEY.md §4
+physical sketch, re-planned); the buffer pipeline remains for dense
+rasters (fixtures, warp outputs) where sparsity doesn't hold.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import signed_low64
 from ..grid import TILE_SIDE
+from .burn import heat_alpha
 
 # --- md5 zero-prefix states (round 6) ---------------------------------------
 # The A1 contract hashes the FULL 256 KB canvas per unique tile, and the
@@ -85,14 +86,10 @@ def _md5_sparse(raw, first_row: int):
 def heat_pixels(hist: DataFrame, z: int) -> DataFrame:
     """Burn histogram -> sparse RGBA pixels at native z.
 
-    hist: (z, x(TMS), y(TMS), ppx, ppy, w).  The heat ramp is the
-    SQL form of burn._heat_rgba: white with
-    alpha = max(1, min(255, floor(32*log2(1+w))))."""
+    hist: (z, x(TMS), y(TMS), ppx, ppy, w).  Pixels are white, with
+    alpha from the burn's heat ramp (burn.heat_alpha)."""
     n = 1 << z
-    alpha = F.greatest(
-        F.least(F.lit(255),
-                F.floor(F.lit(32.0) * F.log2(F.lit(1.0) + F.col("w")))),
-        F.lit(1)).cast("int")
+    alpha = heat_alpha(F.col("w"))
     # global pixel coords are y-down: convert TMS tile y back
     gy = (F.lit(n - 1) - F.col("y")) * TILE_SIDE + F.col("ppy")
     gx = F.col("x") * TILE_SIDE + F.col("ppx")

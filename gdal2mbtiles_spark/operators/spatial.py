@@ -22,15 +22,14 @@ Design for 10^12 rows (north_rule):
   doubles.  Uniform data settles at ring 1-2; the loop is the scale
   path that replaces a quadratic cross join.
 
-- **extract** joins burned tiles to polygon covers at tile zoom and
-  reduces masked pixels per polygon (partial sums per (tile, poly),
-  final groupBy(poly)).
+- **extract** joins a burn's lit pixels to polygons through the PIP
+  join (one point per pixel centre) and sums them per polygon.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -39,7 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..cells import DEFAULT_RES, RES_SHIFT, X_SHIFT
+from ..functions.tilemath import cell_id
 from ..grid import TILE_SIDE
+from .burn import heat_alpha
 
 EARTH_RADIUS_KM = 6371.0088
 
@@ -368,8 +369,6 @@ def knn_join(points: DataFrame, queries: DataFrame,
     point outside the last ring — callers can filter or alert on
     them instead of silently receiving inexact neighbours (round-2
     ADVICE)."""
-    from ..functions.tilemath import cell_id
-
     spark = points.sparkSession
     if res is None:
         # a sampled estimate, NOT points.count(): the full-scan count
@@ -563,224 +562,49 @@ def knn_bruteforce(points: DataFrame, queries: DataFrame,
 
 # --- J7: raster -> vector extract ---------------------------------------------
 
-def _masked_tile_stats(alpha: np.ndarray, x: int, y: int, n: int,
-                       xs: np.ndarray, ys: np.ndarray
-                       ) -> Optional[Tuple[int, int]]:
-    """(lit_pixels, alpha_sum) of one tile's pixels inside the
-    polygon, or None.  Shared by both extract paths so they can never
-    diverge.  Pixel-center lon/lat from tile keys (TMS y-up); sinh
-    spelled as (e^t - e^-t)/2: the exact expression the SQL oracle
-    uses (DuckDB has no sinh builtin)."""
-    side = alpha.shape[0]
-    lit_mask = alpha > 0
-    if not lit_mask.any():
-        return None
-    yy, xx = np.nonzero(lit_mask)
-    lon = ((int(x) + (xx + 0.5) / side) / n) * 360.0 - 180.0
-    y_xyz = n - 1 - int(y)
-    yf = (y_xyz + (yy + 0.5) / side) / n
-    t = math.pi * (1.0 - 2.0 * yf)
-    lat = np.degrees(np.arctan((np.exp(t) - np.exp(-t)) / 2.0))
-    inside = ray_cast_contains(lon, lat, xs, ys)
-    if not inside.any():
-        return None
-    return int(inside.sum()), int(alpha[yy[inside], xx[inside]].sum())
+# pixel key = x << (z + 16) | y << 16 | ppy << 8 | ppx: 2z + 16 bits
+MAX_EXTRACT_Z = 23
 
 
-def extract_poly_stats(tiles: DataFrame, polys: DataFrame,
-                       z: int,
-                       broadcast_polys: Optional[bool] = None
-                       ) -> DataFrame:
+def extract_poly_stats(hist: DataFrame, polys: DataFrame,
+                       z: int) -> DataFrame:
     """Pixel stats under polygons: (poly_id, lit_pixels, alpha_sum).
 
-    tiles: the native relation at zoom z.  Polygons are covered at
-    cell res == z with the EXACT scanline cover (cells.polygon_cover_xy
-    — candidates ~ intersecting tiles, not the bbox product; round-3
-    VERDICT #2) so covers align 1:1 with tile keys; the masked
-    reduction is partial per (tile, poly) inside the kernel, final in
-    a tiny groupBy(poly_id).
+    hist: a burn's pixel histogram at zoom z (burn.pixel_histogram),
+    one row per lit pixel.  Raster pixels join polygons directly,
+    without painting tiles first (Raptor, VLDB 2019): each lit pixel
+    becomes a point at its pixel centre carrying its heat alpha, and
+    point_in_polygon_join classifies it — with that join's own
+    broadcast-or-shuffle choice, so polys follow its contract
+    (poly_id, xs, ys, cells at DEFAULT_RES).
 
-    broadcast_polys mirrors point_in_polygon_join: True collects the
-    polygon vertices driver-side and broadcasts id-only covers
-    (dimension side).  False is the 10^6-polygon path, fully
-    distributed and vertex-deduplicated (round-3 VERDICT #1): a
-    mapInPandas kernel over polys emits id-only (poly_id, x, y)
-    covers; tiles equi-join them on the tile key; a SHRINK kernel
-    reduces each candidate to its zlib'd alpha plane (<= 64 KiB dense,
-    ~KBs for typical burned tiles — the 262 KiB RGBA buffer never
-    re-shuffles) and drops unlit candidates; one equi-join on poly_id
-    then attaches the vertex arrays exactly once per surviving
-    candidate, so shuffle volume is |covers| + |lit candidates| +
-    |vertices| instead of |covers| x |vertices|.
-
-    None (default) auto-selects from a narrow bbox tile-range estimate
-    over polys — no dependency on a precomputed 'cells' column, which
-    neither path reads (round-3 ADVICE)."""
-    import zlib
-
-    from ..cells import polygon_cover_xy
-    from ..functions.tilemath import tile_x, tile_y_xyz
-    from .pyramid import _broadcast_threshold
-
-    spark = tiles.sparkSession
-    n = 1 << z
-
-    # the shared slippy tile math (functions/tilemath): a local copy
-    # of the floor+clamp formula here could silently diverge from the
-    # one the rest of the engine and the SQL oracle use
-    def _tx(lon: Column) -> Column:
-        return tile_x(lon, z)
-
-    def _ty_xyz(lat: Column) -> Column:
-        return tile_y_xyz(lat, z)
-
-    # preserve the input id type end-to-end (bigint/string ids must
-    # not be narrowed to int32 — same contract as the PIP join)
-    poly_t = polys.schema["poly_id"].dataType.simpleString()
-
-    if broadcast_polys is None:
-        # upper-bound cover count from the bbox tile ranges (the
-        # scanline cover is a subset); vertex count from the arrays
-        nx = _tx(F.array_max("xs")) - _tx(F.array_min("xs")) + 1
-        ny = _ty_xyz(F.array_min("ys")) - _ty_xyz(F.array_max("ys")) + 1
-        est = polys.select(
-            F.sum(nx * ny).alias("nc"),
-            F.sum(F.size("xs")).alias("nv")).first()
-        est_bytes = ((est["nc"] or 0) * _COVER_ROW_BYTES
-                     + (est["nv"] or 0) * 2 * _VERT_BYTES)
-        broadcast_polys = est_bytes < _broadcast_threshold(spark)
-
-    if not broadcast_polys:
-        def cover_kernel(batches: Iterator[pd.DataFrame]
-                         ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pid_arr = pdf["poly_id"].to_numpy()
-                ids, cxs, cys = [], [], []
-                for i, (xs, ys) in enumerate(zip(pdf["xs"],
-                                                 pdf["ys"])):
-                    cx, cy = polygon_cover_xy(
-                        np.asarray(xs, np.float64),
-                        np.asarray(ys, np.float64), z)
-                    ids.append(np.repeat(pid_arr[i:i + 1], len(cx)))
-                    cxs.append(cx)
-                    cys.append(n - 1 - cy)          # TMS flip
-                if not ids:
-                    continue
-                yield pd.DataFrame({
-                    "poly_id": np.concatenate(ids),
-                    "x": np.concatenate(cxs),
-                    "y": np.concatenate(cys)})
-
-        cover = polys.select("poly_id", "xs", "ys").mapInPandas(
-            cover_kernel,
-            schema=f"poly_id {poly_t}, x bigint, y bigint")
-        cand = tiles.join(cover, ["x", "y"])
-
-        def shrink(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-            side = TILE_SIDE
-            for pdf in batches:
-                pids, oxs, oys, planes = [], [], [], []
-                for poly_id, x, y, buf in zip(pdf["poly_id"], pdf["x"],
-                                              pdf["y"], pdf["px"]):
-                    alpha = np.frombuffer(bytes(buf), np.uint8).reshape(
-                        side, side, 4)[:, :, 3]
-                    if not alpha.any():
-                        continue
-                    pids.append(poly_id)
-                    oxs.append(int(x))
-                    oys.append(int(y))
-                    planes.append(zlib.compress(
-                        np.ascontiguousarray(alpha).tobytes(), 1))
-                if pids:
-                    yield pd.DataFrame({
-                        "poly_id": pd.Series(
-                            pids, dtype=pdf["poly_id"].dtype),
-                        "x": pd.Series(oxs, dtype="int64"),
-                        "y": pd.Series(oys, dtype="int64"),
-                        "az": planes})
-
-        summ = cand.mapInPandas(
-            shrink,
-            schema=f"poly_id {poly_t}, x bigint, y bigint, az binary")
-        enriched = summ.join(polys.select("poly_id", "xs", "ys"),
-                             "poly_id")
-
-        def reduce_batch(batches: Iterator[pd.DataFrame]
-                         ) -> Iterator[pd.DataFrame]:
-            side = TILE_SIDE
-            for pdf in batches:
-                pids, lits, asums = [], [], []
-                for poly_id, x, y, az, xs, ys in zip(
-                        pdf["poly_id"], pdf["x"], pdf["y"], pdf["az"],
-                        pdf["xs"], pdf["ys"]):
-                    alpha = np.frombuffer(
-                        zlib.decompress(bytes(az)),
-                        np.uint8).reshape(side, side)
-                    st = _masked_tile_stats(
-                        alpha, int(x), int(y), n,
-                        np.asarray(xs, np.float64),
-                        np.asarray(ys, np.float64))
-                    if st is None:
-                        continue
-                    pids.append(poly_id)
-                    lits.append(st[0])
-                    asums.append(st[1])
-                yield pd.DataFrame(
-                    {"poly_id": pd.Series(
-                        pids, dtype=pdf["poly_id"].dtype),
-                     "lit_pixels": pd.Series(lits, dtype="int64"),
-                     "alpha_sum": pd.Series(asums, dtype="int64")})
-
-        partial = enriched.mapInPandas(
-            reduce_batch,
-            schema=f"poly_id {poly_t}, lit_pixels bigint, "
-                   f"alpha_sum bigint")
-    else:
-        rows = []
-        verts: Dict[object, Tuple[np.ndarray, np.ndarray]] = {}
-        for r in polys.select("poly_id", "xs", "ys").collect():
-            p = r["poly_id"]
-            xs, ys = np.array(r["xs"]), np.array(r["ys"])
-            verts[p] = (xs, ys)
-            cx, cy = polygon_cover_xy(xs, ys, z)
-            rows.extend((p, int(a), int(n - 1 - b))        # TMS flip
-                        for a, b in zip(cx, cy))
-        cover = spark.createDataFrame(
-            rows, f"poly_id {poly_t}, x bigint, y bigint")
-        bverts = spark.sparkContext.broadcast(verts)
-        cand = tiles.join(F.broadcast(cover), ["x", "y"])
-
-        def reduce_broadcast(batches: Iterator[pd.DataFrame]
-                             ) -> Iterator[pd.DataFrame]:
-            side = TILE_SIDE
-            for pdf in batches:
-                pids, lits, asums = [], [], []
-                for poly_id, x, y, buf in zip(pdf["poly_id"], pdf["x"],
-                                              pdf["y"], pdf["px"]):
-                    alpha = np.frombuffer(bytes(buf), np.uint8).reshape(
-                        side, side, 4)[:, :, 3]
-                    xs, ys = bverts.value[
-                        poly_id.item() if hasattr(poly_id, "item")
-                        else poly_id]
-                    st = _masked_tile_stats(alpha, int(x), int(y), n,
-                                            xs, ys)
-                    if st is None:
-                        continue
-                    pids.append(poly_id)
-                    lits.append(st[0])
-                    asums.append(st[1])
-                yield pd.DataFrame(
-                    {"poly_id": pd.Series(
-                        pids, dtype=pdf["poly_id"].dtype),
-                     "lit_pixels": pd.Series(lits, dtype="int64"),
-                     "alpha_sum": pd.Series(asums, dtype="int64")})
-
-        partial = cand.mapInPandas(
-            reduce_broadcast,
-            schema=f"poly_id {poly_t}, lit_pixels bigint, "
-                   f"alpha_sum bigint")
-
-    return (partial.groupBy("poly_id")
-            .agg(F.sum("lit_pixels").alias("lit_pixels"),
-                 F.sum("alpha_sum").alias("alpha_sum")))
+    The pixel key packs (x, y, ppx, ppy) into a BIGINT, so it is the
+    same on every recomputation of the plan; z > MAX_EXTRACT_Z raises
+    ValueError."""
+    if z > MAX_EXTRACT_Z:
+        raise ValueError(f"z {z} exceeds the packed pixel-key limit "
+                         f"{MAX_EXTRACT_Z}")
+    n = float(1 << z)
+    side = float(TILE_SIDE)
+    x = F.col("x")
+    y_xyz = F.lit((1 << z) - 1) - F.col("y")            # TMS flip
+    # pixel centre in the operation order of the SQL oracle; sinh is
+    # spelled (e^t - e^-t)/2 there because DuckDB has no sinh
+    lon = ((x + (F.col("ppx") + 0.5) / side) / n) * 360.0 - 180.0
+    t = F.lit(math.pi) * (1.0 - 2.0 * ((y_xyz + (F.col("ppy") + 0.5)
+                                        / side) / n))
+    lat = F.degrees(F.atan((F.exp(t) - F.exp(-t)) / 2.0))
+    key = (F.shiftleft(x, z + 16)
+           .bitwiseOR(F.shiftleft(F.col("y"), 16))
+           .bitwiseOR(F.shiftleft(F.col("ppy").cast("long"), 8))
+           .bitwiseOR(F.col("ppx").cast("long")))
+    pixels = (hist.select(key.alias("_pix"), lon.alias("lon"),
+                          lat.alias("lat"),
+                          heat_alpha(F.col("w")).alias("alpha"))
+              .withColumn("cell", cell_id(F.col("lon"), F.col("lat"),
+                                          DEFAULT_RES)))
+    hits = point_in_polygon_join(pixels, polys, point_id="_pix")
+    return (hits.join(pixels.select("_pix", "alpha"), "_pix")
+            .groupBy("poly_id")
+            .agg(F.count("*").alias("lit_pixels"),
+                 F.sum("alpha").cast("long").alias("alpha_sum")))

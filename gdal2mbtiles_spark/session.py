@@ -43,53 +43,9 @@ def get_spark(cores: Optional[int] = None,
                                     if pypath else pkg_root)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    # Executor-isolated mode (north_rule: N vs 4N *executors*):
-    # SPARK_GRAFT_EXECUTORS=E runs a real multi-executor deployment in
-    # one box — local-cluster[E, cores/E, mem] spawns E separate
-    # executor JVMs (own heap, GC, python workers), the sandbox
-    # stand-in for E cluster nodes.  Per-executor memory is constant
-    # across E (adding nodes adds memory, as on a real cluster).
-    n_execs = int(os.environ.get("SPARK_GRAFT_EXECUTORS", "0"))
-    if n_execs > 0:
-        per_exec = max(cores // n_execs, 1)
-        if per_exec * n_execs != cores:
-            # a non-divisible split silently drops task slots while
-            # parallelism/shuffle partitions stay sized to the nominal
-            # cores — skewing the N-vs-4N ratios the harness measures
-            raise ValueError(
-                f"SPARK_GRAFT_CPUS={cores} not divisible by "
-                f"SPARK_GRAFT_EXECUTORS={n_execs}")
-        exec_mem_mb = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_MB",
-                                         "12288"))
-        builder = (
-            SparkSession.builder
-            .master(f"local-cluster[{n_execs},{per_exec},{exec_mem_mb}]")
-            .appName(app)
-            .config("spark.executor.memory", f"{exec_mem_mb}m")
-            # ship the package to executor python workers
-            .config("spark.executorEnv.PYTHONPATH",
-                    os.environ.get("PYTHONPATH", ""))
-        )
-        if os.environ.get("SPARK_GRAFT_CAP_PROCS") == "1":
-            builder = builder.config(
-                "spark.executor.extraJavaOptions",
-                f"-XX:ActiveProcessorCount={2 * per_exec}")
-    else:
-        builder = (
-            SparkSession.builder.master(f"local[{cores}]")
-            .appName(app)
-        )
-        # Scaling-evidence fairness (BENCH/scaling.py sets this): cap
-        # the JVM's visible processors at 2*cores (one JVM task thread
-        # + one python worker per task) so a local[4] leg on a 32-CPU
-        # host can't borrow idle CPUs for GC/JIT/compression that a
-        # real 4-core executor would not have.
-        if os.environ.get("SPARK_GRAFT_CAP_PROCS") == "1":
-            builder = builder.config(
-                "spark.driver.extraJavaOptions",
-                f"-XX:ActiveProcessorCount={2 * cores}")
     builder = (
-        builder
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")

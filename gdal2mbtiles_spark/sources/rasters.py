@@ -23,9 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import RasterMeta, TILE_SIDE, whole_world_raster_meta
-
-TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
+from ..grid import (RasterMeta, TILE_SCHEMA, TILE_SIDE,
+                    whole_world_raster_meta)
 
 
 def gradient_pixels(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:

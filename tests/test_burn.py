@@ -1,23 +1,45 @@
-"""Burn operator tests (J7): pixel histogram + scatter."""
+"""Burn operator tests (J7): pixel histogram rendered by the sparse
+pyramid."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from gdal2mbtiles_spark.operators.burn import (burn_points,
-                                               pixel_histogram)
-from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
-                                                  downsample_level)
+from gdal2mbtiles_spark.operators.burn import pixel_histogram
+from gdal2mbtiles_spark.operators.sparse import sparse_pyramid_rendered
+from gdal2mbtiles_spark.renderers import PngRenderer, decode_png_rgba
 from gdal2mbtiles_spark.sources.pages import synth_pages, with_geo
+
+
+def _burn(spark, pts, z, min_resolution=None):
+    """(images, map) of ``pts`` burned at z, levels z..min_resolution
+    (native level only by default)."""
+    return sparse_pyramid_rendered(
+        spark, pixel_histogram(pts, z=z), z, PngRenderer(compression=1),
+        min_resolution=z if min_resolution is None else min_resolution)
+
+
+def _native_canvases(spark, pts, z):
+    """{(x, y): decoded RGBA canvas} of the native level."""
+    images, map_df = _burn(spark, pts, z)
+    data = {r["tile_id"]: bytes(r["tile_data"])
+            for r in images.collect()}
+    return {(r["tile_column"], r["tile_row"]):
+            decode_png_rgba(data[r["tile_id"]])
+            for r in map_df.collect()}
+
+
+def _rows(images, map_df):
+    return ({(r["tile_id"], r["tile_hex"], bytes(r["tile_data"]))
+             for r in images.collect()},
+            {tuple(r) for r in map_df.collect()})
 
 
 def test_single_point_single_pixel(spark):
     pts = spark.createDataFrame([(0.1, 0.1)], "lon double, lat double")
-    tiles = burn_points(pts, z=2).collect()
-    assert len(tiles) == 1
-    t = tiles[0]
+    tiles = _native_canvases(spark, pts, z=2)
     # lon/lat slightly NE of center: XYZ tile (2,1) -> TMS (2, 2)
-    assert (t["z"], t["x"], t["y"]) == (2, 2, 2)
-    arr = np.frombuffer(bytes(t["px"]), np.uint8).reshape(256, 256, 4)
+    assert list(tiles) == [(2, 2)]
+    arr = tiles[(2, 2)]
     nz = np.argwhere(arr[:, :, 3] > 0)
     assert len(nz) == 1
     # the hit pixel is near the tile's bottom-left (just past center)
@@ -29,10 +51,9 @@ def test_weights_accumulate(spark):
     # 300 identical points -> one pixel with alpha from w=300
     pts = spark.createDataFrame([(10.0, 20.0)] * 300,
                                 "lon double, lat double")
-    tiles = burn_points(pts, z=1).collect()
+    tiles = _native_canvases(spark, pts, z=1)
     assert len(tiles) == 1
-    arr = np.frombuffer(bytes(tiles[0]["px"]), np.uint8).reshape(
-        256, 256, 4)
+    arr = next(iter(tiles.values()))
     alphas = arr[arr[:, :, 3] > 0][:, 3]
     assert len(alphas) == 1
     want = min(255, int(32 * np.log2(1.0 + 300.0)))
@@ -56,18 +77,18 @@ def test_histogram_counts(spark):
 
 def test_burn_feeds_pyramid_and_dedup(spark):
     pts = with_geo(synth_pages(spark, 1000), tile_z=2)
-    tiles = burn_points(pts, z=2)
-    parents = downsample_level(tiles)
-    assert parents.count() <= 4
-    images, map_df = dedup_tiles(spark, tiles)
-    assert images.count() <= map_df.count() == tiles.count()
+    images, map_df = _burn(spark, pts, z=2, min_resolution=1)
+    per_z = {r["zoom_level"]: r["count"]
+             for r in map_df.groupBy("zoom_level").count().collect()}
+    assert per_z[1] <= 4
+    n_native = pts.select("tile_x", "tile_y").distinct().count()
+    assert per_z[2] == n_native
+    assert images.count() <= map_df.count()
 
 
 def test_determinism_across_parallelism(spark):
     # identical output regardless of partitioning (N vs 4N invariance)
     pts = with_geo(synth_pages(spark, 500), tile_z=3)
-    a = burn_points(pts.repartition(2), z=3)
-    b = burn_points(pts.repartition(16), z=3)
-    da = {(r["z"], r["x"], r["y"]): bytes(r["px"]) for r in a.collect()}
-    db = {(r["z"], r["x"], r["y"]): bytes(r["px"]) for r in b.collect()}
-    assert da == db
+    a = _rows(*_burn(spark, pts.repartition(2), z=3, min_resolution=0))
+    b = _rows(*_burn(spark, pts.repartition(16), z=3, min_resolution=0))
+    assert a == b

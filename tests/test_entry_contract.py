@@ -12,10 +12,9 @@ SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# the kernel-heavy pipeline queries are covered 1:1 in test_pyramid /
-# test_spatial; exclude them here to keep the contract sweep fast
-SLOW = {"pyramid_tile_counts", "knn_join",
-        "extract_poly_stats", "pip_join"}
+# the join-heavy spatial queries are covered 1:1 in test_spatial;
+# exclude them here to keep the contract sweep fast
+SLOW = {"knn_join", "pip_join"}
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +58,15 @@ def test_oracle_keys_subset_of_queries():
 def test_query_matches_oracle(spark, duck, name):
     sdf = entry.queries()[name](spark, SF_DIR)
     _assert_match(sdf, duck, entry.oracle_sql()[name], name)
+
+
+def test_entry_per_zoom_summary(spark):
+    """The flagship pipeline's per-zoom (tiles, distinct images):
+    1,000 pages burned at z4 light 225 of the 256 native tiles and
+    every tile of levels 0..3; no two tiles look alike."""
+    rows = [tuple(r) for r in entry.entry(spark).collect()]
+    assert rows == [(0, 1, 1), (1, 4, 4), (2, 16, 16), (3, 64, 64),
+                    (4, 225, 225)]
 
 
 def test_ann_lsh_recall(spark):

@@ -1,13 +1,13 @@
 """Sparse relational pyramid: equivalence with the buffer pipeline."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from gdal2mbtiles_spark.functions.hashing import tile_id_of_bytes
-from gdal2mbtiles_spark.grid import whole_world_raster_meta
-from gdal2mbtiles_spark.operators.burn import (burn_points,
-                                               pixel_histogram)
+from gdal2mbtiles_spark.grid import TILE_SCHEMA, whole_world_raster_meta
+from gdal2mbtiles_spark.operators.burn import pixel_histogram
 from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
                                                   pyramid_tiles,
                                                   render_images,
@@ -44,11 +44,28 @@ def dup_hist(spark):
         rows, "z int, x bigint, y bigint, ppx int, ppy int, w double")
 
 
+def _painted_tiles(spark, hist):
+    """Dense burn tiles painted on the driver: each histogram pixel
+    white with the heat-ramp alpha, in an otherwise zero canvas."""
+    canvases = {}
+    for r in hist.collect():
+        key = (r["z"], r["x"], r["y"])
+        if key not in canvases:
+            canvases[key] = np.zeros((256, 256, 4), np.uint8)
+        alpha = max(1, min(255, int(32.0 * np.log2(1.0 + r["w"]))))
+        canvases[key][r["ppy"], r["ppx"]] = (255, 255, 255, alpha)
+    return spark.createDataFrame(pd.DataFrame({
+        "z": [k[0] for k in canvases], "x": [k[1] for k in canvases],
+        "y": [k[2] for k in canvases],
+        "px": [c.tobytes() for c in canvases.values()]}),
+        schema=TILE_SCHEMA)
+
+
 def _buffered_dedup(spark, hist, z, min_resolution):
-    """The buffer pipeline: burn -> pyramid -> dedup (raw payloads)."""
-    from gdal2mbtiles_spark.operators.burn import scatter_tiles
+    """The buffer pipeline: painted tiles -> pyramid -> dedup (raw
+    payloads)."""
     meta = whole_world_raster_meta(256 * (1 << z), 256 * (1 << z))
-    levels = pyramid_tiles(spark, scatter_tiles(hist), meta,
+    levels = pyramid_tiles(spark, _painted_tiles(spark, hist), meta,
                            min_resolution=min_resolution)
     return dedup_tiles(spark, union_levels(levels))
 

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gdal2mbtiles_spark.operators.burn import burn_points
+from gdal2mbtiles_spark.operators.burn import pixel_histogram
 from gdal2mbtiles_spark.operators.spatial import (
     extract_poly_stats, knn_bruteforce, knn_join,
     point_in_polygon_join, ray_cast_contains)
@@ -252,32 +252,48 @@ class TestKnn:
         assert after <= before + 1
 
 
+def _extract_both_paths(spark, hist, polys, z):
+    """extract_poly_stats rows as sets, once on PIP's auto-selected
+    broadcast path and once under a tiny broadcast threshold, which
+    makes PIP take its shuffle path; asserts which path each ran."""
+    def run():
+        out = extract_poly_stats(hist, polys, z)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return ({(r["poly_id"], r["lit_pixels"], r["alpha_sum"])
+                 for r in out.collect()}, plan)
+
+    broadcast, plan = run()
+    assert "MapInPandas" not in plan, plan[:2000]
+    conf = spark.conf
+    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    try:
+        shuffle, plan = run()
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "MapInPandas" in plan, plan[:2000]
+    return broadcast, shuffle
+
+
 class TestExtract:
     def test_shuffle_path_matches_broadcast(self, spark, geo_pages):
-        # distributed covers (sequence+explode bbox tiling, verts
-        # riding the rows, no driver collect) must equal the
-        # broadcast path exactly — the 10^6-polygon J7 path
+        # extract rides PIP's path choice: the shuffle path (id-only
+        # covers, no driver collect — the 10^6-polygon J7 path) must
+        # equal the broadcast path exactly
         z = 4
-        tiles = burn_points(geo_pages, z=z)
-        polys = polygons_df(spark, 20)
-        a = {r["poly_id"]: (r["lit_pixels"], r["alpha_sum"])
-             for r in extract_poly_stats(
-                 tiles, polys, z, broadcast_polys=True).collect()}
-        b = {r["poly_id"]: (r["lit_pixels"], r["alpha_sum"])
-             for r in extract_poly_stats(
-                 tiles, polys, z, broadcast_polys=False).collect()}
+        a, b = _extract_both_paths(spark, pixel_histogram(geo_pages, z),
+                                   polygons_df(spark, 20), z)
         assert a == b and len(a) > 0
 
     def test_alpha_sum_matches_point_side(self, spark, geo_pages):
         z = 4
-        tiles = burn_points(geo_pages, z=z)
         polys = polygons_df(spark, 20)
         got = {r["poly_id"]: (r["lit_pixels"], r["alpha_sum"])
-               for r in extract_poly_stats(tiles, polys, z).collect()}
+               for r in extract_poly_stats(
+                   pixel_histogram(geo_pages, z=z), polys, z).collect()}
         assert got, "no polygon covered any lit pixel"
         # oracle: recompute per-pixel heat from the histogram and
         # classify pixel centers in numpy
-        from gdal2mbtiles_spark.operators.burn import pixel_histogram
         hist = pixel_histogram(geo_pages, z=z).collect()
         n = 1 << z
         lons, lats, ws = [], [], []
@@ -302,6 +318,13 @@ class TestExtract:
                 want[p] = (int(inside.sum()),
                            int(alpha[inside].sum()))
         assert got == want
+
+
+    def test_pixel_key_zoom_bound(self, spark, geo_pages):
+        # the packed pixel key holds 2z + 16 bits
+        with pytest.raises(ValueError):
+            extract_poly_stats(pixel_histogram(geo_pages, z=24),
+                               polygons_df(spark, 2), 24)
 
 
 class TestAutoSalt:
@@ -454,20 +477,14 @@ class TestIdTypeAndCellExactness:
         assert all(p.startswith("poly-") for _, p in a)
 
     def test_extract_bigint_ids_both_paths(self, spark, geo_pages):
-        # extract hardcoded poly_id to int32; 64-bit ids overflowed
-        # np.full / the int schema — both paths must preserve bigint
-        from gdal2mbtiles_spark.operators.burn import burn_points
+        # extract once hardcoded poly_id to int32; 64-bit ids
+        # overflowed — both PIP paths must preserve bigint
         z = 6
         polys = polygons_df(spark, 8).withColumn(
             "poly_id",
             (F.col("poly_id").cast("bigint")
              + F.lit(3_000_000_000).cast("bigint")))
-        tiles = burn_points(geo_pages, z)
-        a = {(r["poly_id"], r["lit_pixels"], r["alpha_sum"])
-             for r in extract_poly_stats(
-                 tiles, polys, z=z, broadcast_polys=True).collect()}
-        b = {(r["poly_id"], r["lit_pixels"], r["alpha_sum"])
-             for r in extract_poly_stats(
-                 tiles, polys, z=z, broadcast_polys=False).collect()}
+        a, b = _extract_both_paths(spark, pixel_histogram(geo_pages, z),
+                                   polys, z)
         assert a == b and len(a) > 0
         assert all(p >= 3_000_000_000 for p, _, _ in a)
