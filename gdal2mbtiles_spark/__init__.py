@@ -18,7 +18,10 @@ __version__ = "0.1.0"
 
 # Every Python worker imports this package when it unpickles one of the
 # engine's UDFs; from then on its tasks skip re-reading unchanged zip
-# archives (pyspark.zip, --py-files) before each task.
-from gdal2mbtiles_spark import _zipcache
+# archives (pyspark.zip, --py-files) before each task, and after its
+# first task the full collection between tasks skips the objects that
+# were alive then.
+from gdal2mbtiles_spark import _workergc, _zipcache
 
 _zipcache.install()
+_workergc.install()

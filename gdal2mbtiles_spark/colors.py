@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from itertools import groupby
 from operator import itemgetter
-from typing import Dict, List, Optional, Tuple, Union
+from typing import List, Optional, Tuple, Union
 
 import numpy as np
 

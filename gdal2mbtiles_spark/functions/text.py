@@ -108,12 +108,12 @@ FP_K = 4
 def fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fp0..fp3): bottom-k sketch of 3-gram shingle hashes
     (winnowing-style document fingerprint)."""
-    from ..operators.dedup import SHINGLES_SPARK, _h60_spark
+    from ..operators.dedup import SHINGLES_SPARK, _h60_spark, with_tokens
     hashes = (f"array_sort(transform({SHINGLES_SPARK}, "
               f"s -> {_h60_spark('s', 'fp')}))")
     # try_element_at: docs with fewer than FP_K shingles yield NULL
     # fps, matching DuckDB's out-of-bounds list indexing
-    return docs.select("doc_id", *[
+    return with_tokens(docs).select("doc_id", *[
         F.expr(f"try_element_at({hashes}, {i + 1})").alias(f"fp{i}")
         for i in range(FP_K)])
 

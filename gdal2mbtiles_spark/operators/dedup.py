@@ -60,18 +60,27 @@ TOKS_DUCK = "string_split(lower(text), ' ')"
 # n-token doc; docs with fewer than 3 tokens yield an EMPTY array on
 # both engines (Spark's sequence(0, -1) would produce a descending
 # range whose element_at(t, 0) throws, so the short case is guarded
-# explicitly; DuckDB's range(0, n<=0) is already []).
+# explicitly; DuckDB's range(0, n<=0) is already []).  The Spark form
+# reads the ``_toks`` column of with_tokens: Catalyst does not share
+# work inside a lambda, so splitting the text inline re-split the whole
+# document for every shingle.
 SHINGLES_SPARK = (
     "(case when size({t}) >= 3 then "
     "transform(sequence(0, size({t}) - 3), "
     "i -> concat_ws(' ', element_at({t}, i + 1), "
     "element_at({t}, i + 2), element_at({t}, i + 3))) "
     "else cast(array() as array<string>) end)"
-).format(t=TOKS_SPARK)
+).format(t="_toks")
 SHINGLES_DUCK = (
     "list_transform(range(0, greatest(len({t}) - 2, 0)), "
     "i -> {t}[i + 1] || ' ' || {t}[i + 2] || ' ' || {t}[i + 3])"
 ).format(t=TOKS_DUCK)
+
+
+def with_tokens(docs: DataFrame) -> DataFrame:
+    """docs plus ``_toks``, each document split once (TOKS_SPARK) — a
+    projection Catalyst keeps, since SHINGLES_SPARK reads it 5 times."""
+    return docs.withColumn("_toks", F.expr(TOKS_SPARK))
 
 
 # --- exact dedup ---------------------------------------------------------------
@@ -98,8 +107,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     The shingle array is materialized ONCE per row (a projection
     boundary Catalyst won't inline 16x), then each signature is an
     array_min over per-salt rehashes of it."""
-    sh = docs.select("doc_id",
-                     F.expr(SHINGLES_SPARK).alias("_shingles"))
+    sh = with_tokens(docs).select(
+        "doc_id", F.expr(SHINGLES_SPARK).alias("_shingles"))
     return sh.select(
         "doc_id", F.array(*[F.expr(
             f"array_min(transform(_shingles, s -> "
@@ -338,7 +347,7 @@ def ngram_jaccard_pairs(docs: DataFrame,
     (doc_a, doc_b, jaccard).  Blocking on ``block_col`` bounds the
     quadratic pair space (at web scale the block is the LSH candidate
     set instead)."""
-    sh = docs.select(
+    sh = with_tokens(docs).select(
         "doc_id", F.col(block_col).alias("_blk"),
         F.expr(f"array_distinct({SHINGLES_SPARK})").alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"),
@@ -384,7 +393,7 @@ def lsh_jaccard_verify(docs: DataFrame,
     docs."""
     cand = minhash_lsh_pairs(docs, min_est_sim=min_est_sim,
                              band_cap=band_cap)
-    sh = docs.select(
+    sh = with_tokens(docs).select(
         "doc_id", F.expr(f"array_distinct({SHINGLES_SPARK})").alias("sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"),
                   F.col("sh").alias("sh_a"))

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import replace
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import RasterMeta, TILE_SIDE, XY
-from ..exceptions import UnalignedInputError
 
 BLOCK_SCHEMA = "bx int, by int, px binary"
 B = TILE_SIDE

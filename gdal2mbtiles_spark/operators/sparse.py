@@ -246,7 +246,7 @@ def pyramid_phase_contents(src: DataFrame, top: int,
             F.shiftright("gx", shift).alias("_ax"),
             F.shiftright("gy", shift).alias("_ay"))
     sc = src.sparkSession.sparkContext
-    # one partition per core: every Python task costs a fixed ~0.05 s
+    # one partition per core: every Python task costs a fixed ~0.004 s
     # of worker CPU (BENCH/python_task_cost.py, 4-core box), and the
     # kernel is only a lexsort and a shrink per level, so a single
     # wave has little task-duration spread to hide.
@@ -365,7 +365,7 @@ def render_contents(contents: DataFrame, renderer) -> DataFrame:
     content exchange into one task); the groupBy reuses that
     partitioning, so the only exchange carries content and owners.
     One partition per core: hashing spreads distinct contents evenly,
-    and each extra Python task costs ~0.05 s of fixed worker CPU
+    and each extra Python task costs ~0.004 s of fixed worker CPU
     (BENCH/python_task_cost.py, 4-core box)."""
     p = contents.sparkSession.sparkContext.defaultParallelism
     grouped = (contents.repartition(p, "content")

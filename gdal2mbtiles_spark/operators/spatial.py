@@ -14,13 +14,12 @@ Design for 10^12 rows (north_rule):
                       AND px < (x2-x1)*(py-y1)/(y2-y1) + x1
       inside = odd(sum(crosses))
 
-- **kNN** is an iterative bounded join: queries explode their cell
-  k-ring (Chebyshev disk) and equi-join points on cell; a window takes
-  the per-query top-k by haversine; a query is *settled* when its kth
-  distance is within the ring's guaranteed-covered radius (conservative
-  great-circle lower bound to the disk boundary), otherwise the ring
-  doubles.  Uniform data settles at ring 1-2; the loop is the scale
-  path that replaces a quadratic cross join.
+- **kNN** is one join in a fixed plan: one aggregate counts points per
+  cell, each query's ring of cells is sized once from those counts so
+  that it must hold the k nearest points, then one equi-join on cell
+  and one top-k per query.  A summary of one join input becomes a
+  per-query predicate on the other (*Pushing Data-Induced Predicates
+  Through Joins in Big-Data Clusters*, VLDB 2019).
 
 - **extract** joins a burn's lit pixels to polygons through the PIP
   join (one point per pixel centre) and sums them per polygon.
@@ -264,7 +263,7 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame,
             .select(point_id, "poly_id"))
 
 
-# --- J6: kNN over cell rings -------------------------------------------------
+# --- J6: kNN over per-query cell rings ---------------------------------------
 
 def _cell_xy(cell: Column, res: int) -> Tuple[Column, Column]:
     # X_SHIFT = 2^29: extract with exact integer bit ops.  A long/long
@@ -277,22 +276,14 @@ def _cell_xy(cell: Column, res: int) -> Tuple[Column, Column]:
     return x, y
 
 
-def _tile_edge_lon(x: Column, res: int) -> Column:
-    return x.cast("double") / F.lit(float(1 << res)) * 360.0 - 180.0
-
-
-def _tile_edge_lat(y: Column, res: int) -> Column:
-    """Latitude of the *top* edge of tile row y (y-down)."""
-    n = float(1 << res)
-    yf = y.cast("double") / F.lit(n)
-    return F.degrees(F.atan(
-        F.sinh(F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * yf))))
-
-
-# auto-res target: points per cell at the derived grid resolution.
-# ~2k keeps a ring-1 annulus scan around 10-20k candidate rows per
-# query (cheap) while typically satisfying k<=1000 in 1-2 rings.
-_KNN_TARGET_PER_CELL = 2000
+# res=None counts per cell at this res, then rolls up (_auto_knn_res)
+_KNN_BASE_RES = 9
+# broadcast bytes per non-empty cell: x, y, count and packed id
+_CELL_BYTES = 32
+# relative slack on the settle test, so a float rounding tie widens
+# the ring instead of settling it
+_SETTLE_SLACK = 1e-9
+_DEG_KM = math.pi / 180.0 * EARTH_RADIUS_KM
 
 
 def estimate_count(df: DataFrame, max_parts: int = 16) -> int:
@@ -306,8 +297,8 @@ def estimate_count(df: DataFrame, max_parts: int = 16) -> int:
     near-uniform (maxPartitionBytes splitting), so the
     scale-by-partition-count extrapolation is unbiased; when the
     relation has <= max_parts partitions the estimate is exact.  Only
-    order-of-magnitude accuracy is needed by the auto-res consumer:
-    _auto_knn_res quantizes by log4."""
+    order-of-magnitude accuracy is needed by its consumer, the IVF
+    list count in similarity.ann_topk_ivf."""
     # metadata first (round 6): a materialized cache (or any relation
     # the optimizer has exact statistics for) knows its row count —
     # zero tasks, zero python-serialized rows.  The bench/ivf inputs
@@ -332,212 +323,220 @@ def estimate_count(df: DataFrame, max_parts: int = 16) -> int:
     return int(round(sum(counts) * nparts / len(idxs)))
 
 
-def _auto_knn_res(n_points: int) -> int:
-    """Grid resolution from a points-count estimate: 4^res cells sized
-    so a cell holds ~_KNN_TARGET_PER_CELL points under a uniform
-    spread (round-3 VERDICT #5 — a fixed res=5 means ~10^8 points per
-    cell at 10^12 rows, exploding the ring join; and at sparse counts
-    a fine grid never settles early)."""
-    ratio = max(n_points, 1) / _KNN_TARGET_PER_CELL
-    if ratio <= 1:
-        return 1
-    return int(max(1, min(16, math.ceil(math.log(ratio, 4)))))
+def _cell_counts(points: DataFrame, queries: DataFrame, lon: str,
+                 lat: str, k_col: str, res: int, max_cells: int
+                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """(x, y, count) of every non-empty cell at ``res``, and the largest
+    k, from one JVM aggregate, collected: the queries join it as one
+    extra group at x = -1 whose max(k) is the answer, so the pair costs
+    one aggregate, not two.  More than ``max_cells`` non-empty cells
+    raise ValueError; the collect never reads past that bound."""
+    x, y = _cell_xy(cell_id(F.col(lon), F.col(lat), res), res)
+    counts = (points.select(x.alias("x"), y.alias("y"),
+                            F.lit(None).cast("int").alias("k"))
+              .unionByName(queries.select(
+                  F.lit(-1).cast("long").alias("x"),
+                  F.lit(-1).cast("long").alias("y"),
+                  F.col(k_col).cast("int").alias("k")))
+              .groupBy("x", "y")
+              .agg(F.count("*").alias("n"), F.max("k").alias("k")))
+    if 4 ** res > max_cells:
+        counts = counts.limit(max_cells + 2)
+    pdf = counts.toPandas()
+    ks, pdf = pdf[pdf["x"] < 0], pdf[pdf["x"] >= 0]
+    if len(pdf) > max_cells:
+        raise ValueError(
+            f"knn_join: more than {max_cells} non-empty cells at res "
+            f"{res} exceed the broadcast threshold "
+            f"(spark.sql.autoBroadcastJoinThreshold); pass a coarser res")
+    return (pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64),
+            pdf["n"].to_numpy(np.int64),
+            int(ks["k"].iloc[0]) if len(ks) else 0)
+
+
+def _auto_knn_res(cx: np.ndarray, cy: np.ndarray, cnt: np.ndarray,
+                  base: int, k: int
+                  ) -> Tuple[int, np.ndarray, np.ndarray, np.ndarray]:
+    """The finest res <= base whose non-empty cells hold k points on
+    average, with the counts rolled up to it: parent cell = (x >> d,
+    y >> d), the cell cell_id gives at base - d (tile_x/tile_y scale
+    by a power of two last, so the parent is exact).  A query inside
+    the data then finds its k points within a ring of 0-1, and a
+    coarser grid would only add candidates; with fewer than k points
+    in all, res 0 joins every query to every point."""
+    total = int(cnt.sum())
+    for d in range(base + 1):
+        keys, inv = np.unique(((cx >> d) << 32) | (cy >> d),
+                              return_inverse=True)
+        if total >= k * len(keys):
+            break
+    return (base - d, keys >> 32, keys & 0xFFFFFFFF,
+            np.bincount(inv, weights=cnt).astype(np.int64))
+
+
+def _edge_lon(x: np.ndarray, n: int) -> np.ndarray:
+    """Longitude of the west edge of column x (x may pass the
+    antimeridian: the ring box does not wrap)."""
+    return x / n * 360.0 - 180.0
+
+
+def _edge_lat(y: np.ndarray, n: int) -> np.ndarray:
+    """Latitude of the *top* edge of tile row y (y-down)."""
+    return np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * y / n))))
+
+
+def _farthest_km(qlon: float, qlat: float, qx: int, qy: int, r: int,
+                 n: int) -> float:
+    """Upper bound on the distance from the query to any point in its
+    ring r: the farthest point of the ring's lat/lon box.  At a fixed
+    latitude distance grows with |dlon|, so that point lies on the
+    box's farther meridian edge (dlon = 180 when the box spans every
+    longitude).  Along a meridian cos(distance) is a sinusoid in
+    latitude, so the farthest point is an end of the edge or, past
+    dlon = 90, its turning point tan(lat) = tan(qlat) / cos(dlon), the
+    point nearest the antipode.  Rows 0 and n-1 reach the poles
+    (cell_id clamps latitudes beyond the Mercator limit into them)."""
+    if 2 * r + 1 >= n:
+        dlon = 180.0
+    else:
+        dlon = max(qlon - _edge_lon(qx - r, n),
+                   _edge_lon(qx + r + 1, n) - qlon)
+    north = 90.0 if qy - r <= 0 else float(_edge_lat(qy - r, n))
+    south = -90.0 if qy + r >= n - 1 else float(_edge_lat(qy + r + 1, n))
+    phi, lam = math.radians(qlat), math.radians(dlon)
+    turn = math.degrees(math.atan(math.tan(phi) / math.cos(lam)))
+    lat2 = np.radians([north, south, min(max(turn, south), north)])
+    a = (np.sin((lat2 - phi) / 2) ** 2
+         + math.cos(phi) * np.cos(lat2) * math.sin(lam / 2) ** 2)
+    return float(2.0 * EARTH_RADIUS_KM
+                 * np.arcsin(np.sqrt(np.minimum(a, 1.0))).max())
+
+
+def _guard_km(qlon: float, qlat: float, qx: int, qy: int,
+              r: np.ndarray, n: int) -> np.ndarray:
+    """Great-circle LOWER bound on the distance from the query to any
+    point outside its ring r, per ring in ``r``.  Horizontal edges are
+    meridian segments: distance to the full meridian circle is
+    R * asin(sin(dLon) * cos(qlat)) — strictly below the parallel-arc
+    length dLon*cos(qlat) at high latitude, which would settle rings
+    too early.  Vertical edges are parallels: the meridian
+    arc R * radians(dLat) is exact.  A side clipped at the poles (or a
+    horizontal span wrapping the globe) is fully covered -> +inf."""
+    dlon = np.minimum(qlon - _edge_lon(qx - r, n),
+                      _edge_lon(qx + r + 1, n) - qlon)
+    horiz = np.where(2 * r + 1 >= n, np.inf, EARTH_RADIUS_KM * np.arcsin(
+        np.minimum(1.0, np.sin(np.radians(dlon))
+                   * math.cos(math.radians(qlat)))))
+    north = np.where(qy - r <= 0, np.inf,
+                     (_edge_lat(qy - r, n) - qlat) * _DEG_KM)
+    south = np.where(qy + r + 1 >= n, np.inf,
+                     (qlat - _edge_lat(qy + r + 1, n)) * _DEG_KM)
+    return np.minimum(horiz, np.minimum(north, south))
+
+
+def _ring(qlon: float, qlat: float, qx: int, qy: int, k: int,
+          cx: np.ndarray, cy: np.ndarray, cnt: np.ndarray,
+          n: int) -> np.ndarray:
+    """Mask over the non-empty cells (cx, cy, cnt) of the query's ring
+    R, which holds every point nearer than its k-th neighbour.
+
+    R0 is the smallest ring holding at least k points: the prefix sum
+    of the per-cell counts by Chebyshev distance from the query's cell
+    (x wraps, y does not).  The farthest point of ring R0 bounds the
+    k-th neighbour's distance from above, so R is the smallest ring
+    >= R0 whose settle guard reaches that bound.  Fewer than k points
+    in all: every cell."""
+    dx = np.abs(cx - qx)
+    cheb = np.maximum(np.minimum(dx, n - dx), np.abs(cy - qy))
+    held = np.cumsum(np.bincount(cheb, weights=cnt))
+    if held[-1] < k:
+        return np.ones(len(cx), dtype=bool)
+    r0 = int(np.searchsorted(held, k))
+    bound = _farthest_km(qlon, qlat, qx, qy, r0, n) * (1.0 + _SETTLE_SLACK)
+    rs = np.arange(r0, max(n // 2, qy, n - 1 - qy) + 1)
+    # the last ring covers the grid, so its guard is +inf
+    r = rs[np.argmax(_guard_km(qlon, qlat, qx, qy, rs, n) >= bound)]
+    return cheb <= r
 
 
 def knn_join(points: DataFrame, queries: DataFrame,
              res: Optional[int] = None,
              point_id: str = "url",
              lon: str = "lon", lat: str = "lat",
-             k_col: str = "k",
-             max_iters: int = 8) -> DataFrame:
+             k_col: str = "k") -> DataFrame:
     """k-nearest-neighbours:
     (query_id, rank, point_id, dist_km, settled).
 
     queries: (query_id, lon, lat, k).  points must carry lon/lat; the
-    cell at ``res`` is derived here.  res=None (default) derives the
-    grid from a partition-sampled row-count ESTIMATE of the points
-    side (estimate_count -> _auto_knn_res; never a full scan) —
-    results are exact at ANY res, the choice only sizes the per-ring
-    join.
-    Iterative ring expansion with a conservative settle guarantee
-    (module docstring).
+    cell at ``res`` is derived here.  Four steps, exact by construction
+    at any res: one JVM aggregate counts points per cell (_cell_counts);
+    an Arrow UDF over the queries sizes each query's ring once from the
+    broadcast counts (_ring) and emits one row per query and non-empty
+    ring cell; those rows broadcast-join the points on cell; a sorted
+    collect_list keeps each query's k nearest, ties broken by point id
+    as in knn_bruteforce.
 
-    ``settled`` is True for rows proven exact (the query satisfied
-    the great-circle settle guarantee, or its ring covered the whole
-    grid).  Rows emitted by the max_iters terminal flush carry
-    settled=False: they are best-effort top-k that MAY miss a closer
-    point outside the last ring — callers can filter or alert on
-    them instead of silently receiving inexact neighbours (round-2
-    ADVICE)."""
+    res=None counts at _KNN_BASE_RES (lowered until the cells fit the
+    broadcast threshold) and picks the grid from those counts and the
+    largest k (_auto_knn_res).  ``settled`` is always True."""
+    from .pyramid import _broadcast_threshold
+
     spark = points.sparkSession
+    max_cells = _broadcast_threshold(spark) // _CELL_BYTES
     if res is None:
-        # a sampled estimate, NOT points.count(): the full-scan count
-        # was a whole extra pass over the points table before the
-        # first ring join (round-4 VERDICT #4); log4 quantization in
-        # _auto_knn_res absorbs the sampling error, and any res gives
-        # exact results — it only sizes the per-ring join
-        res = _auto_knn_res(estimate_count(points))
+        base = _KNN_BASE_RES
+        while base > 0 and 4 ** base > max_cells:
+            base -= 1
+        *counts, k_max = _cell_counts(points, queries, lon, lat, k_col,
+                                      base, max_cells)
+        res, cx, cy, cnt = _auto_knn_res(*counts, base, k_max)
+    else:
+        cx, cy, cnt, _ = _cell_counts(points, queries, lon, lat, k_col,
+                                      res, max_cells)
     n = 1 << res
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(lon).alias("_plon"), F.col(lat).alias("_plat"),
-        cell_id(F.col(lon), F.col(lat), res).alias("_pcell"))
-    px_, py_ = _cell_xy(F.col("_pcell"), res)
-    pts = (pts.withColumn("_px", px_).withColumn("_py", py_)
-           .persist())
+    cells = spark.sparkContext.broadcast(
+        (cx, cy, cnt, res * RES_SHIFT + cx * X_SHIFT + cy))
 
-    qbase = queries.select(
+    def rings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cx, cy, cnt, packed = cells.value
+        for pdf in batches:
+            qs = zip(*(pdf[c].to_numpy() for c in
+                       ("_qlon", "_qlat", "_qx", "_qy", "_k")))
+            picks = [np.flatnonzero(_ring(qlon, qlat, qx, qy, k,
+                                          cx, cy, cnt, n))
+                     if k > 0 and len(cx) else np.empty(0, np.int64)
+                     for qlon, qlat, qx, qy, k in qs]
+            rows = np.repeat(np.arange(len(pdf)), [len(p) for p in picks])
+            out = pdf.iloc[rows][["query_id", "_qlon", "_qlat", "_k"]]
+            yield out.assign(_pcell=packed[np.concatenate(picks + [
+                np.empty(0, np.int64)])])
+
+    qcell = cell_id(F.col(lon), F.col(lat), res)
+    qx, qy = _cell_xy(qcell, res)
+    qid_t = queries.schema["query_id"].dataType.simpleString()
+    ring_cells = queries.select(
         "query_id", F.col(lon).alias("_qlon"), F.col(lat).alias("_qlat"),
-        F.col(k_col).alias("_k"),
-        cell_id(F.col(lon), F.col(lat), res).alias("_qcell"))
-    qx, qy = _cell_xy(F.col("_qcell"), res)
-    qbase = (qbase.withColumn("_qx", qx).withColumn("_qy", qy)
-             .persist())
-
-    # every persist is tracked and released after the result is
-    # materialized below; per-iteration localCheckpoint blocks are
-    # reclaimed by the ContextCleaner once their Python refs drop —
-    # a kNN call leaves no cached RDDs behind
-    cached = [pts, qbase]
-    # unpersist in finally: an executor failure mid-loop
-    # must not leak the cached full points projection for
-    # the session lifetime (the no-cache-leak invariant
-    # below holds on error paths too)
-    try:
-        _CAND_COLS = ["query_id", "_qlon", "_qlat", "_k", "_qx", "_qy",
-                      "_pid", "_dist"]
-        remaining = qbase
-        settled = []
-        carried = None        # prior top-k rows for still-unsettled queries
-        ring, prev = 1, -1
-        for it in range(max_iters):
-            covers_world = ring >= n
-            # ANNULUS expansion (round-2 VERDICT #3): scan only the cells
-            # at Chebyshev distance (prev, ring] — the inner disk was
-            # scanned in earlier iterations and its contribution rides
-            # forward in ``carried`` (at most k rows per query), so no
-            # cell's points are ever joined twice and the per-iteration
-            # dropDuplicates shuffle disappears.  dx is clamped to one
-            # wrap period [-n//2, (n-1)//2] and dy to the grid height, so
-            # a world-covering ring costs O(n^2) offsets, not the
-            # unclamped (2*ring+1)^2 blow-up.
-            lo_x, hi_x = min(ring, n // 2), min(ring, (n - 1) // 2)
-            ry = min(ring, n - 1)
-            offs = (spark.range(-lo_x, hi_x + 1)
-                    .select(F.col("id").alias("_dx"))
-                    .crossJoin(spark.range(-ry, ry + 1)
-                               .select(F.col("id").alias("_dy")))
-                    .where(F.greatest(F.abs(F.col("_dx")),
-                                      F.abs(F.col("_dy"))) > prev))
-            cand_cells = (remaining.crossJoin(F.broadcast(offs))
-                          .withColumn("_ny", F.col("_qy") + F.col("_dy"))
-                          .where((F.col("_ny") >= 0) & (F.col("_ny") < n))
-                          .withColumn("_nx", F.pmod(
-                              F.col("_qx") + F.col("_dx"), F.lit(n)))
-                          .select("query_id", "_qlon", "_qlat", "_k",
-                                  "_qx", "_qy",
-                                  (F.lit(res * RES_SHIFT)
-                                   + F.col("_nx") * F.lit(X_SHIFT)
-                                   + F.col("_ny")).alias("_pcell")))
-
-            cand = cand_cells.join(pts, "_pcell")
-            cand = cand.withColumn("_dist", haversine_col(
-                F.col("_qlon"), F.col("_qlat"),
-                F.col("_plon"), F.col("_plat"))).select(*_CAND_COLS)
-            if carried is not None:
-                # annulus cells are disjoint from every earlier disk, so
-                # the carried top-k rows can never duplicate a candidate
-                cand = cand.unionByName(carried)
-            w = W.partitionBy("query_id").orderBy(F.col("_dist"),
-                                                  F.col("_pid"))
-            topk = (cand.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= F.col("_k")))
-            # topk feeds FOUR consumers (stats -> done_ids, the settled
-            # slice, carried, and the final union), and — decisive — its
-            # LOGICAL plan embeds the whole iteration history (carried ->
-            # topk_{i-1} -> remaining_{i-1} -> ...), which doubles per
-            # iteration: persist() alone leaves Catalyst re-analyzing an
-            # exponentially growing tree (measured 91 s of pure planning
-            # by iteration 4 at res 9).  localCheckpoint truncates the
-            # plan to a leaf; the data is at most |remaining| * k rows.
-            topk = topk.localCheckpoint(eager=True)
-
-            if covers_world:
-                settled.append(topk.withColumn("settled", F.lit(True)))
-                break
-            if it == max_iters - 1:
-                # terminal flush: emit best-effort top-k for queries that
-                # never satisfied the settle guarantee within max_iters
-                # (instead of silently dropping them) — flagged inexact
-                settled.append(topk.withColumn("settled", F.lit(False)))
-                break
-
-            # settle guarantee: kth distance within the ring-covered
-            # radius, each side bounded by a true great-circle LOWER bound
-            # on the distance to that ring edge.  Horizontal edges are
-            # meridian segments: distance to the full meridian circle is
-            # R * asin(sin(dLon) * cos(qlat)) — strictly below the
-            # parallel-arc length dLon*cos(qlat) at high latitude, which
-            # round 1 wrongly used (premature settles).  Vertical edges
-            # are parallels: the meridian arc R * radians(dLat) is exact.
-            # A side clipped at the poles (or a horizontal span wrapping
-            # the globe) is fully covered -> +inf.
-            INF = F.lit(1e12)
-            west = _tile_edge_lon(F.col("_qx") - ring, res)
-            east = _tile_edge_lon(F.col("_qx") + ring + 1, res)
-            north = _tile_edge_lat(F.col("_qy") - ring, res)
-            south = _tile_edge_lat(F.col("_qy") + ring + 1, res)
-            dlon = F.least(F.col("_qlon") - west, east - F.col("_qlon"))
-            horiz_km = F.when(F.lit(2 * ring + 1 >= n), INF).otherwise(
-                F.lit(EARTH_RADIUS_KM) * F.asin(F.least(
-                    F.lit(1.0),
-                    F.sin(F.radians(dlon))
-                    * F.cos(F.radians(F.col("_qlat"))))))
-            deg_km = F.lit(math.pi / 180.0 * EARTH_RADIUS_KM)
-            north_km = F.when((F.col("_qy") - ring) <= 0, INF).otherwise(
-                (north - F.col("_qlat")) * deg_km)
-            south_km = F.when((F.col("_qy") + ring + 1) >= n, INF).otherwise(
-                (F.col("_qlat") - south) * deg_km)
-            guard_km = F.least(horiz_km, north_km, south_km)
-
-            stats = (topk.groupBy("query_id")
-                     .agg(F.count("*").alias("_n"),
-                          F.max("_dist").alias("_kth")))
-            qstate = (remaining.join(stats, "query_id", "left")
-                      .withColumn("_guard", guard_km))
-            done_ids = qstate.where(
-                (F.col("_n") >= F.col("_k"))
-                & (F.col("_kth") <= F.col("_guard"))).select("query_id")
-            settled.append(topk.join(F.broadcast(done_ids), "query_id",
-                                     "left_semi")
-                           .withColumn("settled", F.lit(True)))
-            # same plan-truncation rationale as topk: remaining seeds the
-            # next iteration's whole tree
-            remaining = remaining.join(F.broadcast(done_ids), "query_id",
-                                       "left_anti").localCheckpoint(
-                                           eager=True)
-            if remaining.isEmpty():
-                break
-            # carry unsettled queries' current top-k into the next
-            # annulus; derives from two checkpointed leaves, so its plan
-            # stays flat without its own cut
-            carried = (topk.join(F.broadcast(done_ids), "query_id",
-                                 "left_anti").select(*_CAND_COLS))
-            prev, ring = ring, ring * 2
-
-        out = settled[0]
-        for s in settled[1:]:
-            out = out.unionByName(s)
-        out = out.select("query_id", "rank",
-                         F.col("_pid").alias(point_id),
-                         F.col("_dist").alias("dist_km"), "settled")
-        # materialize once (iteration caches still hot), then release every
-        # cache this call created — the caller gets a self-contained result
-        out = out.localCheckpoint(eager=True)
-    finally:
-        for df in cached:
-            df.unpersist()
-    return out
+        F.col(k_col).cast("int").alias("_k"), qx.alias("_qx"),
+        qy.alias("_qy")).mapInPandas(
+            rings, schema=f"query_id {qid_t}, _qlon double, _qlat double, "
+                          f"_k int, _pcell long")
+    cand = (points.select(F.col(point_id).alias("_pid"),
+                          F.col(lon).alias("_plon"),
+                          F.col(lat).alias("_plat"),
+                          cell_id(F.col(lon), F.col(lat), res)
+                          .alias("_pcell"))
+            .join(F.broadcast(ring_cells), "_pcell")
+            .select("query_id", "_k", F.struct(
+                haversine_col(F.col("_qlon"), F.col("_qlat"),
+                              F.col("_plon"), F.col("_plat"))
+                .alias("_dist"), "_pid").alias("_nb")))
+    top = cand.groupBy("query_id", "_k").agg(F.slice(
+        F.array_sort(F.collect_list("_nb")), 1, F.col("_k")).alias("_top"))
+    return (top.select("query_id", F.posexplode("_top").alias("_i", "_nb"))
+            .select("query_id", (F.col("_i") + 1).alias("rank"),
+                    F.col("_nb._pid").alias(point_id),
+                    F.col("_nb._dist").alias("dist_km"),
+                    F.lit(True).alias("settled")))
 
 
 def knn_bruteforce(points: DataFrame, queries: DataFrame,

@@ -24,7 +24,7 @@ import json
 import os
 import struct
 import zlib
-from typing import Any, Dict, Iterator, List, Optional
+from typing import Any, Dict, Iterator, List
 
 MAGIC = b"Obj\x01"
 

@@ -17,12 +17,12 @@ Iceberg matter at 10^12 rows:
   exact, stronger than directory-listing pruning (no listing at all).
 
 Scan planning is driver-side over kilobytes of metadata (exactly how
-Iceberg itself plans); the data path stays fully distributed —
-``spark.read.parquet(*planned_files)``.  The decoder is
-writer-schema driven (sources/avro.py), so manifests written by real
-Iceberg writers read correctly for the v2 subset used here.  No
-reference-repo counterpart exists (the reference never touches table
-formats).
+Iceberg itself plans); the data path stays fully distributed — a
+Parquet read of the planned files with the table's own schema.  The
+decoder is writer-schema driven (sources/avro.py), so manifests
+written by real Iceberg writers read correctly for the v2 subset used
+here.  No reference-repo counterpart exists (the reference never
+touches table formats).
 """
 
 from __future__ import annotations
@@ -374,7 +374,9 @@ def read_table(spark: SparkSession, path: str,
         if columns:
             df = df.select(*columns)
         return (df, stats) if with_stats else df
-    df = spark.read.parquet(*files)
+    # the table's own schema: inferring it from Parquet footers would
+    # run a Spark job on every read
+    df = spark.read.schema(_spark_schema(table)).parquet(*files)
     if stats.position_deletes or stats.equality_deletes:
         from pyspark.sql import functions as F
         # _metadata is only resolvable on the scan relation itself —
@@ -442,15 +444,21 @@ def _plain_path_py(p: str) -> str:
 
 
 def _spark_schema(table: IcebergTable):
-    """Spark StructType DDL for the table's current Iceberg schema."""
+    """Spark StructType DDL for the table's current Iceberg schema.
+    Data reads use it as the scan schema, so a type with no Spark
+    mapping raises ValueError instead of misreading the column."""
     inv = {"string": "string", "long": "bigint", "int": "int",
            "double": "double", "float": "float", "boolean": "boolean",
            "binary": "binary", "timestamptz": "timestamp",
            "timestamp": "timestamp", "date": "date"}
-    fields = table.current_schema().get("fields", [])
-    return ", ".join(
-        f"`{f['name']}` {inv.get(f.get('type'), 'string')}"
-        for f in fields)
+    cols = []
+    for f in table.current_schema().get("fields", []):
+        typ = f.get("type")
+        if not isinstance(typ, str) or typ not in inv:
+            raise ValueError(f"Iceberg field {f['name']!r} has type "
+                             f"{typ!r}, which has no Spark mapping")
+        cols.append(f"`{f['name']}` {inv[typ]}")
+    return ", ".join(cols)
 
 
 def _apply_position_deletes(spark: SparkSession, df: DataFrame,
@@ -864,4 +872,7 @@ _TYPE_MAP = {"string": "string", "bigint": "long", "int": "int",
 
 
 def _iceberg_type(spark_type: str) -> str:
-    return _TYPE_MAP.get(spark_type, "string")
+    if spark_type not in _TYPE_MAP:
+        raise ValueError(f"Spark type {spark_type!r} has no Iceberg "
+                         f"mapping in this writer")
+    return _TYPE_MAP[spark_type]

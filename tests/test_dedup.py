@@ -37,15 +37,15 @@ def _duck(rows=SHORT_TEXTS):
 
 
 def test_shingle_counts_standard_n_minus_2(spark):
-    out = {r["doc_id"]: r["n"] for r in _docs(spark).select(
-        "doc_id", F.expr(f"size({D.SHINGLES_SPARK})").alias("n"))
-        .collect()}
+    rows = D.with_tokens(_docs(spark)).select(
+        "doc_id", F.expr(f"size({D.SHINGLES_SPARK})").alias("n")).collect()
+    out = {r["doc_id"]: r["n"] for r in rows}
     # "" splits to [''] (1 token); n tokens -> max(n-2, 0) shingles
     assert out == {0: 0, 1: 0, 2: 0, 3: 1, 4: 2, 5: 4}
 
 
 def test_shingles_match_duckdb(spark):
-    sdf = (_docs(spark)
+    sdf = (D.with_tokens(_docs(spark))
            .select("doc_id", F.expr(D.SHINGLES_SPARK).alias("sh"))
            .orderBy("doc_id").collect())
     duck = _duck().execute(

@@ -221,7 +221,48 @@ class TestIcebergTable:
         assert names == ["url", "warc_ts", "html", "text", "lang"]
 
 
+    def test_unmapped_type_raises(self, spark, tmp_path):
+        # the table schema drives the data read: a type with no Spark
+        # mapping must fail, not read the column as a string
+        path = str(tmp_path / "t7")
+        write_table(_pages(spark, langs=("en",)), path,
+                    partition_by=["lang"])
+        meta_path = os.path.join(path, "metadata", "v1.metadata.json")
+        with open(meta_path) as fh:
+            meta = json.load(fh)
+        meta["schemas"][0]["fields"][2]["type"] = "decimal(9,2)"
+        with open(meta_path, "w") as fh:
+            json.dump(meta, fh)
+        with pytest.raises(ValueError, match="'html'.*decimal"):
+            read_table(spark, path)
+        # and the writer does not record a type it cannot name
+        with pytest.raises(ValueError, match="array<string>"):
+            write_table(spark.createDataFrame([(["a"],)],
+                                              "tags array<string>"),
+                        str(tmp_path / "t8"))
+
+
 class TestPagesLoaderIntegration:
+    def test_load_pages_starts_no_spark_job(self, spark, tmp_path):
+        # the read takes its schema from the table metadata, so no
+        # footer-inference job runs before the caller's own action
+        from gdal2mbtiles_spark.sources.pages_table import (
+            load_pages, write_iceberg_pages)
+        path = str(tmp_path / "pages_ice0")
+        write_iceberg_pages(_pages(spark), path)
+        sc = spark.sparkContext
+        sc.setJobGroup("load-pages-probe", "load_pages only")
+        try:
+            got = load_pages(spark, path, lang="de",
+                             columns=["url", "text", "lang"])
+            jobs = sc.statusTracker().getJobIdsForGroup(
+                "load-pages-probe")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        assert got.columns == ["url", "text", "lang"]
+        assert got.count() == 40
+
     def test_load_pages_native_iceberg(self, spark, tmp_path):
         from gdal2mbtiles_spark.sources.pages_table import (
             load_pages, write_iceberg_pages)

@@ -10,7 +10,6 @@ from gdal2mbtiles_spark.grid import TILE_SCHEMA, whole_world_raster_meta
 from gdal2mbtiles_spark.operators.burn import pixel_histogram
 from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
                                                   pyramid_tiles,
-                                                  render_images,
                                                   union_levels)
 from gdal2mbtiles_spark.operators import sparse
 from gdal2mbtiles_spark.operators.sparse import (_shrink_sparse,
