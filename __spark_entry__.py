@@ -342,7 +342,7 @@ def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6: exact kNN via per-query cell rings sized from per-cell
-    counts, one join on cell and a sorted top-k per query."""
+    counts, one join on cell and a window top-k per query."""
     pages = with_geo(synth_pages(spark, KNN_N))
     queries_df = query_points_df(spark, KNN_Q)
     return (knn_join(pages, queries_df, res=5)

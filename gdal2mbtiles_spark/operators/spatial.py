@@ -323,35 +323,22 @@ def estimate_count(df: DataFrame, max_parts: int = 16) -> int:
     return int(round(sum(counts) * nparts / len(idxs)))
 
 
-def _cell_counts(points: DataFrame, queries: DataFrame, lon: str,
-                 lat: str, k_col: str, res: int, max_cells: int
-                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """(x, y, count) of every non-empty cell at ``res``, and the largest
-    k, from one JVM aggregate, collected: the queries join it as one
-    extra group at x = -1 whose max(k) is the answer, so the pair costs
-    one aggregate, not two.  More than ``max_cells`` non-empty cells
+def _cell_counts(points: DataFrame, lon: str, lat: str, res: int,
+                 max_cells: int
+                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(x, y, count) of every non-empty cell at ``res``, from one JVM
+    aggregate, collected.  More than ``max_cells`` non-empty cells
     raise ValueError; the collect never reads past that bound."""
     x, y = _cell_xy(cell_id(F.col(lon), F.col(lat), res), res)
-    counts = (points.select(x.alias("x"), y.alias("y"),
-                            F.lit(None).cast("int").alias("k"))
-              .unionByName(queries.select(
-                  F.lit(-1).cast("long").alias("x"),
-                  F.lit(-1).cast("long").alias("y"),
-                  F.col(k_col).cast("int").alias("k")))
-              .groupBy("x", "y")
-              .agg(F.count("*").alias("n"), F.max("k").alias("k")))
-    if 4 ** res > max_cells:
-        counts = counts.limit(max_cells + 2)
-    pdf = counts.toPandas()
-    ks, pdf = pdf[pdf["x"] < 0], pdf[pdf["x"] >= 0]
+    pdf = (points.groupBy(x.alias("x"), y.alias("y")).count()
+           .limit(max_cells + 1).toPandas())
     if len(pdf) > max_cells:
         raise ValueError(
             f"knn_join: more than {max_cells} non-empty cells at res "
             f"{res} exceed the broadcast threshold "
             f"(spark.sql.autoBroadcastJoinThreshold); pass a coarser res")
     return (pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64),
-            pdf["n"].to_numpy(np.int64),
-            int(ks["k"].iloc[0]) if len(ks) else 0)
+            pdf["count"].to_numpy(np.int64))
 
 
 def _auto_knn_res(cx: np.ndarray, cy: np.ndarray, cnt: np.ndarray,
@@ -436,27 +423,28 @@ def _guard_km(qlon: float, qlat: float, qx: int, qy: int,
 
 def _ring(qlon: float, qlat: float, qx: int, qy: int, k: int,
           cx: np.ndarray, cy: np.ndarray, cnt: np.ndarray,
-          n: int) -> np.ndarray:
+          n: int) -> Tuple[np.ndarray, float]:
     """Mask over the non-empty cells (cx, cy, cnt) of the query's ring
-    R, which holds every point nearer than its k-th neighbour.
+    R, which holds every point nearer than its k-th neighbour, and an
+    upper bound on that neighbour's distance.
 
     R0 is the smallest ring holding at least k points: the prefix sum
     of the per-cell counts by Chebyshev distance from the query's cell
     (x wraps, y does not).  The farthest point of ring R0 bounds the
     k-th neighbour's distance from above, so R is the smallest ring
     >= R0 whose settle guard reaches that bound.  Fewer than k points
-    in all: every cell."""
+    in all: every cell, unbounded."""
     dx = np.abs(cx - qx)
     cheb = np.maximum(np.minimum(dx, n - dx), np.abs(cy - qy))
     held = np.cumsum(np.bincount(cheb, weights=cnt))
     if held[-1] < k:
-        return np.ones(len(cx), dtype=bool)
+        return np.ones(len(cx), dtype=bool), math.inf
     r0 = int(np.searchsorted(held, k))
     bound = _farthest_km(qlon, qlat, qx, qy, r0, n) * (1.0 + _SETTLE_SLACK)
     rs = np.arange(r0, max(n // 2, qy, n - 1 - qy) + 1)
     # the last ring covers the grid, so its guard is +inf
     r = rs[np.argmax(_guard_km(qlon, qlat, qx, qy, rs, n) >= bound)]
-    return cheb <= r
+    return cheb <= r, bound
 
 
 def knn_join(points: DataFrame, queries: DataFrame,
@@ -472,27 +460,36 @@ def knn_join(points: DataFrame, queries: DataFrame,
     at any res: one JVM aggregate counts points per cell (_cell_counts);
     an Arrow UDF over the queries sizes each query's ring once from the
     broadcast counts (_ring) and emits one row per query and non-empty
-    ring cell; those rows broadcast-join the points on cell; a sorted
-    collect_list keeps each query's k nearest, ties broken by point id
-    as in knn_bruteforce.
+    ring cell, with the query's upper bound on its k-th distance; those
+    rows join the points on cell (Spark and AQE pick the strategy);
+    candidates past the bound are dropped, and a row_number window (a
+    sort that spills) keeps each query's k nearest, ties broken by
+    point id as in knn_bruteforce.
 
     res=None counts at _KNN_BASE_RES (lowered until the cells fit the
     broadcast threshold) and picks the grid from those counts and the
-    largest k (_auto_knn_res).  ``settled`` is always True."""
+    largest k (_auto_knn_res).  ``settled`` is always True.
+
+    Scale: up to ~10^6 non-empty cells at ``res`` (all are collected,
+    broadcast and scanned per query) and thousands of queries.  A
+    query's work grows with the points in its ring, so a dense cell at
+    a coarse res puts all its points through the join and the sort."""
     from .pyramid import _broadcast_threshold
 
     spark = points.sparkSession
-    max_cells = _broadcast_threshold(spark) // _CELL_BYTES
+    # the counts travel as a SparkContext broadcast, not a broadcast
+    # join: a threshold that disables joins (<= 0) still bounds them
+    limit = _broadcast_threshold(spark)
+    max_cells = (limit if limit > 0 else 32 << 20) // _CELL_BYTES
     if res is None:
         base = _KNN_BASE_RES
         while base > 0 and 4 ** base > max_cells:
             base -= 1
-        *counts, k_max = _cell_counts(points, queries, lon, lat, k_col,
-                                      base, max_cells)
-        res, cx, cy, cnt = _auto_knn_res(*counts, base, k_max)
+        k_max = queries.agg(F.max(F.col(k_col))).first()[0] or 0
+        res, cx, cy, cnt = _auto_knn_res(
+            *_cell_counts(points, lon, lat, base, max_cells), base, k_max)
     else:
-        cx, cy, cnt, _ = _cell_counts(points, queries, lon, lat, k_col,
-                                      res, max_cells)
+        cx, cy, cnt = _cell_counts(points, lon, lat, res, max_cells)
     n = 1 << res
     cells = spark.sparkContext.broadcast(
         (cx, cy, cnt, res * RES_SHIFT + cx * X_SHIFT + cy))
@@ -500,16 +497,18 @@ def knn_join(points: DataFrame, queries: DataFrame,
     def rings(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cx, cy, cnt, packed = cells.value
         for pdf in batches:
-            qs = zip(*(pdf[c].to_numpy() for c in
-                       ("_qlon", "_qlat", "_qx", "_qy", "_k")))
-            picks = [np.flatnonzero(_ring(qlon, qlat, qx, qy, k,
-                                          cx, cy, cnt, n))
-                     if k > 0 and len(cx) else np.empty(0, np.int64)
-                     for qlon, qlat, qx, qy, k in qs]
-            rows = np.repeat(np.arange(len(pdf)), [len(p) for p in picks])
-            out = pdf.iloc[rows][["query_id", "_qlon", "_qlat", "_k"]]
-            yield out.assign(_pcell=packed[np.concatenate(picks + [
-                np.empty(0, np.int64)])])
+            pdf = pdf[pdf["_k"] > 0] if len(cx) else pdf.iloc[:0]
+            found = [_ring(*q, cx, cy, cnt, n) for q in zip(*(
+                pdf[c].to_numpy() for c in
+                ("_qlon", "_qlat", "_qx", "_qy", "_k")))]
+            picks = [np.flatnonzero(m) for m, _ in found]
+            sizes = [len(p) for p in picks]
+            out = pdf.iloc[np.repeat(np.arange(len(pdf)), sizes)]
+            yield out[["query_id", "_qlon", "_qlat", "_k"]].assign(
+                _bound=np.repeat(np.array([b for _, b in found], float),
+                                 sizes),
+                _pcell=packed[np.concatenate(picks + [
+                    np.empty(0, np.int64)])])
 
     qcell = cell_id(F.col(lon), F.col(lat), res)
     qx, qy = _cell_xy(qcell, res)
@@ -519,23 +518,22 @@ def knn_join(points: DataFrame, queries: DataFrame,
         F.col(k_col).cast("int").alias("_k"), qx.alias("_qx"),
         qy.alias("_qy")).mapInPandas(
             rings, schema=f"query_id {qid_t}, _qlon double, _qlat double, "
-                          f"_k int, _pcell long")
+                          f"_k int, _bound double, _pcell long")
     cand = (points.select(F.col(point_id).alias("_pid"),
                           F.col(lon).alias("_plon"),
                           F.col(lat).alias("_plat"),
                           cell_id(F.col(lon), F.col(lat), res)
                           .alias("_pcell"))
-            .join(F.broadcast(ring_cells), "_pcell")
-            .select("query_id", "_k", F.struct(
-                haversine_col(F.col("_qlon"), F.col("_qlat"),
-                              F.col("_plon"), F.col("_plat"))
-                .alias("_dist"), "_pid").alias("_nb")))
-    top = cand.groupBy("query_id", "_k").agg(F.slice(
-        F.array_sort(F.collect_list("_nb")), 1, F.col("_k")).alias("_top"))
-    return (top.select("query_id", F.posexplode("_top").alias("_i", "_nb"))
-            .select("query_id", (F.col("_i") + 1).alias("rank"),
-                    F.col("_nb._pid").alias(point_id),
-                    F.col("_nb._dist").alias("dist_km"),
+            .join(ring_cells, "_pcell")
+            .select("query_id", "_k", "_pid", "_bound", haversine_col(
+                F.col("_qlon"), F.col("_qlat"), F.col("_plon"),
+                F.col("_plat")).alias("_dist"))
+            .where(F.col("_dist") <= F.col("_bound")))
+    w = W.partitionBy("query_id").orderBy("_dist", "_pid")
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= F.col("_k"))
+            .select("query_id", "rank", F.col("_pid").alias(point_id),
+                    F.col("_dist").alias("dist_km"),
                     F.lit(True).alias("settled")))
 
 

@@ -271,6 +271,27 @@ class TestKnn:
                    for r in knn_join(pts, qs, res=res).collect()}
             assert got == want, res
 
+    def test_broadcast_joins_disabled_exact(self, spark, geo_pages):
+        # a threshold of -1 disables broadcast joins: the counts are
+        # still bounded (by Spark's default) and the ring rows join
+        # the points by shuffle
+        q = query_points_df(spark, 20)
+        want = {(r["query_id"], r["rank"], r["url"])
+                for r in knn_bruteforce(geo_pages, q).collect()}
+        conf = spark.conf
+        old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            for res in (None, 5):
+                out = knn_join(geo_pages, q, res=res)
+                got = {(r["query_id"], r["rank"], r["url"])
+                       for r in out.collect()}
+                assert got == want, res
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert "BroadcastHashJoin" not in plan, plan[:2000]
+        finally:
+            conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
     def test_too_many_cells_raises(self, spark, geo_pages):
         # the per-cell counts are collected: past the broadcast
         # threshold the call fails loudly, naming res
