@@ -334,7 +334,8 @@ def _q_albers_warp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5: cell-partitioned broadcast point-in-polygon join."""
+    """J5: point-in-polygon join — polygon covers joined on cell,
+    vertices attached per candidate, one vectorized ray-cast refine."""
     pages = with_geo(synth_pages(spark, PAGES_N))
     polys = polygons_df(spark, 50)
     return point_in_polygon_join(pages, polys)

@@ -99,15 +99,6 @@ def disk_offsets(k: int) -> List[Tuple[int, int]]:
             for dy in range(-k, k + 1)]
 
 
-def ring_offsets(k: int) -> List[Tuple[int, int]]:
-    """Only the (dx, dy) at exactly Chebyshev distance k."""
-    if k == 0:
-        return [(0, 0)]
-    return [(dx, dy) for dx in range(-k, k + 1)
-            for dy in range(-k, k + 1)
-            if max(abs(dx), abs(dy)) == k]
-
-
 def grid_disk(cell: int, k: int) -> np.ndarray:
     """Cells within Chebyshev distance k; x wraps around the antimeridian,
     y is clipped at the poles."""

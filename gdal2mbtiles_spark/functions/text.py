@@ -111,11 +111,15 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     from ..operators.dedup import SHINGLES_SPARK, _h60_spark, with_tokens
     hashes = (f"array_sort(transform({SHINGLES_SPARK}, "
               f"s -> {_h60_spark('s', 'fp')}))")
-    # try_element_at: docs with fewer than FP_K shingles yield NULL
-    # fps, matching DuckDB's out-of-bounds list indexing
-    return with_tokens(docs).select("doc_id", *[
-        F.expr(f"try_element_at({hashes}, {i + 1})").alias(f"fp{i}")
-        for i in range(FP_K)])
+    # the sorted hashes are one projected column, so each document is
+    # hashed and sorted once for all FP_K picks; try_element_at: docs
+    # with fewer than FP_K shingles yield NULL fps, matching DuckDB's
+    # out-of-bounds list indexing
+    return (with_tokens(docs)
+            .select("doc_id", F.expr(hashes).alias("_fph"))
+            .select("doc_id", *[
+                F.expr(f"try_element_at(_fph, {i + 1})").alias(f"fp{i}")
+                for i in range(FP_K)]))
 
 
 def fingerprints_sql(source: str = "documents") -> str:

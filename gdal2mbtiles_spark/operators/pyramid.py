@@ -41,6 +41,7 @@ from ..functions.hashing import (BORDER_TILE_ID, BORDER_TILE_MD5,
                                  signed64_from_hex16)
 from ..grid import (RasterMeta, TILE_SCHEMA, TILE_SIDE,
                     validate_resolutions)
+from ..session import broadcast_threshold
 
 QUAD_SCHEMA = "z int, x bigint, y bigint, q int, qpx binary"
 
@@ -227,19 +228,6 @@ def union_levels(levels: Dict[int, DataFrame]) -> DataFrame:
 _CANON_ROW_BYTES = 64
 
 
-def _broadcast_threshold(spark: SparkSession) -> int:
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-                             "33554432"))
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    low = raw.strip().lower().removesuffix("b")
-    if low and low[-1] in units:
-        return int(float(low[:-1]) * units[low[-1]])
-    try:
-        return int(low)
-    except ValueError:
-        return 32 * 1024 * 1024
-
-
 def dedup_tiles(spark: SparkSession, tiles: DataFrame,
                 borders: Optional[DataFrame] = None,
                 zoom_offset: int = 0
@@ -274,7 +262,7 @@ def dedup_tiles(spark: SparkSession, tiles: DataFrame,
         "tile_id")
 
     n_images = t.select("tile_id").distinct().count()
-    if n_images * _CANON_ROW_BYTES < _broadcast_threshold(spark):
+    if n_images * _CANON_ROW_BYTES < broadcast_threshold(spark):
         # Payload-shuffle-free dedup: group only the (id, key) columns
         # (a few dozen bytes/row) to pick the canonical min-(z,x,y)
         # owner per hash, then broadcast-semi-join back — the 262KB

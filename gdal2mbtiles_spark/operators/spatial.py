@@ -3,10 +3,11 @@ raster->vector extract (J7).
 
 Design for 10^12 rows (north_rule):
 
-- **PIP** is a two-phase join: a coarse *equi-join* on quadtree cells
-  (polygon covers exploded and broadcast — polygons are the small
-  dimension side) followed by an exact vectorized ray-casting refine in
-  an Arrow-batched pandas UDF.  The refine uses the *identical*
+- **PIP** is one plan for every polygon-set size: a coarse *equi-join*
+  on quadtree cells (id-only polygon covers exploded, broadcast when
+  small), an equi-join that attaches each candidate's vertex arrays,
+  and an exact vectorized ray-casting refine in one Arrow-batched
+  mapInPandas.  The refine uses the *identical*
   crossing-rule expression as the SQL oracle, so classification can
   never diverge:
 
@@ -28,7 +29,7 @@ Design for 10^12 rows (north_rule):
 from __future__ import annotations
 
 import math
-from typing import Dict, Iterator, Optional, Tuple
+from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -39,7 +40,9 @@ from pyspark.sql import Window as W
 from ..cells import DEFAULT_RES, RES_SHIFT, X_SHIFT
 from ..functions.tilemath import cell_id
 from ..grid import TILE_SIDE
+from ..session import broadcast_threshold
 from .burn import heat_alpha
+from .skew import with_salt
 
 EARTH_RADIUS_KM = 6371.0088
 
@@ -84,10 +87,12 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
 # --- J5: point-in-polygon join -----------------------------------------------
 
 # estimated broadcast bytes per exploded (poly_id, cell) cover row and
-# per vertex float in the driver-collected dict
+# per vertex float
 _COVER_ROW_BYTES = 48
 _VERT_BYTES = 16
 _MAX_SALTS = 64
+# share of the points _auto_salts samples for its candidate histogram
+_SALT_SAMPLE_FRACTION = 0.05
 
 
 def _auto_salts(pts: DataFrame, poly_cells: DataFrame, cell: str,
@@ -120,147 +125,81 @@ def _auto_salts(pts: DataFrame, poly_cells: DataFrame, cell: str,
 
 
 def point_in_polygon_join(points: DataFrame, polys: DataFrame,
-                          res: int = DEFAULT_RES,
                           point_id: str = "url",
                           lon: str = "lon", lat: str = "lat",
                           cell: str = "cell",
-                          broadcast_polys: Optional[bool] = None,
-                          n_salts: Optional[int] = None,
-                          salt_sample_fraction: float = 0.05
-                          ) -> DataFrame:
-    """points (with ``cell`` at ``res``) x polys(poly_id, xs, ys,
+                          n_salts: Optional[int] = None) -> DataFrame:
+    """points (with ``cell`` at DEFAULT_RES) x polys(poly_id, xs, ys,
     cells) -> (point_id, poly_id) pairs where the point lies inside.
 
-    broadcast_polys=True (dimension-sized poly sets): coarse phase is
-    a broadcast equi-join on exploded cover cells (no shuffle of the
-    big side); the refine reads vertices from a driver-built broadcast
-    dict.  broadcast_polys=False (huge poly sets, ~10^6+): no driver
-    collect and no broadcast — ID-ONLY covers shuffle-join points on
-    the cell key, then one equi-join on poly_id attaches the vertex
-    arrays to the (already distinct) candidate pairs just before the
-    refine.  Shuffle volume is |covers| + |candidates| + |vertices|
-    instead of round-3's |covers| x |vertices| (a 10k-vertex polygon
-    covering 10k cells no longer shuffles 10^8 duplicated floats —
-    round-3 VERDICT #1).  Both paths run the identical vectorized
-    ray-cast, so output rows are the same.
+    ``point_id`` is the column carried with each match; it need not be
+    unique, since every (point row, polygon) pair leaves the join
+    exactly once.  Output columns keep the input types.
 
-    broadcast_polys=None (default) decides automatically from one
-    narrow aggregation over polys (cover-cell + vertex counts sized
-    against spark.sql.autoBroadcastJoinThreshold), so a 10^6-polygon
-    input can never OOM the driver by default.
+    One plan for every polygon-set size: ID-ONLY covers (poly_id,
+    cell) join the points on (cell, _salt), the candidate pairs join
+    the vertex arrays on (poly_id, _salt), and one Arrow-batched
+    mapInPandas ray-casts them.  Vertex arrays never ride the exploded
+    cover rows, so a 10k-vertex polygon covering 10k cells does not
+    duplicate 10^8 floats.  When one narrow aggregate over polys
+    (cover-cell and vertex counts) fits
+    spark.sql.autoBroadcastJoinThreshold, both polygon sides are
+    broadcast and the points never shuffle; otherwise both joins
+    shuffle.
 
-    n_salts salts BOTH shuffle-path joins: points carry a
-    deterministic pmod salt (skew.with_salt), covers and vertex rows
-    replicate across all salts, and the equi-joins run on (cell, salt)
-    / (poly_id, salt) — a hot cell (boilerplate city at 10^12 pages)
-    or a hot polygon (one poly covering that city) spreads over up to
-    n_salts reducers instead of one (north_rule: "explicit salted
-    repartitioning on hot H3 cells").  n_salts=None (default) derives
-    it from a sampled candidate histogram (_auto_salts); pass 1 to
-    disable.  Ignored on the broadcast path, which never shuffles the
-    big side at all."""
-    from .pyramid import _broadcast_threshold
-    from .skew import with_salt
-
+    n_salts spreads a hot cell (boilerplate city at 10^12 pages) or a
+    hot polygon over up to n_salts reducers (north_rule: "explicit
+    salted repartitioning on hot H3 cells"): points carry a
+    deterministic pmod salt (skew.with_salt) and covers and vertex
+    rows replicate across all salts.  n_salts=None (default) is 1 on
+    the broadcast plan and otherwise derived from a sampled candidate
+    histogram (_auto_salts)."""
     spark = points.sparkSession
-    if broadcast_polys is None:
-        est = polys.select(
-            F.sum(F.size("cells")).alias("nc"),
-            F.sum(F.size("xs")).alias("nv")).first()
-        est_bytes = ((est["nc"] or 0) * _COVER_ROW_BYTES
-                     + (est["nv"] or 0) * 2 * _VERT_BYTES)
-        broadcast_polys = est_bytes < _broadcast_threshold(spark)
-    if not broadcast_polys:
-        # id-only covers: vertex arrays do NOT ride the exploded
-        # cover rows through the cell join
-        poly_cells = polys.select(
-            "poly_id", F.explode("cells").alias(cell))
-        pts = points.select(point_id, lon, lat, cell)
-        if n_salts is None:
-            n_salts = _auto_salts(pts, poly_cells, cell, spark,
-                                  salt_sample_fraction)
-        verts = polys.select("poly_id", "xs", "ys")
-        if n_salts > 1:
-            pts = with_salt(pts, n_salts=n_salts,
-                            entropy_cols=[point_id])
-            salts = spark.range(n_salts).select(
-                F.col("id").cast("int").alias("_salt"))
-            poly_cells = poly_cells.crossJoin(F.broadcast(salts))
-            cand = (pts.join(poly_cells, [cell, "_salt"])
-                    .select(point_id, lon, lat, "poly_id", "_salt"))
-            # the vertex attach inherits the point-entropy salt so a
-            # hot POLYGON's candidates also spread over n_salts
-            # reducers; vertices replicate n_salts x |polys| rows —
-            # still independent of the cover fan-out
-            verts = verts.crossJoin(F.broadcast(salts))
-            cand = cand.join(verts, ["poly_id", "_salt"])
-        else:
-            cand = (pts.join(poly_cells, cell)
-                    .select(point_id, lon, lat, "poly_id"))
-            cand = cand.join(verts, "poly_id")
-        cand = cand.select(point_id, lon, lat, "poly_id", "xs", "ys")
+    est = polys.select(
+        F.sum(F.size("cells")).alias("nc"),
+        F.sum(F.size("xs")).alias("nv")).first()
+    est_bytes = ((est["nc"] or 0) * _COVER_ROW_BYTES
+                 + (est["nv"] or 0) * 2 * _VERT_BYTES)
+    small = est_bytes < broadcast_threshold(spark)
+    covers = polys.select("poly_id", F.explode("cells").alias(cell))
+    pts = points.select(point_id, lon, lat, cell)
+    if n_salts is None:
+        n_salts = 1 if small else _auto_salts(
+            pts, covers, cell, spark, _SALT_SAMPLE_FRACTION)
+    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+    covers = covers.select("poly_id", cell, salts.alias("_salt"))
+    verts = polys.select("poly_id", "xs", "ys", salts.alias("_salt"))
+    if small:
+        covers, verts = F.broadcast(covers), F.broadcast(verts)
+    pts = with_salt(pts, n_salts=n_salts, entropy_cols=[point_id])
+    cand = (pts.join(covers, [cell, "_salt"])
+            .join(verts, ["poly_id", "_salt"])
+            .select(point_id, lon, lat, "poly_id", "xs", "ys"))
 
-        def refine(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pl = pdf[lon].to_numpy(np.float64)
-                pt = pdf[lat].to_numpy(np.float64)
-                pid = pdf["poly_id"].to_numpy()
-                keep = np.zeros(len(pdf), dtype=bool)
-                # vectorize per poly within the batch (the poly_id
-                # equi-join clusters each polygon's candidates, so
-                # each np.unique group is one contiguous vertex load)
-                for p in np.unique(pid):
-                    m = pid == p
-                    first = int(np.flatnonzero(m)[0])
-                    xs = np.asarray(pdf["xs"].iloc[first], np.float64)
-                    ys = np.asarray(pdf["ys"].iloc[first], np.float64)
-                    keep[m] = ray_cast_contains(pl[m], pt[m], xs, ys)
-                out = pdf.loc[keep, [point_id, "poly_id"]]
-                if len(out):
-                    yield out
+    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            pl = pdf[lon].to_numpy(np.float64)
+            pt = pdf[lat].to_numpy(np.float64)
+            pid = pdf["poly_id"].to_numpy()
+            keep = np.zeros(len(pdf), dtype=bool)
+            # one ray-cast per polygon in the batch, over all of its
+            # candidates at once
+            for p in np.unique(pid):
+                m = pid == p
+                first = int(np.flatnonzero(m)[0])
+                xs = np.asarray(pdf["xs"].iloc[first], np.float64)
+                ys = np.asarray(pdf["ys"].iloc[first], np.float64)
+                keep[m] = ray_cast_contains(pl[m], pt[m], xs, ys)
+            out = pdf.loc[keep, [point_id, "poly_id"]]
+            if len(out):
+                yield out
 
-        # preserve the input column types (the broadcast path keeps
-        # them implicitly via where(); hardcoding string/int here made
-        # the two paths diverge for bigint ids — round-2 ADVICE)
-        pid_t = points.schema[point_id].dataType.simpleString()
-        poly_t = polys.schema["poly_id"].dataType.simpleString()
-        return cand.mapInPandas(
-            refine, schema=f"{point_id} {pid_t}, poly_id {poly_t}")
-
-    # keys stay the raw id values: int() here made the broadcast plan
-    # crash on string/bigint ids the shuffle path handles, flipping
-    # behaviour with the auto size estimate (numpy scalars from
-    # np.unique hash-equal their python twins, so lookups still hit)
-    verts: Dict[object, Tuple[np.ndarray, np.ndarray]] = {
-        r["poly_id"]: (np.array(r["xs"]), np.array(r["ys"]))
-        for r in polys.select("poly_id", "xs", "ys").collect()}
-    bverts = spark.sparkContext.broadcast(verts)
-
-    poly_cells = polys.select(
-        "poly_id", F.explode("cells").alias(cell))
-    cand = points.select(point_id, lon, lat, cell).join(
-        F.broadcast(poly_cells), cell)
-
-    @F.pandas_udf("boolean")
-    def contains(poly_id: pd.Series, plon: pd.Series,
-                 plat: pd.Series) -> pd.Series:
-        out = np.zeros(len(poly_id), dtype=bool)
-        pl = plon.to_numpy(dtype=np.float64)
-        pt = plat.to_numpy(dtype=np.float64)
-        pid = poly_id.to_numpy()
-        for p in np.unique(pid):
-            m = pid == p
-            xs, ys = bverts.value[p.item() if hasattr(p, "item")
-                                  else p]
-            out[m] = ray_cast_contains(pl[m], pt[m], xs, ys)
-        return pd.Series(out)
-
-    return (cand.where(contains(F.col("poly_id"), F.col(lon),
-                                F.col(lat)))
-            .select(point_id, "poly_id"))
+    pid_t = points.schema[point_id].dataType.simpleString()
+    poly_t = polys.schema["poly_id"].dataType.simpleString()
+    return cand.mapInPandas(
+        refine, schema=f"{point_id} {pid_t}, poly_id {poly_t}")
 
 
 # --- J6: kNN over per-query cell rings ---------------------------------------
@@ -474,12 +413,10 @@ def knn_join(points: DataFrame, queries: DataFrame,
     broadcast and scanned per query) and thousands of queries.  A
     query's work grows with the points in its ring, so a dense cell at
     a coarse res puts all its points through the join and the sort."""
-    from .pyramid import _broadcast_threshold
-
     spark = points.sparkSession
     # the counts travel as a SparkContext broadcast, not a broadcast
     # join: a threshold that disables joins (<= 0) still bounds them
-    limit = _broadcast_threshold(spark)
+    limit = broadcast_threshold(spark)
     max_cells = (limit if limit > 0 else 32 << 20) // _CELL_BYTES
     if res is None:
         base = _KNN_BASE_RES
@@ -559,10 +496,6 @@ def knn_bruteforce(points: DataFrame, queries: DataFrame,
 
 # --- J7: raster -> vector extract ---------------------------------------------
 
-# pixel key = x << (z + 16) | y << 16 | ppy << 8 | ppx: 2z + 16 bits
-MAX_EXTRACT_Z = 23
-
-
 def extract_poly_stats(hist: DataFrame, polys: DataFrame,
                        z: int) -> DataFrame:
     """Pixel stats under polygons: (poly_id, lit_pixels, alpha_sum).
@@ -570,17 +503,11 @@ def extract_poly_stats(hist: DataFrame, polys: DataFrame,
     hist: a burn's pixel histogram at zoom z (burn.pixel_histogram),
     one row per lit pixel.  Raster pixels join polygons directly,
     without painting tiles first (Raptor, VLDB 2019): each lit pixel
-    becomes a point at its pixel centre carrying its heat alpha, and
-    point_in_polygon_join classifies it — with that join's own
-    broadcast-or-shuffle choice, so polys follow its contract
-    (poly_id, xs, ys, cells at DEFAULT_RES).
-
-    The pixel key packs (x, y, ppx, ppy) into a BIGINT, so it is the
-    same on every recomputation of the plan; z > MAX_EXTRACT_Z raises
-    ValueError."""
-    if z > MAX_EXTRACT_Z:
-        raise ValueError(f"z {z} exceeds the packed pixel-key limit "
-                         f"{MAX_EXTRACT_Z}")
+    becomes a point at its pixel centre, and point_in_polygon_join
+    classifies it with its heat alpha as the carried column — one
+    pass over the histogram, no pixel key and no join back.  polys
+    follow that join's contract (poly_id, xs, ys, cells at
+    DEFAULT_RES)."""
     n = float(1 << z)
     side = float(TILE_SIDE)
     x = F.col("x")
@@ -591,17 +518,11 @@ def extract_poly_stats(hist: DataFrame, polys: DataFrame,
     t = F.lit(math.pi) * (1.0 - 2.0 * ((y_xyz + (F.col("ppy") + 0.5)
                                         / side) / n))
     lat = F.degrees(F.atan((F.exp(t) - F.exp(-t)) / 2.0))
-    key = (F.shiftleft(x, z + 16)
-           .bitwiseOR(F.shiftleft(F.col("y"), 16))
-           .bitwiseOR(F.shiftleft(F.col("ppy").cast("long"), 8))
-           .bitwiseOR(F.col("ppx").cast("long")))
-    pixels = (hist.select(key.alias("_pix"), lon.alias("lon"),
-                          lat.alias("lat"),
+    pixels = (hist.select(lon.alias("lon"), lat.alias("lat"),
                           heat_alpha(F.col("w")).alias("alpha"))
               .withColumn("cell", cell_id(F.col("lon"), F.col("lat"),
                                           DEFAULT_RES)))
-    hits = point_in_polygon_join(pixels, polys, point_id="_pix")
-    return (hits.join(pixels.select("_pix", "alpha"), "_pix")
+    return (point_in_polygon_join(pixels, polys, point_id="alpha")
             .groupBy("poly_id")
             .agg(F.count("*").alias("lit_pixels"),
                  F.sum("alpha").cast("long").alias("alpha_sum")))

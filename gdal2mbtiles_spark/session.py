@@ -65,3 +65,19 @@ def get_spark(cores: Optional[int] = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """spark.sql.autoBroadcastJoinThreshold in bytes (-1: broadcast
+    joins disabled).  Operators size their small side against it to
+    choose between a hinted broadcast join and a shuffle."""
+    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
+                             "33554432"))
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
+    low = raw.strip().lower().removesuffix("b")
+    if low and low[-1] in units:
+        return int(float(low[:-1]) * units[low[-1]])
+    try:
+        return int(low)
+    except ValueError:
+        return 32 * 1024 * 1024

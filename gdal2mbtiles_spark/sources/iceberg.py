@@ -443,22 +443,34 @@ def _plain_path_py(p: str) -> str:
     return re.sub("^/+", "/", p) if p.startswith("/") else p
 
 
-def _spark_schema(table: IcebergTable):
-    """Spark StructType DDL for the table's current Iceberg schema.
-    Data reads use it as the scan schema, so a type with no Spark
-    mapping raises ValueError instead of misreading the column."""
-    inv = {"string": "string", "long": "bigint", "int": "int",
-           "double": "double", "float": "float", "boolean": "boolean",
-           "binary": "binary", "timestamptz": "timestamp",
-           "timestamp": "timestamp", "date": "date"}
+# Iceberg primitive type -> Spark SQL type
+_SPARK_TYPES = {"string": "string", "long": "bigint", "int": "int",
+                "double": "double", "float": "float",
+                "boolean": "boolean", "binary": "binary",
+                "timestamptz": "timestamp", "timestamp": "timestamp",
+                "date": "date"}
+
+# the spec's position-delete file schema
+_POSITION_DELETE_DDL = "file_path string, pos bigint"
+
+
+def _fields_ddl(fields: List[Dict]) -> str:
+    """Spark StructType DDL for Iceberg schema fields.  Reads use it as
+    the scan schema, so a type with no Spark mapping raises ValueError
+    instead of misreading the column."""
     cols = []
-    for f in table.current_schema().get("fields", []):
+    for f in fields:
         typ = f.get("type")
-        if not isinstance(typ, str) or typ not in inv:
+        if not isinstance(typ, str) or typ not in _SPARK_TYPES:
             raise ValueError(f"Iceberg field {f['name']!r} has type "
                              f"{typ!r}, which has no Spark mapping")
-        cols.append(f"`{f['name']}` {inv[typ]}")
+        cols.append(f"`{f['name']}` {_SPARK_TYPES[typ]}")
     return ", ".join(cols)
+
+
+def _spark_schema(table: IcebergTable):
+    """Spark StructType DDL for the table's current Iceberg schema."""
+    return _fields_ddl(table.current_schema().get("fields", []))
 
 
 def _apply_position_deletes(spark: SparkSession, df: DataFrame,
@@ -482,7 +494,7 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
     ``_metadata.file_path`` must be normalized with
     :func:`norm_file_path` first (write_position_deletes docstring)."""
     from pyspark.sql import functions as F
-    dels = (spark.read.parquet(*delete_files)
+    dels = (spark.read.schema(_POSITION_DELETE_DDL).parquet(*delete_files)
             .select(_norm_path(F.col("file_path")).alias("_del_file"),
                     F.col("pos").alias("_del_pos")))
     return df.join(dels, ["_del_file", "_del_pos"], "left_anti")
@@ -510,20 +522,27 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
 
     from pyspark.sql import functions as F
 
-    names_by_id = {f["id"]: f["name"]
-                   for f in schema.get("fields", [])}
-    by_cols: Dict[Tuple[str, ...], List[Tuple[str, int]]] = {}
+    fields_by_id = {f["id"]: f for f in schema.get("fields", [])}
+    # per file: (path, seq, read schema) — the equality fields' DDL, so
+    # no footer is inferred; a file without recorded ids is read as
+    # stored
+    by_cols: Dict[Tuple[str, ...],
+                  List[Tuple[str, int, Optional[str]]]] = {}
     for p, seq, eq_ids in eq_deletes:
         if eq_ids:
-            unknown = [i for i in eq_ids if i not in names_by_id]
+            unknown = [i for i in eq_ids if i not in fields_by_id]
             if unknown:
                 raise ValueError(
                     f"equality_ids {unknown} not in table schema "
-                    f"field ids {sorted(names_by_id)}")
-            cols = tuple(sorted(names_by_id[i] for i in eq_ids))
+                    f"field ids {sorted(fields_by_id)}")
+            fields = sorted((fields_by_id[i] for i in eq_ids),
+                            key=lambda f: f["name"])
+            cols = tuple(f["name"] for f in fields)
+            ddl = _fields_ddl(fields)
         else:
             cols = tuple(sorted(spark.read.parquet(p).columns))
-        by_cols.setdefault(cols, []).append((p, seq))
+            ddl = None
+        by_cols.setdefault(cols, []).append((p, seq, ddl))
 
     files_dim = spark.createDataFrame(
         [(_norm_path_py(k), int(v)) for k, v in data_seqs.items()],
@@ -537,8 +556,9 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
                 f"equality-delete columns {missing} not in table "
                 f"columns {df.columns}")
         dels = None
-        for p, seq in group:
-            d = (spark.read.parquet(p).select(*cols)
+        for p, seq, ddl in group:
+            reader = spark.read if ddl is None else spark.read.schema(ddl)
+            d = (reader.parquet(p).select(*cols)
                  .withColumn("_del_seq", F.lit(int(seq))))
             dels = d if dels is None else dels.unionByName(d)
         for c in cols:

@@ -12,9 +12,9 @@ SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# the join-heavy spatial queries are covered 1:1 in test_spatial;
-# exclude them here to keep the contract sweep fast
-SLOW = {"knn_join", "pip_join"}
+# kNN is covered 1:1 against brute force in test_spatial; exclude it
+# here to keep the contract sweep fast
+SLOW = {"knn_join"}
 
 
 @pytest.fixture(scope="module")
@@ -58,6 +58,14 @@ def test_oracle_keys_subset_of_queries():
 def test_query_matches_oracle(spark, duck, name):
     sdf = entry.queries()[name](spark, SF_DIR)
     _assert_match(sdf, duck, entry.oracle_sql()[name], name)
+
+
+def test_fingerprints_sort_hashes_once(spark):
+    """Each document's shingles are hashed and sorted once for all
+    fp columns, not once per column."""
+    sdf = entry.queries()["doc_fingerprints"](spark, SF_DIR)
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("array_sort(") == 1, plan
 
 
 def test_entry_per_zoom_summary(spark):

@@ -354,6 +354,27 @@ class TestPositionDeletes:
         for v in victims:
             assert v["url"] not in urls
 
+    def test_read_with_deletes_starts_no_spark_job(self, spark,
+                                                   tmp_path):
+        # delete files are read with the spec's position-delete schema
+        # and the equality columns' table types, so planning the read
+        # infers no Parquet footer
+        path, _snap, victims, n_before = self._table_with_deletes(
+            spark, tmp_path)
+        write_equality_deletes(spark.createDataFrame(
+            [("https://de.example/11",)], "url string"), path)
+        sc = spark.sparkContext
+        sc.setJobGroup("read-deletes-probe", "read_table only")
+        try:
+            got, stats = read_table(spark, path, with_stats=True)
+            jobs = sc.statusTracker().getJobIdsForGroup(
+                "read-deletes-probe")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        assert stats.position_deletes and stats.equality_deletes
+        assert got.count() == n_before - len(victims) - 1
+
     def test_equality_deletes_drop_matching_rows(self, spark,
                                                  tmp_path):
         path = str(tmp_path / "teq")

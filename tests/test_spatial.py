@@ -2,6 +2,8 @@
 cross-join baseline, extract vs histogram-side computation
 (FIXTURES.md §4/§5)."""
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,27 @@ from gdal2mbtiles_spark.sources.vectors import (
     polygons_df, query_points_df)
 
 N_PAGES = 3000
+
+
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """spark.sql.autoBroadcastJoinThreshold set to ``value`` inside the
+    block; -1 disables broadcast joins, so PIP shuffles both joins."""
+    conf = spark.conf
+    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _pairs(df, point_id="url"):
+    return {(r[point_id], r["poly_id"]) for r in df.collect()}
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -53,15 +76,14 @@ class TestRayCast:
 class TestPipJoin:
     def test_shuffle_path_matches_broadcast_path(self, spark,
                                                  geo_pages):
-        # broadcast_polys=False is the 10^6-polygon path: no driver
-        # collect, covers+vertices shuffle-join points on the cell key
+        # with broadcast joins disabled (the 10^6-polygon case) the
+        # same plan shuffle-joins covers and vertices on (key, salt)
         polys = polygons_df(spark, 50)
-        a = {(r["url"], r["poly_id"])
-             for r in point_in_polygon_join(geo_pages, polys)
-             .collect()}
-        b = {(r["url"], r["poly_id"])
-             for r in point_in_polygon_join(
-                 geo_pages, polys, broadcast_polys=False).collect()}
+        a = _pairs(point_in_polygon_join(geo_pages, polys))
+        with _broadcast_threshold(spark, "-1"):
+            out = point_in_polygon_join(geo_pages, polys)
+            b = _pairs(out)
+            assert "BroadcastHashJoin" not in _plan(out)
         assert a == b and len(a) > 0
 
     def test_salted_shuffle_path_bounds_hot_cell(self, spark):
@@ -93,9 +115,8 @@ class TestPipJoin:
         conf.set("spark.sql.adaptive.enabled", "false")
         try:
             def max_task_rows(n_salts):
-                out = point_in_polygon_join(
-                    pts, polys, broadcast_polys=False,
-                    n_salts=n_salts)
+                out = point_in_polygon_join(pts, polys,
+                                            n_salts=n_salts)
                 dist = (out.withColumn("p", F.spark_partition_id())
                         .groupBy("p").count().collect())
                 return (max(r["count"] for r in dist),
@@ -115,28 +136,18 @@ class TestPipJoin:
         assert salted_max <= hot_max / 2
 
     def test_auto_select_paths(self, spark, geo_pages):
-        # VERDICT #4 done-criterion: broadcast_polys=None must pick a
-        # path from the size estimate.  Under a tiny broadcast
-        # threshold auto MUST take the shuffle path (no driver
-        # collect) and still produce identical rows.
+        # the polys size estimate picks the join strategy: under the
+        # default threshold both polygon sides are broadcast; under a
+        # tiny one neither is hinted (AQE may still broadcast a side
+        # it measures below 1 KB), with identical rows
         polys = polygons_df(spark, 50)
-        want = {(r["url"], r["poly_id"])
-                for r in point_in_polygon_join(
-                    geo_pages, polys, broadcast_polys=True).collect()}
-        auto = {(r["url"], r["poly_id"])
-                for r in point_in_polygon_join(geo_pages, polys)
-                .collect()}
-        assert auto == want
-        conf = spark.conf
-        old = conf.get("spark.sql.autoBroadcastJoinThreshold")
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        try:
-            forced_shuffle = {(r["url"], r["poly_id"])
-                              for r in point_in_polygon_join(
-                                  geo_pages, polys).collect()}
-        finally:
-            conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert forced_shuffle == want
+        out = point_in_polygon_join(geo_pages, polys)
+        want = _pairs(out)
+        assert "BroadcastHashJoin" in _plan(out)
+        with _broadcast_threshold(spark, "1024"):
+            forced_shuffle = _pairs(point_in_polygon_join(geo_pages,
+                                                          polys))
+        assert forced_shuffle == want and len(want) > 0
 
     def test_matches_bruteforce(self, spark, geo_pages):
         polys = polygons_df(spark, 50)
@@ -343,25 +354,19 @@ class TestKnnRingBounds:
 
 
 def _extract_both_paths(spark, hist, polys, z):
-    """extract_poly_stats rows as sets, once on PIP's auto-selected
-    broadcast path and once under a tiny broadcast threshold, which
-    makes PIP take its shuffle path; asserts which path each ran."""
+    """extract_poly_stats rows as sets, once with PIP's broadcast
+    joins and once with broadcast joins disabled, which makes PIP
+    shuffle; asserts which strategy each ran."""
     def run():
         out = extract_poly_stats(hist, polys, z)
-        plan = out._jdf.queryExecution().executedPlan().toString()
         return ({(r["poly_id"], r["lit_pixels"], r["alpha_sum"])
-                 for r in out.collect()}, plan)
+                 for r in out.collect()}, _plan(out))
 
     broadcast, plan = run()
-    assert "MapInPandas" not in plan, plan[:2000]
-    conf = spark.conf
-    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-    try:
+    assert "BroadcastHashJoin" in plan, plan[:2000]
+    with _broadcast_threshold(spark, "-1"):
         shuffle, plan = run()
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "MapInPandas" in plan, plan[:2000]
+    assert "BroadcastHashJoin" not in plan, plan[:2000]
     return broadcast, shuffle
 
 
@@ -375,8 +380,8 @@ class TestExtract:
                                    polygons_df(spark, 20), z)
         assert a == b and len(a) > 0
 
-    def test_alpha_sum_matches_point_side(self, spark, geo_pages):
-        z = 4
+    @pytest.mark.parametrize("z", [4, 24])
+    def test_alpha_sum_matches_point_side(self, spark, geo_pages, z):
         polys = polygons_df(spark, 20)
         got = {r["poly_id"]: (r["lit_pixels"], r["alpha_sum"])
                for r in extract_poly_stats(
@@ -409,12 +414,20 @@ class TestExtract:
                            int(alpha[inside].sum()))
         assert got == want
 
-
-    def test_pixel_key_zoom_bound(self, spark, geo_pages):
-        # the packed pixel key holds 2z + 16 bits
-        with pytest.raises(ValueError):
-            extract_poly_stats(pixel_histogram(geo_pages, z=24),
-                               polygons_df(spark, 2), 24)
+    def test_one_pass_over_histogram(self, spark, geo_pages):
+        # alpha rides the PIP join as its carried column: the plan
+        # aggregates the histogram once (partial + final over
+        # x, y, ppx, ppy behind one exchange) and joins only covers
+        # and vertices, with no join back to the pixel relation
+        import re
+        plan = _plan(extract_poly_stats(pixel_histogram(geo_pages, z=6),
+                                        polygons_df(spark, 20), 6))
+        key = r"x#\d+L?, y#\d+L?, ppx#\d+, ppy#\d+"
+        assert len(re.findall(r"HashAggregate\(keys=\[" + key,
+                              plan)) == 2, plan
+        assert len(re.findall(r"Exchange hashpartitioning\(" + key,
+                              plan)) == 1, plan
+        assert plan.count("HashJoin") == 2, plan
 
 
 class TestAutoSalt:
@@ -461,22 +474,19 @@ class TestAutoSalt:
             "cell", spark, sample_fraction=1.0)
         assert n_uni == 1
 
-    def test_auto_salted_rows_identical(self, spark):
+    def test_auto_salted_rows_identical(self, spark, monkeypatch):
         # end-to-end: auto (None) vs forced n_salts=1 produce the same
-        # pairs on the skewed fixture through the shuffle path
+        # pairs on the skewed fixture through the shuffle joins
+        from gdal2mbtiles_spark.operators import spatial
         from gdal2mbtiles_spark.sources.pages import (
             synth_pages_skewed, with_geo_skewed)
+        monkeypatch.setattr(spatial, "_SALT_SAMPLE_FRACTION", 1.0)
         pts = with_geo_skewed(
             synth_pages_skewed(spark, 4000, skew_fraction=0.5))
         polys = self._polys_one_hot(spark)
-        plain = {(r["url"], r["poly_id"])
-                 for r in point_in_polygon_join(
-                     pts, polys, broadcast_polys=False,
-                     n_salts=1).collect()}
-        auto = {(r["url"], r["poly_id"])
-                for r in point_in_polygon_join(
-                    pts, polys, broadcast_polys=False,
-                    salt_sample_fraction=1.0).collect()}
+        with _broadcast_threshold(spark, "-1"):
+            plain = _pairs(point_in_polygon_join(pts, polys, n_salts=1))
+            auto = _pairs(point_in_polygon_join(pts, polys))
         assert auto == plain and len(plain) >= 1500
 
 
@@ -573,23 +583,19 @@ class TestIdTypeAndCellExactness:
         assert got == list(zip(xs.tolist(), ys.tolist()))
 
     def test_pip_string_ids_both_paths(self, spark, geo_pages):
-        # the broadcast plan used int(poly_id) and crashed on string
-        # ids the shuffle plan handled — behaviour must not flip with
-        # the auto size estimate
+        # string ids survive both join strategies — behaviour must not
+        # flip with the polys size estimate
         polys = polygons_df(spark, 20).withColumn(
             "poly_id", F.concat(F.lit("poly-"), F.col("poly_id")))
-        a = {(r["url"], r["poly_id"])
-             for r in point_in_polygon_join(
-                 geo_pages, polys, broadcast_polys=True).collect()}
-        b = {(r["url"], r["poly_id"])
-             for r in point_in_polygon_join(
-                 geo_pages, polys, broadcast_polys=False).collect()}
+        a = _pairs(point_in_polygon_join(geo_pages, polys))
+        with _broadcast_threshold(spark, "-1"):
+            b = _pairs(point_in_polygon_join(geo_pages, polys))
         assert a == b and len(a) > 0
         assert all(p.startswith("poly-") for _, p in a)
 
     def test_extract_bigint_ids_both_paths(self, spark, geo_pages):
         # extract once hardcoded poly_id to int32; 64-bit ids
-        # overflowed — both PIP paths must preserve bigint
+        # overflowed — both join strategies must preserve bigint
         z = 6
         polys = polygons_df(spark, 8).withColumn(
             "poly_id",
