@@ -50,11 +50,6 @@ def tile_id_of_bytes(data: bytes) -> int:
 BORDER_TILE_ID = signed_low64(int(BORDER_TILE_MD5, 16))
 
 
-def md5_hex_col(col) -> Column:
-    """Hex MD5 of a binary column (JVM-side)."""
-    return F.md5(col)
-
-
 def signed64_from_hex16(hex16: Column) -> Column:
     """Parse 16 hex chars as unsigned 64-bit, reinterpret as signed.
 

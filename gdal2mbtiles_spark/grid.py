@@ -36,10 +36,6 @@ TILE_SCHEMA = "z int, x bigint, y bigint, px binary"
 WGS84_SEMI_MAJOR = 6378137.0
 EPSG_WEB_MERCATOR = 3857
 EPSG_WGS84 = 4326
-# Web-Mercator world half-extent in metres (== pi * semi-major axis).
-MERCATOR_WORLD_EXTENT = math.pi * WGS84_SEMI_MAJOR
-# Max latitude representable in Web-Mercator.
-MERCATOR_MAX_LAT = 85.05112877980659
 
 
 class XY(NamedTuple):

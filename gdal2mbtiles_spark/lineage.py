@@ -26,10 +26,6 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = ("stage string, partition_id int, rows bigint, "
-                  "bytes bigint, checksum bigint")
-
-
 def _stage_dir(run_dir: str, stage: str) -> str:
     return os.path.join(run_dir, "stages", stage)
 

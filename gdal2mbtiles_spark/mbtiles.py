@@ -18,6 +18,7 @@ with the reference's exact DDL (mbtiles.py:439-481), bulk-load pragmas
 
 from __future__ import annotations
 
+import itertools
 import os
 import sqlite3
 from typing import Dict, Iterable, Optional, Tuple
@@ -253,7 +254,6 @@ class MBTilesFile:
 def write_mbtiles(filename: str, images_df, map_df,
                   metadata: Dict[str, str],
                   version: Optional[str] = None,
-                  batch: int = 500,
                   commit_rows: int = 100_000) -> MBTilesFile:
     """Stream the distributed (images, map) pair into one SQLite file.
 
@@ -262,38 +262,28 @@ def write_mbtiles(filename: str, images_df, map_df,
 
     ``toLocalIterator(prefetchPartitions=True)`` keeps driver memory
     bounded to a few partitions (SURVEY.md §7 hard part 6) while Spark
-    computes the next partition concurrently with the SQLite inserts.
-    Transactions are committed every ``commit_rows`` rows, not per
-    ``batch`` and not once per stream: per-batch commits forced an
-    fsync every 500 rows (round-3 VERDICT #8), while one giant
+    computes the next partition concurrently with the SQLite inserts,
+    and ``executemany`` pulls the rows straight from that stream.
+    Transactions are committed every ``commit_rows`` rows, not every
+    few hundred and not once per stream: a commit every 500 rows
+    forced an fsync each time (round-3 VERDICT #8), while one giant
     transaction grows the rollback journal to ~the database size and
     a crash rolls back every row (round-4 ADVICE) — ~100k-row
     checkpoints keep fsyncs rare AND bound journal growth/crash
-    rework.  Map rows are deduped last-wins on the (z,x,y) PK by the
-    INSERT OR REPLACE, matching reference J4 out-of-order semantics.
+    rework.  Map rows are deduped
+    last-wins on the (z,x,y) PK by the INSERT OR REPLACE, matching
+    reference J4 out-of-order semantics.
     """
     f = MBTilesFile.create(filename, metadata, version=version)
-    buf, since_commit = [], 0
-    for row in (images_df.select("tile_id", "tile_data")
-                .toLocalIterator(prefetchPartitions=True)):
-        buf.append((row[0], bytes(row[1])))
-        if len(buf) >= batch:
-            since_commit += len(buf)
-            f.insert_images(buf, commit=since_commit >= commit_rows)
-            if since_commit >= commit_rows:
-                since_commit = 0
-            buf = []
-    f.insert_images(buf)
-    buf, since_commit = [], 0
-    for row in (map_df.select("zoom_level", "tile_column", "tile_row",
-                              "tile_id")
-                .toLocalIterator(prefetchPartitions=True)):
-        buf.append(tuple(row))
-        if len(buf) >= batch * 20:
-            since_commit += len(buf)
-            f.insert_map(buf, commit=since_commit >= commit_rows)
-            if since_commit >= commit_rows:
-                since_commit = 0
-            buf = []
-    f.insert_map(buf)
+    for df, cols, insert in (
+            (images_df, ("tile_id", "tile_data"), f.insert_images),
+            (map_df, ("zoom_level", "tile_column", "tile_row",
+                      "tile_id"), f.insert_map)):
+        # plain tuples: sqlite binds them without a Row.__getitem__
+        # call per column
+        rows = map(tuple, df.select(*cols).toLocalIterator(
+            prefetchPartitions=True))
+        for first in rows:
+            insert(itertools.chain(
+                (first,), itertools.islice(rows, commit_rows - 1)))
     return f

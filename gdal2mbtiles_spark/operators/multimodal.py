@@ -21,9 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = ("doc_id bigint, media binary, media_type string, "
-                "width int, height int, n_frames int")
-
 FEATURE_DIM = 16
 
 

@@ -93,15 +93,9 @@ class Ellipsoid:
 WGS84 = Ellipsoid(6378137.0, 298.257223563)
 GRS80 = Ellipsoid(6378137.0, 298.257222101)
 
-# legacy module constants (WGS84), kept for the cross-validation tests
+# WGS84 constants for the meridian-arc cross-check
 A_WGS84 = WGS84.a
-F_WGS84 = WGS84.f
-N3 = WGS84.n
 E2 = WGS84.e2
-E1 = WGS84.e1
-_A_RECT = WGS84.a_rect
-ALPHA = WGS84.alpha
-BETA = WGS84.beta
 
 UTM_K0 = 0.9996
 UTM_FE = 500_000.0
@@ -442,10 +436,6 @@ _ALBERS_EPSG = {
 
 def is_lcc_epsg(epsg: int) -> bool:
     return epsg in _LCC_EPSG
-
-
-def is_polar_epsg(epsg: int) -> bool:
-    return epsg in _POLAR_EPSG
 
 
 def is_supported_epsg(epsg: int) -> bool:

@@ -21,10 +21,8 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from .grid import TILE_SIDE
 
@@ -397,17 +395,3 @@ class TouchRenderer:
     def render(self, raw: bytes, **_) -> bytes:
         return b""
 
-
-def render_map_in_pandas(renderer):
-    """Adapter: renderer -> mapInPandas function over an images
-    DataFrame ``(tile_id long, tile_data binary)`` with raw buffers,
-    producing encoded tile_data.  Kept 1:1 so the hash column survives."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["tile_data"] = [
-                renderer.render(bytes(b)) for b in pdf["tile_data"]]
-            yield pdf
-
-    return fn

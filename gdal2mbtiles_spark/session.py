@@ -21,15 +21,26 @@ ARROW_MAX_RECORDS = 65536
 ARROW_MAX_BYTES = 64 * 1024 * 1024
 
 
+def default_driver_memory() -> str:
+    """Driver heap sized to this machine: 40% of physical memory, at
+    least 1g and at most 32g (6g on a 16 GB box).  Local mode runs the
+    executors inside the driver JVM, and the Python workers and the OS
+    page cache need the rest."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, int(0.4 * total / 2 ** 30)))}g"
+
+
 def get_spark(cores: Optional[int] = None,
               app: str = "gdal2mbtiles_spark",
               shuffle_partitions: Optional[int] = None,
               ui: bool = False) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
-    cores defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.  On a
-    real cluster the same engine code runs unchanged — only
-    master/partition settings differ (spark-submit --py-files).
+    cores defaults to $SPARK_GRAFT_CPUS (driver contract) or 32, and
+    the driver heap to $SPARK_GRAFT_DRIVER_MEM or
+    :func:`default_driver_memory`.  On a real cluster the same engine
+    code runs unchanged — only master/partition settings differ
+    (spark-submit --py-files).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -58,7 +69,8 @@ def get_spark(cores: Optional[int] = None,
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(ARROW_MAX_BYTES))
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )

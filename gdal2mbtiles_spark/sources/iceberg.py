@@ -1,28 +1,30 @@
-"""Native Iceberg v2 table layout: metadata, manifests, planning.
+"""Native Iceberg v2 table layout: metadata, manifests, planning, commits.
 
 The production pages source is an Iceberg table (BASELINE.json
-input_hint); this sandbox has no Iceberg runtime jar, so rounds 1-4
-fell back to a Hive-partitioned Parquet stand-in.  This module closes
-the gap from first principles: it reads (and, for fixtures and the
-pages sink, writes) the PUBLIC Iceberg v2 table spec directly —
+input_hint) and this sandbox has no Iceberg runtime jar, so this module
+reads and writes the PUBLIC Iceberg v2 table spec directly:
 ``metadata/vN.metadata.json`` -> snapshot -> manifest list (Avro) ->
-manifests (Avro) -> data-file plan — with the two prunings that make
-Iceberg matter at 10^12 rows:
+manifests (Avro) -> data-file plan.  Reads make the two prunings that
+make Iceberg matter at 10^12 rows:
 
 * **manifest-level**: a manifest whose partition field summaries
   (lower/upper bounds) exclude the filter value is never opened —
-  O(manifests) metadata reads instead of O(files);
+  O(manifests) metadata reads instead of O(files); a manifest whose
+  summaries cannot be compared with a filter is opened and counted
+  (``PlanStats.manifests_unprunable``);
 * **file-level**: a data file whose identity-partition value misses
   the filter is never handed to Spark — the scan's file list is
   exact, stronger than directory-listing pruning (no listing at all).
 
-Scan planning is driver-side over kilobytes of metadata (exactly how
-Iceberg itself plans); the data path stays fully distributed — a
-Parquet read of the planned files with the table's own schema.  The
-decoder is writer-schema driven (sources/avro.py), so manifests
-written by real Iceberg writers read correctly for the v2 subset used
-here.  No reference-repo counterpart exists (the reference never
-touches table formats).
+Every write — a data overwrite or append, a position delete, an
+equality delete — commits through ``_commit_snapshot``: one Spark
+write into a per-snapshot directory, one manifest of the new files, a
+manifest list of the current snapshot's manifests plus that one, then
+``v<n+1>.metadata.json`` and the version hint.  Planning and commits
+are driver-side over kilobytes of metadata (exactly how Iceberg itself
+works); the data path stays fully distributed.  The Avro decoder is
+writer-schema driven (sources/avro.py), so manifests written by real
+Iceberg writers read correctly for the v2 subset used here.
 """
 
 from __future__ import annotations
@@ -31,7 +33,8 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -114,6 +117,9 @@ class PlanStats:
     surfaced in PLANS.md)."""
     manifests_total: int = 0
     manifests_opened: int = 0
+    # data manifests opened because a filter could not be compared
+    # with their partition summaries (_manifest_may_match -> None)
+    manifests_unprunable: int = 0
     files_total: int = 0
     files_planned: int = 0
     planned: List[str] = field(default_factory=list)
@@ -128,7 +134,8 @@ class PlanStats:
 
 
 class IcebergTable:
-    """Read-side handle on an Iceberg v2 table directory."""
+    """Handle on an Iceberg v2 table directory at its current
+    version: scan planning, and the state a commit starts from."""
 
     def __init__(self, path: str):
         self.path = path.rstrip("/")
@@ -137,7 +144,6 @@ class IcebergTable:
             raise FileNotFoundError(
                 f"not an Iceberg table (no metadata/): {path}")
         hint = os.path.join(meta_dir, "version-hint.text")
-        version = None
         if os.path.exists(hint):
             with open(hint) as fh:
                 version = int(fh.read().strip())
@@ -239,9 +245,12 @@ class IcebergTable:
             # spec-scoped summaries we don't track, and a skipped
             # delete silently resurrects rows (correctness first).
             is_delete = mf.get("content", 0) == 1
-            if not is_delete and not self._manifest_may_match(
-                    mf, filters):
-                continue
+            if not is_delete:
+                may_match = self._manifest_may_match(mf, filters)
+                if may_match is False:
+                    continue
+                if may_match is None:
+                    stats.manifests_unprunable += 1
             stats.manifests_opened += 1
             mpath = self._resolve(mf["manifest_path"])
             for entry in avro.read_container(mpath):
@@ -309,10 +318,11 @@ class IcebergTable:
         return stats.planned, stats
 
     def _manifest_may_match(self, mf: Dict,
-                            filters: Dict[str, str]) -> bool:
+                            filters: Dict[str, str]) -> Optional[bool]:
         """Manifest-level pruning via partition field summaries:
-        conservative — only skips when the bounds PROVE no file in
-        the manifest can match."""
+        conservative — False only when the bounds PROVE no file in
+        the manifest can match; None when some filter could not be
+        compared with them, so the manifest is opened unpruned."""
         if not filters:
             return True
         # summaries are positional in the manifest's OWN spec: under
@@ -323,16 +333,19 @@ class IcebergTable:
         # is an optimization; when in doubt, open the manifest.
         spec_id = mf.get("partition_spec_id")
         if spec_id is not None and spec_id != self._default_spec_id:
-            return True
+            return None
         summaries = mf.get("partitions")
         if not summaries:
-            return True                       # no stats -> must open
+            return None                       # no stats -> must open
+        compared = True
         for i, name in enumerate(self.partition_fields):
-            if name not in filters or i >= len(summaries):
+            if name not in filters:
                 continue
             # bounds hold the raw serialized value: byte order only
             # matches value order for string sources (r05 ADVICE)
-            if self._partition_source_types.get(name) != "string":
+            if (i >= len(summaries) or
+                    self._partition_source_types.get(name) != "string"):
+                compared = False
                 continue
             s = summaries[i]
             want = filters[name].encode("utf-8")
@@ -341,7 +354,7 @@ class IcebergTable:
                 return False
             if hi is not None and want > bytes(hi):
                 return False
-        return True
+        return True if compared else None
 
 
 # ---- read / write -----------------------------------------------------------
@@ -438,17 +451,20 @@ def _plain_path_py(p: str) -> str:
     (percent-decoding only, ``+`` preserved)."""
     import re
     if p.startswith("file:"):
-        from urllib.parse import unquote
         p = unquote(p[5:])
     return re.sub("^/+", "/", p) if p.startswith("/") else p
 
 
-# Iceberg primitive type -> Spark SQL type
-_SPARK_TYPES = {"string": "string", "long": "bigint", "int": "int",
-                "double": "double", "float": "float",
-                "boolean": "boolean", "binary": "binary",
-                "timestamptz": "timestamp", "timestamp": "timestamp",
-                "date": "date"}
+# (Iceberg primitive type, Spark SQL type): reads map every Iceberg
+# type to its Spark type; writes map a Spark type to the FIRST Iceberg
+# type that names it, so Spark timestamps are written as timestamptz
+_TYPES = [("string", "string"), ("long", "bigint"), ("int", "int"),
+          ("double", "double"), ("float", "float"),
+          ("boolean", "boolean"), ("binary", "binary"),
+          ("timestamptz", "timestamp"), ("timestamp", "timestamp"),
+          ("date", "date")]
+_SPARK_TYPE = dict(_TYPES)
+_ICEBERG_TYPE = {spark: ice for ice, spark in reversed(_TYPES)}
 
 # the spec's position-delete file schema
 _POSITION_DELETE_DDL = "file_path string, pos bigint"
@@ -461,10 +477,10 @@ def _fields_ddl(fields: List[Dict]) -> str:
     cols = []
     for f in fields:
         typ = f.get("type")
-        if not isinstance(typ, str) or typ not in _SPARK_TYPES:
+        if not isinstance(typ, str) or typ not in _SPARK_TYPE:
             raise ValueError(f"Iceberg field {f['name']!r} has type "
                              f"{typ!r}, which has no Spark mapping")
-        cols.append(f"`{f['name']}` {_SPARK_TYPES[typ]}")
+        cols.append(f"`{f['name']}` {_SPARK_TYPE[typ]}")
     return ", ".join(cols)
 
 
@@ -584,175 +600,21 @@ def write_table(df: DataFrame, path: str,
     The data write is fully distributed (one Spark parquet write;
     the identity-partition columns are DUPLICATED into ``_p_<name>``
     directory keys so the source columns stay inside the data files,
-    as the Iceberg spec requires).  Only the metadata walk — listing
-    the new files and their footer row counts — is driver-side, and
-    it is O(files in this snapshot), the same cost Iceberg's own
-    commit path pays."""
-    import pyarrow.parquet as pq
+    as the Iceberg spec requires).  Only the commit — listing the new
+    files and their footer row counts — is driver-side, and it is
+    O(files in this snapshot), the same cost Iceberg's own commit path
+    pays."""
     from pyspark.sql import functions as F
 
     partition_by = partition_by or []
-    path = path.rstrip("/")
-    meta_dir = os.path.join(path, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-
-    prev_version = 0
-    prev_meta = None
-    if mode == "append":
-        hint = os.path.join(meta_dir, "version-hint.text")
-        if os.path.exists(hint):
-            with open(hint) as fh:
-                prev_version = int(fh.read().strip())
-            with open(os.path.join(
-                    meta_dir,
-                    f"v{prev_version}.metadata.json")) as fh:
-                prev_meta = json.load(fh)
-
-    snapshot_id = (max((s["snapshot-id"] for s in
-                        (prev_meta or {}).get("snapshots", [])),
-                       default=0) + 1)
-    seq = snapshot_id
-
-    # -- data: one distributed write into a per-snapshot directory
     out = df
     for name in partition_by:
         out = out.withColumn(f"_p_{name}", F.col(name))
-    data_dir = os.path.join(path, "data", f"snap-{snapshot_id}")
-    (out.write.partitionBy([f"_p_{n}" for n in partition_by])
-        .mode("overwrite").parquet(data_dir))
-
-    # -- manifest: walk the new files (driver-side metadata, O(files))
-    entries = []
-    for root, _dirs, names in os.walk(data_dir):
-        rel = os.path.relpath(root, data_dir)
-        part = {}
-        for seg in ([] if rel == "." else rel.split(os.sep)):
-            key, _, val = seg.partition("=")
-            if key.startswith("_p_"):
-                # Spark URL-encodes special chars in partition dirs;
-                # the manifest stores the DECODED value.  A NULL
-                # partition value arrives as the hive sentinel
-                # directory token and must round-trip back to None so
-                # the manifest summaries report contains_null
-                # faithfully (r05 ADVICE)
-                from urllib.parse import unquote
-                dec = unquote(val)
-                part[key[3:]] = (None
-                                 if dec == "__HIVE_DEFAULT_PARTITION__"
-                                 else dec)
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, name)
-            entries.append({
-                "status": 1, "snapshot_id": snapshot_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": os.path.abspath(fpath),
-                    "file_format": "PARQUET",
-                    "partition": {n: part.get(n)
-                                  for n in partition_by},
-                    "record_count":
-                        pq.ParquetFile(fpath).metadata.num_rows,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "equality_ids": None,
-                }})
-    entries.sort(key=lambda e: e["data_file"]["file_path"])
-
-    mpath = os.path.join(meta_dir,
-                         f"manifest-{snapshot_id}.avro")
-    avro.write_container(mpath, manifest_entry_schema(partition_by),
-                         entries)
-
-    def _summaries(es):
-        out_s = []
-        for i, name in enumerate(partition_by):
-            vals = [e["data_file"]["partition"].get(name)
-                    for e in es]
-            known = [v.encode("utf-8") for v in vals
-                     if v is not None]
-            out_s.append({
-                "contains_null": any(v is None for v in vals),
-                "contains_nan": None,
-                "lower_bound": min(known) if known else None,
-                "upper_bound": max(known) if known else None,
-            })
-        return out_s
-
-    new_manifest = {
-        "manifest_path": os.path.abspath(mpath),
-        "manifest_length": os.path.getsize(mpath),
-        "partition_spec_id": 0, "content": 0,
-        "sequence_number": seq, "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0, "deleted_files_count": 0,
-        "added_rows_count": sum(e["data_file"]["record_count"]
-                                for e in entries),
-        "existing_rows_count": 0, "deleted_rows_count": 0,
-        "partitions": _summaries(entries),
-    }
-    prior_manifests = []
-    if prev_meta is not None:
-        prev_snap = [s for s in prev_meta.get("snapshots", [])
-                     if s["snapshot-id"]
-                     == prev_meta.get("current-snapshot-id")]
-        if prev_snap:
-            prior_manifests = list(avro.read_container(
-                prev_snap[0]["manifest-list"]))
-    mlist_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-manifest-list.avro")
-    avro.write_container(mlist_path, MANIFEST_LIST_SCHEMA,
-                         prior_manifests + [new_manifest])
-
-    # -- table metadata (v2 JSON)
-    ice_fields = []
-    for i, f_ in enumerate(df.schema.fields):
-        ice_fields.append({
-            "id": i + 1, "name": f_.name, "required": False,
-            "type": _iceberg_type(f_.dataType.simpleString())})
-    snap_rec = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": os.path.abspath(mlist_path),
-        "summary": {"operation": "append"},
-        "schema-id": 0,
-    }
-    snapshots = ((prev_meta or {}).get("snapshots", [])
-                 + [snap_rec])
-    meta = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-000000000000",
-        "location": os.path.abspath(path),
-        "last-sequence-number": seq,
-        "last-updated-ms": snap_rec["timestamp-ms"],
-        "last-column-id": len(ice_fields),
-        "current-schema-id": 0,
-        "schemas": [{"type": "struct", "schema-id": 0,
-                     "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{
-            "spec-id": 0,
-            "fields": [{"name": n, "transform": "identity",
-                        "source-id": _source_id(ice_fields, n),
-                        "field-id": 1000 + i}
-                       for i, n in enumerate(partition_by)]}],
-        "last-partition-id": 999 + len(partition_by),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "current-snapshot-id": snapshot_id,
-        "snapshots": snapshots,
-    }
-    version = prev_version + 1
-    with open(os.path.join(meta_dir,
-                           f"v{version}.metadata.json"), "w") as fh:
-        json.dump(meta, fh, indent=1)
-    with open(os.path.join(meta_dir, "version-hint.text"),
-              "w") as fh:
-        fh.write(str(version))
-    return snapshot_id
+    writer = (out.write.partitionBy([f"_p_{n}" for n in partition_by])
+              .mode("overwrite"))
+    return _commit_snapshot(path, writer.parquet, schema=df.schema,
+                            partition_by=partition_by,
+                            overwrite=mode != "append")
 
 
 def write_position_deletes(deletes: DataFrame, path: str) -> int:
@@ -766,8 +628,9 @@ def write_position_deletes(deletes: DataFrame, path: str) -> int:
     path as the manifest stores it; paths captured from
     ``_metadata.file_path`` (a percent-encoded URI) must go through
     :func:`norm_file_path` first."""
-    return _commit_delete_snapshot(
-        deletes.select("file_path", "pos"), path, file_content=1)
+    return _commit_snapshot(
+        path, deletes.select("file_path", "pos").write.mode("overwrite")
+        .parquet, content=1)
 
 
 def write_equality_deletes(deletes: DataFrame, path: str) -> int:
@@ -777,71 +640,106 @@ def write_equality_deletes(deletes: DataFrame, path: str) -> int:
     data file predates this snapshot (spec sequence rule — rows
     appended later survive, which read_table enforces).  The
     manifest entry records the columns' field ids as equality_ids."""
-    table = IcebergTable(path)
-    schema = table.current_schema()
-    ids_by_name = {f["name"]: f["id"] for f in schema["fields"]}
+    ids_by_name = {f["name"]: f["id"]
+                   for f in IcebergTable(path).current_schema()["fields"]}
     missing = [c for c in deletes.columns if c not in ids_by_name]
     if missing:
         raise ValueError(
             f"equality-delete columns {missing} not in table schema "
             f"{sorted(ids_by_name)}")
-    eq_ids = [ids_by_name[c] for c in deletes.columns]
-    return _commit_delete_snapshot(deletes, path, file_content=2,
-                                   equality_ids=eq_ids)
+    return _commit_snapshot(
+        path, deletes.write.mode("overwrite").parquet, content=2,
+        equality_ids=[ids_by_name[c] for c in deletes.columns])
 
 
-def _commit_delete_snapshot(deletes: DataFrame, path: str,
-                            file_content: int,
-                            equality_ids: Optional[List[int]] = None
-                            ) -> int:
+def _commit_snapshot(path: str, write: Callable[[str], None],
+                     content: int = 0, schema=None,
+                     partition_by: Sequence[str] = (),
+                     overwrite: bool = False,
+                     equality_ids: Optional[List[int]] = None) -> int:
+    """Commit one snapshot whose Parquet files ``write(dir)`` puts
+    under ``dir``; returns the snapshot id, also its sequence number.
+
+    ``content`` is every new file's Iceberg content: 0 data, 1
+    position deletes, 2 equality deletes (recording ``equality_ids``).
+    A data write rebuilds the schema and identity spec from ``schema``
+    (the DataFrame's StructType) and ``partition_by``; with
+    ``overwrite``, or on a path without metadata, it starts the table
+    over at version 0.  A delete carries the current metadata over and
+    raises on a path without a table."""
     import pyarrow.parquet as pq
 
     path = path.rstrip("/")
-    meta_dir = os.path.join(path, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    with open(hint) as fh:
-        prev_version = int(fh.read().strip())
-    with open(os.path.join(
-            meta_dir, f"v{prev_version}.metadata.json")) as fh:
-        prev_meta = json.load(fh)
-
-    snapshot_id = max(s["snapshot-id"]
-                      for s in prev_meta["snapshots"]) + 1
+    table = None
+    if content != 0 or not overwrite:
+        try:
+            table = IcebergTable(path)
+        except FileNotFoundError:
+            if content != 0:
+                raise
+    meta = table.metadata if table else {}
+    snapshots = meta.get("snapshots", [])
+    snapshot_id = max((s["snapshot-id"] for s in snapshots),
+                      default=0) + 1
     seq = snapshot_id
-    del_dir = os.path.join(path, "data", f"deletes-snap-{snapshot_id}")
-    deletes.write.mode("overwrite").parquet(del_dir)
+    manifests = [
+        m for s in snapshots
+        if s["snapshot-id"] == meta.get("current-snapshot-id")
+        for m in avro.read_container(table._resolve(s["manifest-list"]))]
+    if content == 0:
+        # before the Spark write: an unmapped type must not leave files
+        meta = _data_metadata(path, schema, partition_by, meta)
+    meta_dir = os.path.join(path, "metadata")
+    os.makedirs(meta_dir, exist_ok=True)
 
+    kind = "" if content == 0 else "deletes-"
+    out_dir = os.path.join(path, "data", f"{kind}snap-{snapshot_id}")
+    write(out_dir)
+
+    # one manifest entry per new file (driver-side metadata, O(files))
     entries = []
-    for root, _dirs, names in os.walk(del_dir):
+    for root, _dirs, names in os.walk(out_dir):
+        rel = os.path.relpath(root, out_dir)
+        part = {}
+        for seg in (rel.split(os.sep) if partition_by and rel != "."
+                    else []):
+            key, _, val = seg.partition("=")
+            if key.startswith("_p_"):
+                # Spark URL-encodes partition dirs and names NULL by
+                # the hive sentinel; the manifest stores the decoded
+                # value, or None so summaries report contains_null
+                val = unquote(val)
+                part[key[3:]] = (None
+                                 if val == "__HIVE_DEFAULT_PARTITION__"
+                                 else val)
         for name in sorted(names):
             if not name.endswith(".parquet"):
                 continue
-            fpath = os.path.join(root, name)
+            fpath = os.path.abspath(os.path.join(root, name))
             entries.append({
                 "status": 1, "snapshot_id": snapshot_id,
                 "sequence_number": seq, "file_sequence_number": seq,
                 "data_file": {
-                    "content": file_content,
-                    "file_path": os.path.abspath(fpath),
+                    "content": content,
+                    "file_path": fpath,
                     "file_format": "PARQUET",
-                    "partition": {},
+                    "partition": {n: part.get(n) for n in partition_by},
                     "record_count":
                         pq.ParquetFile(fpath).metadata.num_rows,
                     "file_size_in_bytes": os.path.getsize(fpath),
                     "equality_ids": equality_ids,
                 }})
-    mpath = os.path.join(meta_dir,
-                         f"manifest-{snapshot_id}-deletes.avro")
-    avro.write_container(mpath, manifest_entry_schema([]), entries)
+    entries.sort(key=lambda e: e["data_file"]["file_path"])
 
-    cur = [s for s in prev_meta["snapshots"]
-           if s["snapshot-id"] == prev_meta["current-snapshot-id"]]
-    prior_manifests = list(avro.read_container(
-        cur[0]["manifest-list"])) if cur else []
-    new_manifest = {
+    mpath = os.path.join(
+        meta_dir, f"manifest-{snapshot_id}"
+        f"{'' if content == 0 else '-deletes'}.avro")
+    avro.write_container(mpath, manifest_entry_schema(list(partition_by)),
+                         entries)
+    manifests.append({
         "manifest_path": os.path.abspath(mpath),
         "manifest_length": os.path.getsize(mpath),
-        "partition_spec_id": 0, "content": 1,
+        "partition_spec_id": 0, "content": int(content != 0),
         "sequence_number": seq, "min_sequence_number": seq,
         "added_snapshot_id": snapshot_id,
         "added_files_count": len(entries),
@@ -849,50 +747,90 @@ def _commit_delete_snapshot(deletes: DataFrame, path: str,
         "added_rows_count": sum(e["data_file"]["record_count"]
                                 for e in entries),
         "existing_rows_count": 0, "deleted_rows_count": 0,
-        "partitions": [],
-    }
+        "partitions": _summaries(entries, partition_by),
+    })
     mlist_path = os.path.join(
         meta_dir, f"snap-{snapshot_id}-manifest-list.avro")
-    avro.write_container(mlist_path, MANIFEST_LIST_SCHEMA,
-                         prior_manifests + [new_manifest])
+    avro.write_container(mlist_path, MANIFEST_LIST_SCHEMA, manifests)
 
-    snap_rec = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": os.path.abspath(mlist_path),
-        "summary": {"operation": "delete"},
-        "schema-id": 0,
-    }
-    meta = dict(prev_meta)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = snap_rec["timestamp-ms"]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = prev_meta["snapshots"] + [snap_rec]
-    version = prev_version + 1
+    now_ms = int(time.time() * 1000)
+    meta = {**meta,
+            "last-sequence-number": seq,
+            "last-updated-ms": now_ms,
+            "current-snapshot-id": snapshot_id,
+            "snapshots": meta.get("snapshots", []) + [{
+                "snapshot-id": snapshot_id,
+                "sequence-number": seq,
+                "timestamp-ms": now_ms,
+                "manifest-list": os.path.abspath(mlist_path),
+                "summary": {
+                    "operation": "append" if content == 0 else "delete"},
+                "schema-id": 0,
+            }]}
+    version = (table.version if table else 0) + 1
     with open(os.path.join(meta_dir,
                            f"v{version}.metadata.json"), "w") as fh:
         json.dump(meta, fh, indent=1)
-    with open(hint, "w") as fh:
+    with open(os.path.join(meta_dir, "version-hint.text"),
+              "w") as fh:
         fh.write(str(version))
     return snapshot_id
 
 
-def _source_id(fields: List[Dict], name: str) -> int:
-    for f_ in fields:
-        if f_["name"] == name:
-            return f_["id"]
-    raise ValueError(f"partition column {name!r} not in schema")
+def _data_metadata(path: str, schema, partition_by: Sequence[str],
+                   prior: Dict) -> Dict:
+    """Table metadata for a data write, before its snapshot is added:
+    the schema and identity spec come from the DataFrame's ``schema``,
+    the snapshot history from ``prior`` (empty when the table starts
+    over)."""
+    fields = []
+    for i, f_ in enumerate(schema.fields):
+        typ = f_.dataType.simpleString()
+        if typ not in _ICEBERG_TYPE:
+            raise ValueError(f"Spark type {typ!r} has no Iceberg "
+                             f"mapping in this writer")
+        fields.append({"id": i + 1, "name": f_.name, "required": False,
+                       "type": _ICEBERG_TYPE[typ]})
+    ids = {f_["name"]: f_["id"] for f_ in fields}
+    for name in partition_by:
+        if name not in ids:
+            raise ValueError(f"partition column {name!r} not in schema")
+    return {
+        "format-version": 2,
+        "table-uuid": "00000000-0000-0000-0000-000000000000",
+        "location": os.path.abspath(path),
+        "last-sequence-number": prior.get("last-sequence-number", 0),
+        "last-updated-ms": prior.get("last-updated-ms", 0),
+        "last-column-id": len(fields),
+        "current-schema-id": 0,
+        "schemas": [{"type": "struct", "schema-id": 0,
+                     "fields": fields}],
+        "default-spec-id": 0,
+        "partition-specs": [{
+            "spec-id": 0,
+            "fields": [{"name": n, "transform": "identity",
+                        "source-id": ids[n], "field-id": 1000 + i}
+                       for i, n in enumerate(partition_by)]}],
+        "last-partition-id": 999 + len(partition_by),
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "current-snapshot-id": prior.get("current-snapshot-id"),
+        "snapshots": prior.get("snapshots", []),
+    }
 
 
-_TYPE_MAP = {"string": "string", "bigint": "long", "int": "int",
-             "double": "double", "float": "float",
-             "boolean": "boolean", "binary": "binary",
-             "timestamp": "timestamptz", "date": "date"}
-
-
-def _iceberg_type(spark_type: str) -> str:
-    if spark_type not in _TYPE_MAP:
-        raise ValueError(f"Spark type {spark_type!r} has no Iceberg "
-                         f"mapping in this writer")
-    return _TYPE_MAP[spark_type]
+def _summaries(entries: List[Dict],
+               partition_by: Sequence[str]) -> List[Dict]:
+    """Manifest-list partition field summaries: null flag and the
+    UTF-8 byte bounds of each (string) identity partition field."""
+    out = []
+    for name in partition_by:
+        vals = [e["data_file"]["partition"].get(name) for e in entries]
+        known = [v.encode("utf-8") for v in vals if v is not None]
+        out.append({
+            "contains_null": any(v is None for v in vals),
+            "contains_nan": None,
+            "lower_bound": min(known) if known else None,
+            "upper_bound": max(known) if known else None,
+        })
+    return out

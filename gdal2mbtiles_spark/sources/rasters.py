@@ -23,8 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import (RasterMeta, TILE_SCHEMA, TILE_SIDE,
-                    whole_world_raster_meta)
+from ..grid import RasterMeta, TILE_SCHEMA, TILE_SIDE
 
 
 def gradient_pixels(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
@@ -92,12 +91,6 @@ def native_tiles(spark: SparkSession, meta: RasterMeta,
 
     return keys.mapInPandas(gen, schema=TILE_SCHEMA)
 
-
-def world_gradient(spark: SparkSession, size: int = 1024
-                   ) -> Tuple[DataFrame, RasterMeta]:
-    """world_1024-style fixture: whole-world RGBA gradient."""
-    meta = whole_world_raster_meta(size, size)
-    return native_tiles(spark, meta), meta
 
 def synth_gradient_blocks(spark: SparkSession, xsize: int,
                           ysize: int) -> DataFrame:

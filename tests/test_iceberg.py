@@ -220,6 +220,78 @@ class TestIcebergTable:
         names = [f["name"] for f in meta["schemas"][0]["fields"]]
         assert names == ["url", "warc_ts", "html", "text", "lang"]
 
+    def test_one_commit_path_history(self, spark, tmp_path):
+        """Overwrite -> append -> position delete -> equality delete ->
+        append: every commit adds one manifest to the current
+        snapshot's list and one metadata version, and time travel to
+        each snapshot sees exactly the rows committed up to it."""
+        from pyspark.sql import functions as F
+        path = str(tmp_path / "thist")
+        snaps = [write_table(_pages(spark, langs=("en", "de")), path,
+                             partition_by=["lang"]),
+                 write_table(_pages(spark, langs=("fr",)), path,
+                             partition_by=["lang"], mode="append")]
+        victims = (read_table(spark, path).select(
+            "url",
+            norm_file_path(
+                F.col("_metadata.file_path")).alias("file_path"),
+            F.col("_metadata.row_index").alias("pos"))
+            .orderBy("url").limit(3))
+        victim_urls = {r["url"] for r in victims.collect()}
+        snaps.append(write_position_deletes(
+            victims.select("file_path", "pos"), path))
+        snaps.append(write_equality_deletes(spark.createDataFrame(
+            [("https://en.example/7",)], "url string"), path))
+        reborn = _pages(spark, langs=("en",)).where(
+            "url = 'https://en.example/7'")
+        snaps.append(write_table(reborn, path, partition_by=["lang"],
+                                 mode="append"))
+        assert snaps == [1, 2, 3, 4, 5]
+
+        all_urls = {r["url"] for r in _pages(spark).collect()}
+        en_de = {u for u in all_urls if "//fr." not in u}
+        after_pos = all_urls - victim_urls
+        expected = [en_de, all_urls, after_pos,
+                    after_pos - {"https://en.example/7"},
+                    after_pos]
+        for snap, want in zip(snaps, expected):
+            got = [r["url"] for r in
+                   read_table(spark, path, snapshot_id=snap).collect()]
+            assert len(got) == len(want) and set(got) == want, snap
+
+        table = IcebergTable(path)
+        for k, snap in enumerate(table.snapshots(), start=1):
+            mlist = list(avro.read_container(
+                table._resolve(snap["manifest-list"])))
+            assert len(mlist) == k
+            assert [m["content"] for m in mlist] == \
+                [0, 0, 1, 1, 0][:k]
+            assert snap["summary"]["operation"] == \
+                ("delete" if k in (3, 4) else "append")
+        meta_dir = os.path.join(path, "metadata")
+        assert sorted(f for f in os.listdir(meta_dir)
+                      if f.endswith(".metadata.json")) == \
+            [f"v{v}.metadata.json" for v in range(1, 6)]
+        assert table.version == 5
+
+    def test_unprunable_manifests_counted(self, spark, tmp_path):
+        """A filter on a partition column whose source is not a string
+        cannot be compared with the summaries' byte bounds: the
+        manifest is opened and counted, never silently."""
+        path = str(tmp_path / "tint")
+        write_table(spark.createDataFrame(
+            [(i, f"r{i}") for i in range(6)], "k int, v string"),
+            path, partition_by=["k"])
+        files, stats = IcebergTable(path).plan_files(filters={"k": "1"})
+        assert stats.manifests_unprunable == 1
+        assert len(files) == 1
+        pages = str(tmp_path / "tlang")
+        write_table(_pages(spark), pages, partition_by=["lang"])
+        _files, stats = IcebergTable(pages).plan_files(
+            filters={"lang": "de"})
+        assert stats.manifests_opened == 1
+        assert stats.manifests_unprunable == 0
+
 
     def test_unmapped_type_raises(self, spark, tmp_path):
         # the table schema drives the data read: a type with no Spark
@@ -452,8 +524,7 @@ class TestPositionDeletes:
         """A spec-compliant delete file may STORE extra columns beyond
         its equality_ids; only the equality_ids columns define the
         match (extra-column mismatches must not resurrect rows)."""
-        from gdal2mbtiles_spark.sources.iceberg import \
-            _commit_delete_snapshot
+        from gdal2mbtiles_spark.sources.iceberg import _commit_snapshot
         path = str(tmp_path / "tids")
         write_table(_pages(spark), path, partition_by=["lang"],
                     mode="overwrite")
@@ -466,8 +537,8 @@ class TestPositionDeletes:
         dels = spark.createDataFrame(
             [("https://en.example/0", "no-such-lang")],
             "url string, lang string")
-        _commit_delete_snapshot(dels, path, file_content=2,
-                                equality_ids=[url_id])
+        _commit_snapshot(path, dels.write.mode("overwrite").parquet,
+                         content=2, equality_ids=[url_id])
         got = read_table(spark, path)
         urls = [r["url"] for r in got.collect()]
         assert len(urls) == n_before - 1

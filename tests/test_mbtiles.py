@@ -139,6 +139,30 @@ class TestBatchedCommits:
             "SELECT * FROM tiles ORDER BY 1,2,3").fetchall()
         assert rows1 == rows2
 
+    @pytest.mark.parametrize("commit_rows", [2, 100_000])
+    def test_write_mbtiles_later_partition_wins(self, spark, tmp_path,
+                                                commit_rows):
+        # a (z, x, y) repeated in a later partition of the map stream
+        # replaces the earlier row, within and across commits
+        from gdal2mbtiles_spark.mbtiles import write_mbtiles
+        imgs = spark.createDataFrame(
+            [(1, bytearray(b"one")), (2, bytearray(b"two"))],
+            "tile_id long, tile_data binary")
+        schema = ("zoom_level int, tile_column int, tile_row int, "
+                  "tile_id long")
+        # partition 0: (1, 0, 0) -> 1; partition 1: (1, 0, 0) -> 2
+        mp = spark.createDataFrame(spark.sparkContext.parallelize(
+            [(1, 0, 0, 1), (0, 0, 0, 1), (1, 1, 0, 1), (1, 0, 0, 2)],
+            2), schema)
+        assert mp.rdd.glom().collect()[1][-1]["tile_id"] == 2
+        f = write_mbtiles(str(tmp_path / "lw.mbtiles"), imgs, mp, META,
+                          commit_rows=commit_rows)
+        assert f.get(0, 0, 1) == b"two"
+        assert f.get(0, 0, 0) == b"one"
+        assert f.get(1, 0, 1) == b"one"
+        assert len(list(f.all())) == 3
+        f.close()
+
 
 class TestMetadataErrorPaths:
     def test_malformed_bounds_raise_metadata_error(self):
