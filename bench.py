@@ -5,7 +5,12 @@ Runs the headline pipelines at $SPARK_GRAFT_SF_DIR (default
 line:
 
     {"metric": "tiles_per_sec_full_pyramid", "value": N, "unit": "sec",
-     "queries": {...per-query seconds...}, "sf": 0.1, ...}
+     "queries": {...per-query seconds...}, "sf": 0.1, ...,
+     "fingerprints": {...per-leaf [rows, checksum]...}}
+
+Each fingerprint is computed outside its leaf's timed region and is
+order-insensitive (lineage.compute_lineage's row-hash sums), so it
+names the leaf's output whatever the parallelism.
 
 The headline metric follows BASELINE.md: tiles/sec for the full
 pyramid (burn -> downsample chain -> MD5 dedup -> PNG render), i.e.
@@ -23,6 +28,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from gdal2mbtiles_spark.lineage import compute_lineage
 from gdal2mbtiles_spark.session import get_spark
 from gdal2mbtiles_spark.operators import dedup as D
 from gdal2mbtiles_spark.operators import similarity as S
@@ -100,6 +106,16 @@ def timed(fn, repeats: int = 3) -> float:
     return round(best, 3)
 
 
+def fingerprint(df) -> list:
+    """[rows, checksum] of ``df``: compute_lineage's per-partition row
+    counts and row-hash sums, folded over the partitions (mod 2^62,
+    as each partition's checksum is)."""
+    rows, total = compute_lineage(df, "bench").agg(
+        F.sum("rows"), F.sum(F.col("checksum").cast("decimal(38,0)"))
+    ).first()
+    return [int(rows or 0), int(total or 0) % 2 ** 62]
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -150,8 +166,11 @@ def main():
     queries["knn_join"] = timed(
         lambda: knn_join(knn_pts, knn_q, res=6).count())
 
+    fingerprints = {}
     queries["exact_dedup"] = timed(
         lambda: D.exact_dedup(docs.union(docs)).count())
+    fingerprints["exact_dedup"] = fingerprint(
+        D.exact_dedup(docs.union(docs)))
 
     n_mh = D.minhash_lsh_pairs(docs).count()
     queries["minhash_lsh_pairs"] = timed(
@@ -160,9 +179,12 @@ def main():
     queries["simhash_encode"] = timed(lambda: D.simhash(docs).count())
     queries["simhash_pairs"] = timed(
         lambda: D.simhash_pairs(docs).count())
+    fingerprints["simhash_pairs"] = fingerprint(D.simhash_pairs(docs))
 
     queries["ann_topk"] = timed(lambda: S.ann_topk_matmul(emb).count())
+    fingerprints["ann_topk"] = fingerprint(S.ann_topk_matmul(emb))
     queries["ann_topk_ivf"] = timed(lambda: S.ann_topk_ivf(emb).count())
+    fingerprints["ann_topk_ivf"] = fingerprint(S.ann_topk_ivf(emb))
 
     def _text_suite():
         T.quality_score(docs).count()
@@ -170,6 +192,8 @@ def main():
         T.token_counts(docs).count()
 
     queries["text_analysis"] = timed(_text_suite)
+    for name in ("quality_score", "lang_id", "token_counts"):
+        fingerprints[f"text.{name}"] = fingerprint(getattr(T, name)(docs))
 
     out = {
         "metric": "tiles_per_sec_full_pyramid",
@@ -184,6 +208,7 @@ def main():
         "pip_rows": n_pip,
         "knn_rows": n_knn,
         "minhash_pairs": n_mh,
+        "fingerprints": fingerprints,
     }
     print(json.dumps(out))
     spark.stop()

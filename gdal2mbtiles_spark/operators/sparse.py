@@ -19,10 +19,10 @@ The pyramid runs in two parts:
    its owner (packed z, x, y) and its *content* — the tile's non-zero
    pixels as a few dozen bytes, canonical so that equal canvases have
    equal content.  Nothing is painted here.  ``(owner, content)`` is
-   the only relation between stages: a pass (and the driver apex for
-   levels <= 2) starts from the previous pass's bottom-level contents,
-   decoded back to sparse pixels — zero pixels add nothing to a sum,
-   so the non-zero ones are all the next level needs;
+   the only relation between stages: a pass starts from the previous
+   pass's bottom-level contents, decoded back to sparse pixels — zero
+   pixels add nothing to a sum, so the non-zero ones are all the next
+   level needs;
 2. a **render stage** (``render_contents``): one ``groupBy(content)``
    collects the owners of each distinct content, and one kernel
    paints, MD5-hashes and PNG-encodes each distinct canvas exactly
@@ -116,11 +116,12 @@ MAX_OWNER_Z = 29
 # rendered tiles per output frame: bounds a render task's payload
 # memory, whatever the input batch size
 _OUT_CHUNK = 1024
-# levels <= _DRIVER_APEX finish on the driver from the level-3
-# contents (or the native pixels, z <= 2): a level-L tile set holds
-# at most (256*2^L)^2 pixels regardless of input size (<= 4.2M at
-# L=3, 6 content bytes each)
-_DRIVER_APEX = 2
+# no pass ends below this level but the last, which runs the levels
+# under it from the level-_PASS_FLOOR contents (or the native pixels,
+# z < _PASS_FLOOR) in one partition: a level-L tile set holds at most
+# (256*2^L)^2 pixels regardless of input size (<= 4.2M at L=3, 6
+# content bytes each)
+_PASS_FLOOR = 3
 # levels per distributed content pass
 _PHASE_DEPTH = 5
 
@@ -263,9 +264,9 @@ def pyramid_phase_contents(src: DataFrame, top: int,
 
 def _phase_kernel(top: int, bottom: int):
     """Build the multi-level content kernel closure (module level so
-    BENCH/profile_kernel.py profiles the REAL kernel, and the driver
-    apex runs it in-process).  Its input batches are either native
-    pixels at level ``top`` or content rows at level ``top + 1``."""
+    BENCH/profile_kernel.py profiles the REAL kernel).  Its input
+    batches are either native pixels at level ``top`` or content rows
+    at level ``top + 1``."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [b for b in batches if len(b)]
@@ -288,26 +289,6 @@ def _phase_kernel(top: int, bottom: int):
                 gx, gy, ch = _shrink_sparse(gx, gy, ch)
 
     return kernel
-
-
-def _apex_contents(spark: SparkSession, src: DataFrame,
-                   top: int, bottom: int) -> DataFrame:
-    """Contents of pyramid levels [top..bottom], computed on the driver.
-
-    Only called for top <= _DRIVER_APEX, where ``src`` (native pixels,
-    or the level-(top+1) content rows) is bounded whatever the data
-    scale — the distributed version of these levels is all fixed
-    overhead (tiny exchanges, python-worker round trips) and no work.
-    Runs the same kernel as the phases, in process; the pandas frame
-    goes through Arrow (one record batch, one JVM scan task), not a
-    pickled Python RDD."""
-    frames = list(_phase_kernel(top, bottom)(iter([src.toPandas()])))
-    if frames:
-        out = pd.concat(frames, ignore_index=True)
-    else:
-        out = pd.DataFrame({"owner": np.zeros(0, np.int64),
-                            "content": np.zeros(0, object)})
-    return spark.createDataFrame(out, schema=CONTENT_SCHEMA)
 
 
 def _render_content(content: bytes, canvas: np.ndarray,
@@ -379,23 +360,23 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                             z: int, renderer,
                             min_resolution: int = 0
                             ) -> Tuple[DataFrame, DataFrame]:
-    """Full pipeline: histogram -> phased content passes -> driver
-    apex -> render stage -> (images, map).
+    """Full pipeline: histogram -> phased content passes -> render
+    stage -> (images, map).
 
-    Levels above _DRIVER_APEX take ceil(levels/_PHASE_DEPTH)
-    multi-level content passes (one shuffle + one plan per pass
-    instead of per level).  A pass keyed by its bottom ancestor has
-    4^bottom groups, so every pass keeps >= 4^3 = 64 keys.  The levels
-    <= _DRIVER_APEX finish ON THE DRIVER: their input is O(1) in data
-    scale, and the local kernel replaces a chain of tiny stages' fixed
-    scheduling and exchange overhead.
+    Every level comes from the same kernel in multi-level content
+    passes (one shuffle + one plan per pass instead of per level) of
+    at most _PHASE_DEPTH levels.  A pass keyed by its bottom ancestor
+    has 4^bottom groups, so no pass ends below _PASS_FLOOR (>= 4^3 =
+    64 keys) except the last: it runs every level below the floor,
+    down to ``min_resolution``, from the level-_PASS_FLOOR contents,
+    which are O(1) in data scale, in one partition.
 
     Only (owner, content) rows cross a stage boundary: the next pass
-    (or the apex) reads the previous pass's bottom-level contents from
-    its eager local checkpoint, decodes them and shrinks them.  Every
-    tile's content then meets in the render stage, which paints,
-    hashes and encodes each distinct content once and is materialized
-    once (eager local checkpoint), so neither output re-renders.
+    reads the previous pass's bottom-level contents from its eager
+    local checkpoint, decodes them and shrinks them.  Every tile's
+    content then meets in the render stage, which paints, hashes and
+    encodes each distinct content once and is materialized once (eager
+    local checkpoint), so neither output re-renders.
 
     images: (tile_id, tile_data encoded, tile_hex), one row per
     distinct canvas; map: (zoom_level, tile_column, tile_row,
@@ -404,12 +385,11 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
         raise ValueError(f"z {z} exceeds the packed-owner limit "
                          f"{MAX_OWNER_Z}")
     src = heat_pixels(hist, z)
-    apex_top = min(max(_DRIVER_APEX, min_resolution - 1), z)
     contents = []
     top = z
-    while top > apex_top:
-        bottom = max(min_resolution, apex_top + 1,
-                     top - _PHASE_DEPTH + 1)
+    while top >= min_resolution:
+        floor = _PASS_FLOOR if top >= _PASS_FLOOR else min_resolution
+        bottom = max(min_resolution, floor, top - _PHASE_DEPTH + 1)
         out = pyramid_phase_contents(src, top, bottom)
         if bottom > min_resolution:
             # two consumers (the next stage and the render stage): one
@@ -420,9 +400,6 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                 F.shiftright("owner", _OWNER_Z_SHIFT) == bottom)
         contents.append(out)
         top = bottom - 1
-    if top >= min_resolution:
-        contents.append(_apex_contents(spark, src, top,
-                                       min_resolution))
 
     union = contents[0]
     for part in contents[1:]:

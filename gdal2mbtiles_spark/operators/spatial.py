@@ -225,43 +225,6 @@ _SETTLE_SLACK = 1e-9
 _DEG_KM = math.pi / 180.0 * EARTH_RADIUS_KM
 
 
-def estimate_count(df: DataFrame, max_parts: int = 16) -> int:
-    """Row-count ESTIMATE from a stride-sampled subset of partitions.
-
-    ``runJob`` schedules tasks ONLY for the sampled partition ids, so
-    at most ``max_parts`` partitions are ever scanned — unlike
-    ``df.count()`` (full scan: at 10^12 rows that is a whole extra
-    pass over the table before any real work) or ``df.sample()``
-    (reads everything and discards).  File-source partitions are
-    near-uniform (maxPartitionBytes splitting), so the
-    scale-by-partition-count extrapolation is unbiased; when the
-    relation has <= max_parts partitions the estimate is exact.  Only
-    order-of-magnitude accuracy is needed by its consumer, the IVF
-    list count in similarity.ann_topk_ivf."""
-    # metadata first (round 6): a materialized cache (or any relation
-    # the optimizer has exact statistics for) knows its row count —
-    # zero tasks, zero python-serialized rows.  The bench/ivf inputs
-    # are persisted-and-counted, so this path answers instantly; plain
-    # scans without a rowCount statistic fall through to the bounded
-    # partition sampler.
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-    except Exception:
-        pass
-    rdd = df.select(F.lit(1).alias("_one")).rdd
-    nparts = rdd.getNumPartitions()
-    if nparts == 0:
-        return 0
-    k = min(max_parts, nparts)
-    stride = max(1, nparts // k)
-    idxs = list(range(0, nparts, stride))[:k]
-    counts = df.sparkSession.sparkContext.runJob(
-        rdd, lambda it: [sum(1 for _ in it)], idxs)
-    return int(round(sum(counts) * nparts / len(idxs)))
-
-
 def _cell_counts(points: DataFrame, lon: str, lat: str, res: int,
                  max_cells: int
                  ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:

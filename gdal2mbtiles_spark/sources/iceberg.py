@@ -125,7 +125,7 @@ class PlanStats:
     planned: List[str] = field(default_factory=list)
     # v2 row-level deletes discovered in content=1 (delete) manifests
     position_deletes: List[str] = field(default_factory=list)
-    # sequence number per position-delete file (scope check below)
+    # sequence number per position-delete file
     position_delete_seqs: Dict[str, int] = field(default_factory=dict)
     # (path, sequence_number, equality_ids-or-None)
     equality_deletes: List[Tuple[str, int, Optional[Tuple[int, ...]]]] \
@@ -297,24 +297,6 @@ class IcebergTable:
                     path_ = self._resolve(df_rec["file_path"])
                     stats.planned.append(path_)
                     stats.data_seqs[path_] = seq
-        # scope check (r05 ADVICE): applying every visible position
-        # delete is exact only for append+delete histories — a data
-        # file with a sequence number ABOVE a delete file's cannot
-        # legally be referenced by it, and on a compacted/rewritten
-        # table a blindly-applied stale delete could drop live rows.
-        # The docstring documents the scope; enforce it audibly.
-        if stats.position_deletes and stats.data_seqs:
-            import warnings
-            min_del = min(stats.position_delete_seqs.values())
-            max_data = max(stats.data_seqs.values())
-            if max_data > min_del:
-                warnings.warn(
-                    "Iceberg scan mixes position deletes (min seq "
-                    f"{min_del}) with newer data files (max seq "
-                    f"{max_data}); position deletes are applied "
-                    "without per-file sequence scoping, which is "
-                    "only exact for append+delete histories",
-                    RuntimeWarning)
         return stats.planned, stats
 
     def _manifest_may_match(self, mf: Dict,
@@ -393,21 +375,27 @@ def read_table(spark: SparkSession, path: str,
     if stats.position_deletes or stats.equality_deletes:
         from pyspark.sql import functions as F
         # _metadata is only resolvable on the scan relation itself —
-        # capture the (normalized file, row ordinal) ONCE, apply both
-        # delete kinds against the captured columns, then drop them
+        # capture the (normalized file, row ordinal) ONCE, attach each
+        # row's data sequence number through a tiny broadcast
+        # (file -> seq) dim, apply both delete kinds against the
+        # captured columns, then drop them
         df = df.withColumns({
             "_del_file": norm_file_path(F.col("_metadata.file_path")),
             "_del_pos": F.col("_metadata.row_index"),
         })
+        files_dim = spark.createDataFrame(
+            [(_norm_path_py(k), int(v))
+             for k, v in stats.data_seqs.items()],
+            "_del_file string, _data_seq long")
+        df = df.join(F.broadcast(files_dim), "_del_file")
         if stats.position_deletes:
             df = _apply_position_deletes(spark, df,
-                                         stats.position_deletes)
+                                         stats.position_delete_seqs)
         if stats.equality_deletes:
             df = _apply_equality_deletes(spark, df,
                                          stats.equality_deletes,
-                                         stats.data_seqs,
                                          table.current_schema())
-        df = df.drop("_del_file", "_del_pos")
+        df = df.drop("_del_file", "_del_pos", "_data_seq")
     for k, v in (filters or {}).items():
         if k in df.columns:
             df = df.where(df[k] == v)
@@ -490,47 +478,53 @@ def _spark_schema(table: IcebergTable):
 
 
 def _apply_position_deletes(spark: SparkSession, df: DataFrame,
-                            delete_files: List[str]) -> DataFrame:
-    """Distributed position-delete application: anti-join the scan on
-    (file_path, row ordinal) against the delete rows — the Spark
-    expression of Iceberg's merge-on-read.  `_metadata.row_index` is
-    the parquet row ordinal Iceberg's `pos` refers to, so no per-file
-    driver work is needed; the delete side is typically orders of
-    magnitude smaller than the data and Spark/AQE picks a broadcast
-    anti-join on its own (no hint: at compaction-overdue scale a
-    shuffled anti-join is the right fallback and must stay
-    available).  Position deletes name their target file explicitly,
-    so applying every delete visible in the snapshot is exact for
-    append+delete histories (a delete can only reference files that
-    existed when it was committed); seq-aware filtering for
-    rewrite/compaction flows is out of scope, like equality deletes.
+                            delete_seqs: Dict[str, int]) -> DataFrame:
+    """Distributed position-delete application with the spec's
+    sequence rule: anti-join the scan on (file_path, row ordinal)
+    against the delete rows, where the data file's sequence number
+    is AT OR BELOW the delete file's — the Spark expression of
+    Iceberg's merge-on-read.  `_metadata.row_index` is the parquet
+    row ordinal Iceberg's `pos` refers to, so no per-file driver work
+    is needed; the delete files are read once per distinct sequence
+    number.  The delete side is typically orders of magnitude smaller
+    than the data and Spark/AQE picks a broadcast anti-join on its
+    own (no hint: at compaction-overdue scale a shuffled anti-join is
+    the right fallback and must stay available).
 
     The delete rows' ``file_path`` holds the manifest's raw path (the
     spec stores it verbatim); paths captured from
     ``_metadata.file_path`` must be normalized with
     :func:`norm_file_path` first (write_position_deletes docstring)."""
     from pyspark.sql import functions as F
-    dels = (spark.read.schema(_POSITION_DELETE_DDL).parquet(*delete_files)
-            .select(_norm_path(F.col("file_path")).alias("_del_file"),
-                    F.col("pos").alias("_del_pos")))
-    return df.join(dels, ["_del_file", "_del_pos"], "left_anti")
+    by_seq: Dict[int, List[str]] = {}
+    for p, seq in delete_seqs.items():
+        by_seq.setdefault(int(seq), []).append(p)
+    dels = None
+    for seq, files in sorted(by_seq.items()):
+        d = (spark.read.schema(_POSITION_DELETE_DDL).parquet(*files)
+             .select(_norm_path(F.col("file_path")).alias("_pd_file"),
+                     F.col("pos").alias("_pd_pos"),
+                     F.lit(seq).alias("_pd_seq")))
+        dels = d if dels is None else dels.unionByName(d)
+    cond = ((df["_del_file"] == dels["_pd_file"])
+            & (df["_del_pos"] == dels["_pd_pos"])
+            & (df["_data_seq"] <= dels["_pd_seq"]))
+    return df.join(dels, cond, "left_anti")
 
 
-def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
+def _apply_equality_deletes(spark: SparkSession, data: DataFrame,
                             eq_deletes: List[
                                 Tuple[str, int,
                                       Optional[Tuple[int, ...]]]],
-                            data_seqs: Dict[str, int],
                             schema: Dict) -> DataFrame:
     """Distributed equality-delete application with the spec's
     sequence rule: a delete row removes a data row iff every EQUALITY
-    column matches (null-safe) AND the data file's sequence number is
-    STRICTLY below the delete file's — rows appended after the delete
-    survive.  The match columns are the manifest entry's
-    ``equality_ids`` (spec: extra columns stored in the delete file
-    are ignored for matching); files without recorded ids fall back
-    to all stored columns.  Shape: the (file -> seq) map is a tiny
-    broadcast dim attached via _metadata.file_path; each distinct
+    column matches (null-safe) AND the data file's sequence number
+    (``_data_seq``) is STRICTLY below the delete file's — rows
+    appended after the delete survive.  The match columns are the
+    manifest entry's ``equality_ids`` (spec: extra columns stored in
+    the delete file are ignored for matching); files without recorded
+    ids fall back to all stored columns.  Shape: each distinct
     match-column set gets its own anti-join whose build side is that
     set's deletes union (usually far smaller than the data)."""
     import functools
@@ -560,17 +554,12 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
             ddl = None
         by_cols.setdefault(cols, []).append((p, seq, ddl))
 
-    files_dim = spark.createDataFrame(
-        [(_norm_path_py(k), int(v)) for k, v in data_seqs.items()],
-        "_del_file string, _data_seq long")
-    data = df.join(F.broadcast(files_dim), "_del_file")
-
     for cols, group in sorted(by_cols.items()):
-        missing = [c for c in cols if c not in df.columns]
+        missing = [c for c in cols if c not in data.columns]
         if missing:
             raise ValueError(
                 f"equality-delete columns {missing} not in table "
-                f"columns {df.columns}")
+                f"columns {data.columns}")
         dels = None
         for p, seq, ddl in group:
             reader = spark.read if ddl is None else spark.read.schema(ddl)
@@ -583,7 +572,7 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
             data[c].eqNullSafe(dels[f"_eq_{c}"]) for c in cols])
         cond = cond & (data["_data_seq"] < dels["_del_seq"])
         data = data.join(dels, cond, "left_anti")
-    return data.drop("_data_seq")
+    return data
 
 
 def write_table(df: DataFrame, path: str,

@@ -1,11 +1,15 @@
 """Pages table loader: Iceberg-first with Parquet fallback.
 
-The production source is an Iceberg table of Common-Crawl-style pages
-(BASELINE.json input_hint) — partition pruning on lang / warc_ts and
+The source is an Iceberg table of Common-Crawl-style pages
+(BASELINE.json input_hint) — partition pruning on lang / ts_bucket and
 column pruning (never read ``html`` when only ``text`` is needed) are
-native there.  This sandbox has no Iceberg runtime jar, so the loader
-falls back to plain Parquet with identical schema; the rest of the
-engine is source-agnostic (it only sees the DataFrame).
+native there.  A table directory is read by the native Iceberg v2
+reader (sources/iceberg.py: manifest- and file-level pruning, row-level
+deletes), which needs no Iceberg runtime jar; a catalog identifier is
+handed to the ``iceberg`` data source when one is installed, and a
+plain (Hive-partitioned) Parquet directory with the same schema is
+read as Parquet.  The rest of the engine is source-agnostic (it only
+sees the DataFrame).
 """
 
 from __future__ import annotations

@@ -14,6 +14,7 @@ import datetime
 import io
 import json
 import os
+import warnings
 import zlib
 
 import pytest
@@ -254,10 +255,14 @@ class TestIcebergTable:
         expected = [en_de, all_urls, after_pos,
                     after_pos - {"https://en.example/7"},
                     after_pos]
-        for snap, want in zip(snaps, expected):
-            got = [r["url"] for r in
-                   read_table(spark, path, snapshot_id=snap).collect()]
-            assert len(got) == len(want) and set(got) == want, snap
+        # the append after the position delete is a legal history: the
+        # delete is scoped by sequence number and reads raise no warning
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            for snap, want in zip(snaps, expected):
+                got = [r["url"] for r in read_table(
+                    spark, path, snapshot_id=snap).collect()]
+                assert len(got) == len(want) and set(got) == want, snap
 
         table = IcebergTable(path)
         for k, snap in enumerate(table.snapshots(), start=1):

@@ -97,9 +97,9 @@ def _rows(df):
 
 
 def test_multi_phase_equals_single_phase(spark, dup_hist, monkeypatch):
-    # the defaults run passes 8..4 and 3..3, then the driver apex for
-    # 2..0: a pass->pass and a pass->apex contents bridge.  One deep
-    # pass (8..3) must give identical outputs.
+    # the defaults run passes 8..4, 3..3 and 2..0: two contents
+    # bridges.  One deep pass (8..3, then 2..0) must give identical
+    # outputs.
     many = sparse_pyramid_rendered(spark, dup_hist, DUP_Z,
                                    PngRenderer(compression=1),
                                    min_resolution=0)
@@ -117,8 +117,8 @@ def test_all_zero_at_bridge_keeps_ancestors(spark, z):
     """A lone faint native pixel (w=1: (255,255,255,32)) is all-zero
     after five 2x2 shrinks, so its level-(z-5) tile has empty content.
     At z8 that is level 3, the bridge from the 3..3 pass into the
-    driver apex; at z14 it is level 9, so the level-5 bridge between
-    the 9..5 and 4..3 passes is empty too.  The tile still has a map
+    final 2..0 pass; at z14 it is level 9, so the level-5 bridge
+    between the 9..5 and 4..3 passes is empty too.  The tile still has a map
     row on every level, and the all-zero ones show the blank canvas."""
     n = 1 << z
     x, y = n // 3, n // 5
@@ -185,44 +185,61 @@ def test_render_once_per_distinct_content(spark, request, fixture):
         assert n < n_map / 2          # most tiles repeat a content
 
 
-@pytest.mark.parametrize("driver_apex", [0, 3])
-def test_content_equals_canvas(spark, driver_apex, monkeypatch):
-    """Two level-1 tiles paint the same canvas, but one also holds a
-    faint native pixel that shrank to all-zero RGBA on the way down:
+@pytest.mark.parametrize("z", [6, 7])
+def test_content_equals_canvas(spark, z):
+    """Two level-(z-5) tiles paint the same canvas, but one also holds
+    a faint native pixel that shrank to all-zero RGBA on the way down:
     one image row, two map rows.  A tile holding only such a pixel
-    keeps its map row and shows the blank canvas.  driver_apex=0 runs
-    every level in distributed passes; 3 finishes levels 3..1 on the
-    driver from the level-4 contents."""
-    monkeypatch.setattr(sparse, "_DRIVER_APEX", driver_apex)
-    z = 6
-    side = 256 << z
+    keeps its map row and shows the blank canvas.  The tiles are in
+    the final pass below the pass floor: 2..1 after 6..3 at z6, the
+    single level 2..2 after 7..3 at z7."""
+    lvl = z - 5
+    width = 256 << 5                 # one level-lvl tile, native pixels
 
     def px(gx, gy, w):
         return (z, gx >> 8, (1 << z) - 1 - (gy >> 8), gx & 255,
                 gy & 255, float(w))
 
     # a saturated 32x32 native block is one (255,255,255,255) pixel at
-    # level 1 (local (10, 20)), in tile A and at the same offset in B
+    # level lvl (local (10, 20)), in tile A and at the same offset in B
     block = [(gx, gy) for gx in range(320, 352) for gy in range(640, 672)]
     rows = [px(gx, gy, 255) for gx, gy in block]
-    rows += [px(gx + side // 2, gy, 255) for gx, gy in block]
+    rows += [px(gx + width, gy, 255) for gx, gy in block]
     # w=1 is (255,255,255,32); five 2x2 shrinks take it to all zero
     rows.append(px(4000, 5000, 1))                   # into tile A
-    rows.append(px(1000, side // 2 + 3000, 1))       # alone: tile C
+    rows.append(px(1000, width + 3000, 1))           # alone: tile C
     hist = spark.createDataFrame(
         rows, "z int, x bigint, y bigint, ppx int, ppy int, w double")
     images, map_df = sparse_pyramid_rendered(
-        spark, hist, z, PngRenderer(compression=1), min_resolution=1)
+        spark, hist, z, PngRenderer(compression=1), min_resolution=lvl)
     tiles = {(r["zoom_level"], r["tile_column"], r["tile_row"]):
              r["tile_id"] for r in map_df.collect()}
     ids = [r["tile_id"] for r in images.select("tile_id").collect()]
     assert len(ids) == len(set(ids))
     assert set(tiles.values()) == set(ids)
-    a, b, c = tiles[(1, 0, 1)], tiles[(1, 1, 1)], tiles[(1, 0, 0)]
+    row = (1 << lvl) - 1                             # TMS row of y-down 0
+    a, b = tiles[(lvl, 0, row)], tiles[(lvl, 1, row)]
+    c = tiles[(lvl, 0, row - 1)]
     assert a == b
     assert ids.count(a) == 1
     assert sum(t == a for t in tiles.values()) == 2
     assert c == tile_id_of_bytes(bytes(256 * 256 * 4))
+
+
+def test_no_rows_cross_the_driver(spark, dup_hist, monkeypatch):
+    """Every level, the ones below the pass floor included, comes from
+    a distributed content pass: no frame is pulled to the driver."""
+    def no_collect(self):
+        raise AssertionError("toPandas on the pyramid path")
+
+    # the concrete class: it defines its own toPandas
+    monkeypatch.setattr(type(dup_hist), "toPandas", no_collect)
+    _images, map_df = sparse_pyramid_rendered(
+        spark, dup_hist, DUP_Z, PngRenderer(compression=1),
+        min_resolution=0)
+    levels = {r["zoom_level"]
+              for r in map_df.select("zoom_level").distinct().collect()}
+    assert levels == set(range(DUP_Z + 1))
 
 
 def test_zoom_bound(spark, hist):

@@ -521,31 +521,6 @@ class TestAutoKnnRes:
         assert (res, cx.tolist(), cy.tolist(), c.tolist()) == (
             0, [0], [0], [51])
 
-    def test_estimate_count_partial_scan(self, spark):
-        # round-4 VERDICT #4: the auto-res estimate must NOT be a full
-        # scan.  An accumulator tap counts rows actually materialized:
-        # with 64 partitions and max_parts=16 at most a quarter of the
-        # rows may be read, yet the estimate lands within 25%.
-        from gdal2mbtiles_spark.operators.spatial import estimate_count
-        total = 40_000
-        acc = spark.sparkContext.accumulator(0)
-
-        def tap(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
-
-        base = (spark.range(total).repartition(64)
-                .mapInPandas(tap, schema="id long"))
-        est = estimate_count(base, max_parts=16)
-        assert acc.value < total // 2, acc.value     # partial scan
-        assert abs(est - total) <= total // 4, est   # usable estimate
-
-    def test_estimate_count_exact_when_few_partitions(self, spark):
-        from gdal2mbtiles_spark.operators.spatial import estimate_count
-        df = spark.range(1234).repartition(8)
-        assert estimate_count(df, max_parts=16) == 1234
-
     def test_auto_res_exact_dense_and_sparse(self, spark, geo_pages):
         # auto res (None) must stay exact vs brute force on both a
         # dense and a sparse points side, picking different grids
