@@ -267,8 +267,7 @@ def _kmeans_spherical(sample: np.ndarray, k: int,
 
 
 def ivf_centroids(emb: DataFrame, n_centroids: int = 16,
-                  sample_cap: int = 2048, iters: int = 8,
-                  dim: int = DIM) -> np.ndarray:
+                  sample_cap: int = 2048, iters: int = 8) -> np.ndarray:
     """Train the IVF coarse quantizer on a BOUNDED deterministic
     sample: the ``sample_cap`` rows of least xxhash64(vec_id), ties
     broken by vec_id — one JVM top-k job, order-independent, whatever
@@ -302,7 +301,7 @@ def ann_topk_ivf(emb: DataFrame, n_queries: int = 20, k: int = 10,
     per-cluster candidate lists stay bounded; residual cluster-size
     skew is task-level only and AQE-splittable."""
     spark = emb.sparkSession
-    cent = ivf_centroids(emb, n_centroids=n_centroids, dim=dim)
+    cent = ivf_centroids(emb, n_centroids=n_centroids)
     bc = spark.sparkContext.broadcast(cent)
 
     @F.pandas_udf("int")

@@ -376,7 +376,8 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
     local checkpoint, decodes them and shrinks them.  Every tile's
     content then meets in the render stage, which paints, hashes and
     encodes each distinct content once and is materialized once (eager
-    local checkpoint), so neither output re-renders.
+    local checkpoint), so neither output re-renders, and the pass
+    checkpoints are released as soon as it exists.
 
     images: (tile_id, tile_data encoded, tile_hex), one row per
     distinct canvas; map: (zoom_level, tile_column, tile_row,
@@ -385,7 +386,7 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
         raise ValueError(f"z {z} exceeds the packed-owner limit "
                          f"{MAX_OWNER_Z}")
     src = heat_pixels(hist, z)
-    contents = []
+    contents, checkpoints = [], []
     top = z
     while top >= min_resolution:
         floor = _PASS_FLOOR if top >= _PASS_FLOOR else min_resolution
@@ -396,6 +397,7 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
             # materialization.  The last pass feeds only the render
             # stage, whose eager checkpoint runs it exactly once.
             out = out.localCheckpoint(eager=True)
+            checkpoints.append(out)
             src = out.where(
                 F.shiftright("owner", _OWNER_Z_SHIFT) == bottom)
         contents.append(out)
@@ -405,6 +407,12 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
     for part in contents[1:]:
         union = union.unionByName(part)
     rendered = render_contents(union, renderer).localCheckpoint(eager=True)
+    # the render checkpoint holds every output row, so the pass
+    # checkpoints are dead.  Their blocks belong to the RDD under each
+    # checkpoint's LogicalRDD, which DataFrame.unpersist() does not
+    # reach; release them now instead of at the ContextCleaner's GC.
+    for out in checkpoints:
+        out._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     images = rendered.select("tile_id", "tile_data", "tile_hex")
     owner = F.col("_o")

@@ -9,8 +9,10 @@ make Iceberg matter at 10^12 rows:
 
 * **manifest-level**: a manifest whose partition field summaries
   (lower/upper bounds) exclude the filter value is never opened —
-  O(manifests) metadata reads instead of O(files); a manifest whose
-  summaries cannot be compared with a filter is opened and counted
+  O(manifests) metadata reads instead of O(files).  String bounds
+  compare as UTF-8 bytes, int, long and date bounds as the numbers
+  their single-value serialization holds; a manifest whose summaries
+  cannot be compared with a filter is opened and counted
   (``PlanStats.manifests_unprunable``);
 * **file-level**: a data file whose identity-partition value misses
   the filter is never handed to Spark — the scan's file list is
@@ -29,8 +31,10 @@ Iceberg writers read correctly for the v2 subset used here.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import struct
 import time
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional, Sequence, Tuple
@@ -165,9 +169,8 @@ class IcebergTable:
         self._default_spec_id = self.metadata.get("default-spec-id", 0)
         spec = specs.get(self._default_spec_id, {"fields": []})
         self.partition_fields = [f["name"] for f in spec["fields"]]
-        # source types of the partition fields: summary-bound pruning
-        # byte-compares serialized values, which is only valid for
-        # string-typed sources (r05 ADVICE)
+        # source types of the partition fields: they decide how a
+        # summary bound and a filter value compare (r05 ADVICE)
         try:
             types = {f["id"]: f.get("type")
                      for f in self.current_schema().get("fields", [])}
@@ -284,20 +287,27 @@ class IcebergTable:
                 stats.files_total += 1
                 part = df_rec.get("partition") or {}
                 # a real writer stores non-string identity partition
-                # values natively (int/date); comparing them to the
-                # caller's string filter via == is always False and
-                # would prune EVERY file while the DataFrame
-                # re-filter (which casts) matches rows — coerce to a
-                # common string form first (r05 ADVICE)
-                if all(part.get(k) == v
-                       or (part.get(k) is not None
-                           and str(part.get(k)) == str(v))
+                # values natively (int, date as days); comparing them
+                # to the caller's string filter via == is always False
+                # and would prune EVERY file while the DataFrame
+                # re-filter (which casts) matches rows — compare the
+                # typed values, else a common string form (r05 ADVICE)
+                if all(self._file_may_match(k, part.get(k), v)
                        for k, v in filters.items()):
                     stats.files_planned += 1
                     path_ = self._resolve(df_rec["file_path"])
                     stats.planned.append(path_)
                     stats.data_seqs[path_] = seq
         return stats.planned, stats
+
+    def _file_may_match(self, name: str, value, want: str) -> bool:
+        """Whether a data file's partition ``value`` can equal the
+        filter text ``want`` on partition field ``name``."""
+        typ = self._partition_source_types.get(name)
+        have, want = (_partition_value(typ, value),
+                      _partition_value(typ, want))
+        return have == want or (have is not None
+                                and str(have) == str(want))
 
     def _manifest_may_match(self, mf: Dict,
                             filters: Dict[str, str]) -> Optional[bool]:
@@ -323,20 +333,78 @@ class IcebergTable:
         for i, name in enumerate(self.partition_fields):
             if name not in filters:
                 continue
-            # bounds hold the raw serialized value: byte order only
-            # matches value order for string sources (r05 ADVICE)
-            if (i >= len(summaries) or
-                    self._partition_source_types.get(name) != "string"):
+            if i >= len(summaries):
                 compared = False
                 continue
-            s = summaries[i]
-            want = filters[name].encode("utf-8")
-            lo, hi = s.get("lower_bound"), s.get("upper_bound")
-            if lo is not None and want < bytes(lo):
+            typ = self._partition_source_types.get(name)
+            lo = _decode_bound(typ, summaries[i].get("lower_bound"))
+            hi = _decode_bound(typ, summaries[i].get("upper_bound"))
+            want = _partition_value(typ, filters[name])
+            if typ == "string":
+                want = want.encode("utf-8")
+            if want is None or _NO_BOUND in (lo, hi):
+                compared = False
+                continue
+            if lo is not None and want < lo:
                 return False
-            if hi is not None and want > bytes(hi):
+            if hi is not None and want > hi:
                 return False
         return True if compared else None
+
+
+# Iceberg single-value serialization of the partition sources whose
+# summary bounds planning compares as numbers: int and date (days
+# since 1970-01-01) are little-endian int32, long little-endian int64
+_BOUND_STRUCTS = {"int": struct.Struct("<i"), "date": struct.Struct("<i"),
+                  "long": struct.Struct("<q")}
+_EPOCH = datetime.date(1970, 1, 1)
+# a summary bound that cannot be compared with a filter
+_NO_BOUND = object()
+
+
+def _partition_value(source_type: Optional[str], value):
+    """A partition value in the order Iceberg's bounds use: the number
+    of an int, long or date (days) source, parsed from its text form (a
+    filter, a Hive partition directory) or taken as a real writer
+    stored it; None for text that names no value of the type.  Other
+    sources' values are returned unchanged."""
+    if source_type not in _BOUND_STRUCTS or not isinstance(value, str):
+        return value
+    try:
+        if source_type == "date":
+            return (datetime.date.fromisoformat(value) - _EPOCH).days
+        return int(value)
+    except ValueError:
+        return None
+
+
+def _decode_bound(source_type: Optional[str], raw):
+    """A summary bound as a comparable value: UTF-8 bytes for a string
+    source, the number for int, long and date; None when absent, and
+    _NO_BOUND for any other source or a bound of the wrong width (the
+    text bounds written before numeric sources were serialized)."""
+    fmt = _BOUND_STRUCTS.get(source_type)
+    if fmt is None and source_type != "string":
+        return _NO_BOUND
+    if raw is None:
+        return None
+    if fmt is None:
+        return bytes(raw)
+    if len(raw) != fmt.size:
+        return _NO_BOUND
+    return fmt.unpack(bytes(raw))[0]
+
+
+def _encode_bound(source_type: Optional[str], value):
+    """The single-value serialization of a typed partition value, the
+    inverse of _decode_bound; None for None and for a source it does
+    not cover."""
+    if value is None:
+        return None
+    if source_type == "string":
+        return value.encode("utf-8")
+    fmt = _BOUND_STRUCTS.get(source_type)
+    return None if fmt is None else fmt.pack(value)
 
 
 # ---- read / write -----------------------------------------------------------
@@ -736,7 +804,7 @@ def _commit_snapshot(path: str, write: Callable[[str], None],
         "added_rows_count": sum(e["data_file"]["record_count"]
                                 for e in entries),
         "existing_rows_count": 0, "deleted_rows_count": 0,
-        "partitions": _summaries(entries, partition_by),
+        "partitions": _summaries(entries, partition_by, meta),
     })
     mlist_path = os.path.join(
         meta_dir, f"snap-{snapshot_id}-manifest-list.avro")
@@ -808,18 +876,24 @@ def _data_metadata(path: str, schema, partition_by: Sequence[str],
     }
 
 
-def _summaries(entries: List[Dict],
-               partition_by: Sequence[str]) -> List[Dict]:
+def _summaries(entries: List[Dict], partition_by: Sequence[str],
+               meta: Dict) -> List[Dict]:
     """Manifest-list partition field summaries: null flag and the
-    UTF-8 byte bounds of each (string) identity partition field."""
+    serialized bounds of each identity partition field — UTF-8 for a
+    string source, int32/int64 for int, long and date; none for the
+    other source types."""
+    types = {f["name"]: f["type"] for f in meta["schemas"][0]["fields"]}
     out = []
     for name in partition_by:
-        vals = [e["data_file"]["partition"].get(name) for e in entries]
-        known = [v.encode("utf-8") for v in vals if v is not None]
+        typ = types[name]
+        vals = [_partition_value(typ, e["data_file"]["partition"].get(name))
+                for e in entries]
+        known = [v for v in vals if v is not None]
+        lo, hi = (min(known), max(known)) if known else (None, None)
         out.append({
             "contains_null": any(v is None for v in vals),
             "contains_nan": None,
-            "lower_bound": min(known) if known else None,
-            "upper_bound": max(known) if known else None,
+            "lower_bound": _encode_bound(typ, lo),
+            "upper_bound": _encode_bound(typ, hi),
         })
     return out

@@ -14,6 +14,7 @@ import datetime
 import io
 import json
 import os
+import struct
 import warnings
 import zlib
 
@@ -21,7 +22,8 @@ import pytest
 
 from gdal2mbtiles_spark.sources import avro
 from gdal2mbtiles_spark.sources.iceberg import (
-    MANIFEST_LIST_SCHEMA, IcebergTable, manifest_entry_schema,
+    _NO_BOUND, MANIFEST_LIST_SCHEMA, IcebergTable, _decode_bound,
+    manifest_entry_schema,
     norm_file_path, read_table, write_equality_deletes,
     write_position_deletes, write_table)
 
@@ -279,15 +281,59 @@ class TestIcebergTable:
             [f"v{v}.metadata.json" for v in range(1, 6)]
         assert table.version == 5
 
+    @pytest.mark.parametrize("ddl, keys, fmt", [
+        ("int", (3, 7, 1000, 1001), "<i"),
+        ("bigint", (3, 7, 1 << 40, (1 << 40) + 1), "<q"),
+        ("date", tuple(datetime.date(2024, 1, d) for d in (9, 10, 30, 31)),
+         "<i")])
+    def test_numeric_partition_bounds_prune(self, spark, tmp_path, ddl,
+                                            keys, fmt):
+        """Int, long and date bounds are Iceberg single-value
+        serialized (little-endian int32/int64, dates in days) and
+        compare as numbers: of two appends with disjoint k, a filter
+        on one k opens only that append's manifest."""
+        path = str(tmp_path / f"t{ddl}")
+        for mode, ks in (("overwrite", keys[:2]), ("append", keys[2:])):
+            write_table(spark.createDataFrame(
+                [(k, f"r{k}") for k in ks], f"k {ddl}, v string"),
+                path, partition_by=["k"], mode=mode)
+        table = IcebergTable(path)
+        snap = table.snapshot()
+        summaries = [mf["partitions"][0] for mf in avro.read_container(
+            table._resolve(snap["manifest-list"]))]
+        epoch = datetime.date(1970, 1, 1)
+        num = [(k - epoch).days if ddl == "date" else k for k in keys]
+        assert [(s["lower_bound"], s["upper_bound"]) for s in summaries] \
+            == [(struct.pack(fmt, num[0]), struct.pack(fmt, num[1])),
+                (struct.pack(fmt, num[2]), struct.pack(fmt, num[3]))]
+        for k in keys:
+            files, stats = table.plan_files(filters={"k": str(k)})
+            assert (stats.manifests_total, stats.manifests_opened,
+                    stats.manifests_unprunable) == (2, 1, 0)
+            assert stats.files_planned == 1 == len(files)
+            rows = read_table(spark, path, filters={"k": str(k)}).collect()
+            assert [r["v"] for r in rows] == [f"r{k}"]
+
+    def test_text_bounds_of_numeric_sources_are_not_compared(self):
+        # a bound whose width is not its type's (the UTF-8 text an
+        # older writer stored for numeric sources, like b"7") is not
+        # read as a number
+        assert _decode_bound("int", b"7") is _NO_BOUND
+        assert _decode_bound("long", struct.pack("<i", 7)) is _NO_BOUND
+        assert _decode_bound("double", struct.pack("<d", 1.0)) is _NO_BOUND
+        assert _decode_bound("int", None) is None
+        assert _decode_bound("date", struct.pack("<i", -1)) == -1
+
     def test_unprunable_manifests_counted(self, spark, tmp_path):
-        """A filter on a partition column whose source is not a string
-        cannot be compared with the summaries' byte bounds: the
-        manifest is opened and counted, never silently."""
-        path = str(tmp_path / "tint")
+        """A filter on a partition column whose source has no
+        comparable bounds (a double) cannot be compared with the
+        summaries: the manifest is opened and counted, never
+        silently."""
+        path = str(tmp_path / "tdouble")
         write_table(spark.createDataFrame(
-            [(i, f"r{i}") for i in range(6)], "k int, v string"),
+            [(float(i), f"r{i}") for i in range(6)], "k double, v string"),
             path, partition_by=["k"])
-        files, stats = IcebergTable(path).plan_files(filters={"k": "1"})
+        files, stats = IcebergTable(path).plan_files(filters={"k": "1.0"})
         assert stats.manifests_unprunable == 1
         assert len(files) == 1
         pages = str(tmp_path / "tlang")

@@ -242,6 +242,23 @@ def test_no_rows_cross_the_driver(spark, dup_hist, monkeypatch):
     assert levels == set(range(DUP_Z + 1))
 
 
+def test_only_the_render_checkpoint_stays_persisted(spark, dup_hist):
+    """Passes 8..4 and 3..3 are checkpointed for the next pass; once
+    the render checkpoint exists their blocks are released, and the
+    outputs still read."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    images, map_df = sparse_pyramid_rendered(
+        spark, dup_hist, DUP_Z, PngRenderer(compression=1),
+        min_resolution=0)
+    left = set(rdds().keys()) - before
+    rendered = images._jdf.queryExecution().analyzed().child()
+    assert left == {rendered.rdd().id()}
+    assert images.count() > 0
+    assert {r["zoom_level"] for r in map_df.collect()} == \
+        set(range(DUP_Z + 1))
+
+
 def test_zoom_bound(spark, hist):
     # owners pack z into 5 bits above x and y
     with pytest.raises(ValueError):
